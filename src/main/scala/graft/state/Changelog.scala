@@ -40,9 +40,12 @@ object Changelog {
       h.writeUTF(base)
       h.flush()
     }
+    // DeflaterOutputStream.close() ends only a deflater it created itself;
+    // this one is ended below, or its native zlib state (about 256 KB)
+    // waits for the GC's Cleaner.
+    private[state] val deflater = new Deflater(Deflater.BEST_SPEED)
     private val out = new DataOutputStream(new BufferedOutputStream(
-      new DeflaterOutputStream(raw,
-        new Deflater(Deflater.BEST_SPEED)), 64 * 1024))
+      new DeflaterOutputStream(raw, deflater), 64 * 1024))
     private var count = 0L
 
     private def writeCommon(op: Int, cf: String, key: Array[Byte]): Unit = {
@@ -65,10 +68,10 @@ object Changelog {
 
     def records: Long = count
 
-    def close(): Unit = out.close()
+    def close(): Unit = try out.close() finally deflater.end()
 
     def abortAndDelete(): Unit = {
-      try out.close() catch { case _: Exception => }
+      try close() catch { case _: Exception => }
       file.delete()
     }
   }

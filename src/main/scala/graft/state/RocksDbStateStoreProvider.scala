@@ -68,7 +68,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
   @volatile private var hadoopConf: Configuration = _
   @volatile private var conf: RocksDbConf = _
   @volatile private var snapshots: SnapshotManager = _
-  @volatile private var tempRoot: File = _
+  @volatile private[state] var tempRoot: File = _
   @volatile private var ckptIdsEnabled: Boolean = false
   @volatile private var schemaProvider: Option[StateSchemaProvider] = None
 
@@ -85,6 +85,9 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     * performed for store instances (an adopted handle does not count). The
     * adoption suite asserts a steady micro-batch sequence opens once. */
   private[state] val dbOpens = new java.util.concurrent.atomic.AtomicLong(0)
+  /** Physical RocksDB closes of store instances (a detached, adopted handle
+    * does not count): `dbOpens - dbCloses` is the number of open handles. */
+  private[state] val dbCloses = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** The store most recently opened by this provider. Spark reads
     * `iterator()`/`metrics` *after* `commit()` (e.g. Complete-mode output),
@@ -193,8 +196,8 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
         else uniqueId.orElse(resolveIdByVersion(version))
       // Handle adoption: sound only when the registry proves the previous
       // store's OWN dir holds exactly the requested commit — commit()
-      // registers its (flushed-if-dirty) dir under the version it published,
-      // release() under the version it read, and abort never registers — so
+      // registers its dir under the version it published, release() under
+      // the version it read, and abort never registers — so
       // a registry entry pointing at the previous store's dir certifies its
       // open handle views exactly `version`. Under checkpoint-format v2 the
       // entry's commit ID must additionally match the resolved lineage (a
@@ -307,10 +310,10 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     * complete, downloaded and replayed. Every candidate is verified to open
     * before being accepted. */
   private def tryMaterialize(v: Long): Option[File] = {
-    // Local move needs no verify-open: this provider produced the dir itself
-    // — every dirty commit flushed before registering, and a clean (no-write)
-    // commit registers a dir already byte-identical to its version; a second
-    // open would double store-open latency on every micro-batch's hot path.
+    // Local move needs no verify-open: this provider produced the dir itself,
+    // and a registered dir is closed before it moves, so its WAL carries
+    // every write not yet flushed and the reopen replays it; a second open
+    // would double store-open latency on every micro-batch's hot path.
     val fromLocal = Option(localSnapshots.remove(v)).map(_.dir).filter(_.isDirectory).map { src =>
       val dest = freshDir()
       dest.delete()
@@ -670,7 +673,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       // swallow the manager's share — with flush-don't-stall this turns
       // over-budget pressure into small flushes instead of write stalls.
       val cap = math.max(pool.budgetBytes / 32, 1L << 20)
-      if (cap < conf.writeBufferSizeMb * 1024L * 1024L && sys.env.get("GRAFT_OLDMODE").isEmpty) {
+      if (cap < conf.writeBufferSizeMb * 1024L * 1024L) {
         o.setWriteBufferSize(cap)
         o.setArenaBlockSize(math.max(cap / 8, 64L * 1024))
       }
@@ -688,6 +691,11 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       .setCreateIfMissing(true)
       .setCreateMissingColumnFamilies(true)
       .setMaxBackgroundJobs(conf.backgroundJobs)
+      // Commit does not flush, so a dir's WAL usually holds data between
+      // batches. With fallocate each such WAL reserves 1.1 × the write
+      // buffer on disk (about 225 MB at the 200 MB default) for a few
+      // hundred bytes of log, and a fleet of stores fills the local disk.
+      .setAllowFAllocate(false)
     // Global memtable ceiling: every instance's write buffers are charged to
     // the shared pool, which flushes/stalls at the cap — the per-instance
     // buffer knobs then size ONE DB's burst, not the executor's total.
@@ -773,18 +781,6 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     private def recordRemove(cf: String, k: Array[Byte]): Unit =
       if (conf.changelogEnabled) changelog.remove(cf, k)
 
-    /** True once any RocksDB mutation (data, deadline, or meta CF) landed in
-      * THIS store's memtables. Commit skips the memtable→SST flush when the
-      * batch wrote nothing — the loaded dir already materializes this
-      * version byte-for-byte, so the flush would only churn empty-memtable
-      * JNI calls and manifest writes. Measured round 16: a streaming gate
-      * runs hundreds of store commits and many are empty (settle batches,
-      * no-data triggers, partitions that received no rows); skipping their
-      * flushes removes the dominant fixed cost of an empty commit. Every
-      * mutation path below sets this flag, including read-path strict-TTL
-      * expiry deletes (they too must reach the SSTs before the local dir is
-      * reused as this version's snapshot). */
-    private var dbDirty = false
     /** Set when the changelog cannot express a change (column family drop):
       * this commit must publish a full snapshot. */
     private var forceFullSnapshot = false
@@ -860,7 +856,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       * [[nativeRefs]]: publish the closed flag, drain in-flight readers,
       * then free — or leak deliberately if a reader never drains. */
     private[state] def ensureClosed(): Unit = synchronized {
-      if (!dbClosed && retireDb()) closeDb(opened)
+      if (!dbClosed && retireDb()) { closeDb(opened); dbCloses.incrementAndGet() }
     }
 
     /** Retire this (finished) store WITHOUT closing the RocksDB and hand the
@@ -1065,7 +1061,6 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       if (existed) {
         // a CF drop is not expressible in the changelog record stream
         forceFullSnapshot = true
-        dbDirty = true
         // forget the persisted count, or a re-created CF of the same name
         // would resurrect it as a phantom numKeys base
         db.delete(metaHandle, name.getBytes("UTF-8"))
@@ -1129,7 +1124,6 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
 
     private def touch(cf: String, keyBytes: Array[Byte]): Unit = {
       val now = beLong(clock())
-      dbDirty = true
       db.put(deadlineHandle(cf), keyBytes, now)
       recordPut(deadlineCfName(cf), keyBytes, now)
     }
@@ -1148,7 +1142,6 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
             if (conf.trackTotalNumberOfRows && db.get(handle(colFamilyName), kBytes) != null) {
               info.numKeys -= 1
             }
-            dbDirty = true
             db.delete(handle(colFamilyName), kBytes)
             recordRemove(colFamilyName, kBytes)
             db.delete(deadlineHandle(colFamilyName), kBytes)
@@ -1265,7 +1258,6 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
         info.numKeys += 1
       }
       val vBytes = info.valueCodec.encodeSingle(value)
-      dbDirty = true
       db.put(handle(colFamilyName), kBytes, vBytes)
       recordPut(colFamilyName, kBytes, vBytes)
       if (strictTtl) touch(colFamilyName, kBytes)
@@ -1282,7 +1274,6 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
         info.numKeys += 1
       }
       val vBytes = info.valueCodec.encodeFrames(values)
-      dbDirty = true
       db.put(handle(colFamilyName), kBytes, vBytes)
       recordPut(colFamilyName, kBytes, vBytes)
       if (strictTtl) touch(colFamilyName, kBytes)
@@ -1298,7 +1289,6 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       val existing = db.get(handle(colFamilyName), kBytes)
       if (conf.trackTotalNumberOfRows && existing == null) info.numKeys += 1
       val merged = info.valueCodec.appendFrame(existing, value)
-      dbDirty = true
       db.put(handle(colFamilyName), kBytes, merged)
       recordPut(colFamilyName, kBytes, merged)
       if (strictTtl) touch(colFamilyName, kBytes)
@@ -1323,7 +1313,6 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
           System.arraycopy(frames, 0, out, existing.length, frames.length)
           out
         }
-      dbDirty = true
       db.put(handle(colFamilyName), kBytes, merged)
       recordPut(colFamilyName, kBytes, merged)
       if (strictTtl) touch(colFamilyName, kBytes)
@@ -1337,7 +1326,6 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       if (conf.trackTotalNumberOfRows && db.get(handle(colFamilyName), kBytes) != null) {
         info.numKeys -= 1
       }
-      dbDirty = true
       db.delete(handle(colFamilyName), kBytes)
       recordRemove(colFamilyName, kBytes)
       // Deadline removed with the key — byte-keyed, so actually effective
@@ -1359,14 +1347,12 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
         // full snapshot and the changelog delta. Written only when the count
         // CHANGED since load (or the CF has no persisted entry yet): the
         // previous commit's equal value is already durable in snapshot and
-        // chain, and unconditionally rewriting it dirtied the memtable of
-        // every otherwise-empty batch — forcing the flush below on commits
-        // that wrote nothing.
+        // chain, and unconditionally rewriting it would add a meta record
+        // to the delta of every otherwise-empty batch.
         cfs.values.foreach { i =>
           if (!persistedCountsMap.get(i.name).contains(i.numKeys)) {
             val k = i.name.getBytes("UTF-8")
             val v = beLong(i.numKeys)
-            dbDirty = true
             db.put(metaHandle, k, v)
             recordPut(MetaCf, k, v)
             // keep the in-memory view of the persisted counts current (a
@@ -1381,7 +1367,6 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
             cfKeySchemaJson.get(i.name).foreach { json =>
               val sk = (KeySchemaMetaPrefix + i.name).getBytes("UTF-8")
               val sv = json.getBytes("UTF-8")
-              dbDirty = true
               db.put(metaHandle, sk, sv)
               recordPut(MetaCf, sk, sv)
             }
@@ -1396,25 +1381,21 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
             if (!persistedCfRegs.get(i.name).contains(json)) {
               val rk = (CfRegMetaPrefix + i.name).getBytes("UTF-8")
               val rv = json.getBytes("UTF-8")
-              dbDirty = true
               db.put(metaHandle, rk, rv)
               recordPut(MetaCf, rk, rv)
               persistedCfRegs.put(i.name, json)
             }
           }
         }
-        // Memtable→SST flush only when this batch actually wrote: the local
-        // dir must materialize every committed byte before it is registered
-        // (and possibly move-reused) as this version's local snapshot, but a
-        // write-free commit's dir is already byte-identical to the loaded
-        // version, and flushing 8+ empty column families per store per batch
-        // was the dominant fixed cost of streaming gates' empty batches.
-        if (dbDirty) {
-          val flushOptions = new FlushOptions().setWaitForFlush(true)
-          try db.flush(flushOptions, opened.handles.values.toSeq.asJava)
-          finally flushOptions.close()
-        }
-
+        // Commit publishes only the delta; it does not flush memtables.
+        // The delta is what makes the batch durable. Memtables flush on
+        // their own when full, and Checkpoint.createCheckpoint flushes
+        // before every full snapshot. The RocksDB WAL (never disabled here)
+        // keeps the local dir self-contained: a closed dir that is moved
+        // and reopened replays it. Between batches each column family's
+        // memtables hold at most writeBufferSizeMb × writeBufferNumber, or
+        // share the totalMemoryMb pool. On `file:` checkpoints the delta
+        // bypasses Hadoop's forking `create` (see SnapshotManager.uploadDelta).
         if (conf.changelogEnabled) {
           val w = changelog // materialize even if the batch wrote nothing
           w.close()
@@ -1497,18 +1478,26 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       }
     }
 
-    override def release(): Unit = synchronized {
-      if (state == State.Updating) {
-        verify(readOnly, "release() is only valid on a read store; use commit()/abort()")
-        state = State.Released
-        // A read store never wrote: its dir still holds exactly `version`,
-        // so park it for zero-copy reuse by the next load. The DB stays
-        // OPEN, mirroring commit(): the provider closes it when the next
-        // version loads — or adopts the handle outright when the next load
-        // is this same version (before round 17 release closed here, which
-        // forced a physical reopen on every read-then-write batch).
-        if (version > 0) registerLocalSnapshot(version, dir, loadedCkptId)
-        else { ensureClosed(); deleteRecursively(dir) }
+    // Provider lock first, as loadStore takes it before a store's lock: a
+    // concurrent load must not displace this store between the ownership
+    // check and the registration below.
+    override def release(): Unit = RocksDbStateStoreProvider.this.synchronized {
+      synchronized {
+        if (state == State.Updating) {
+          verify(readOnly, "release() is only valid on a read store; use commit()/abort()")
+          state = State.Released
+          // A read store never wrote: its dir still holds exactly `version`,
+          // so park it for zero-copy reuse by the next load. While this is
+          // the provider's last open store the DB stays OPEN, mirroring
+          // commit(): the next load closes it, or adopts the handle outright
+          // when it loads this same version. A store that a later load
+          // displaced from that slot has no owner left to close it, and its
+          // registered dir may be moved and reopened, so it closes here.
+          if (version > 0) {
+            if (!lastOpenStore.exists(_ eq this)) ensureClosed()
+            registerLocalSnapshot(version, dir, loadedCkptId)
+          } else { ensureClosed(); deleteRecursively(dir) }
+        }
       }
     }
 

@@ -1,13 +1,13 @@
 package graft.state
 
-import java.io.{File, FileInputStream, FileOutputStream}
-import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
+import java.io.{BufferedOutputStream, DataOutputStream, File, FileInputStream, FileOutputStream}
+import java.util.zip.{CRC32, ZipEntry, ZipInputStream, ZipOutputStream}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.spark.internal.Logging
 
-import scala.util.Try
+import scala.util.{Try, Using}
 
 /** Durable snapshot I/O for one state store instance (operator × partition ×
   * store name).
@@ -69,7 +69,12 @@ final class SnapshotManager(baseDir: Path, hadoopConf: Configuration) extends Lo
   val bytesUploaded = new java.util.concurrent.atomic.AtomicLong()
   val bytesDeduped = new java.util.concurrent.atomic.AtomicLong()
 
-  def ensureBaseDir(): Unit = fs.mkdirs(baseDir)
+  /** On `file:` the directory is made with java.nio: Hadoop's `mkdirs`
+    * forks a `chmod` process per directory when libhadoop is absent. */
+  def ensureBaseDir(): Unit = fs match {
+    case lfs: LocalFileSystem => java.nio.file.Files.createDirectories(lfs.pathToFile(baseDir).toPath)
+    case _ => fs.mkdirs(baseDir)
+  }
 
   /** Checkpoint-format v2 (state store checkpoint IDs) suffixes every
     * durable file with the commit's unique ID — `state.snapshot.<v>_<id>` —
@@ -117,6 +122,59 @@ final class SnapshotManager(baseDir: Path, hadoopConf: Configuration) extends Lo
     bytesUploaded.addAndGet(local.length())
     val target = deltaFile(version, ckptId)
     val tmp = new Path(baseDir, s".state.delta.$version.${System.nanoTime()}.tmp")
+    fs match {
+      case lfs: LocalFileSystem => publishLocal(lfs, local, tmp, target)
+      case _ => publishViaHadoop(local, tmp, target)
+    }
+  }
+
+  /** Hadoop's `create` on a `file:` checkpoint forks a `chmod` process for
+    * the file and one for its `.crc` when libhadoop is absent — two process
+    * spawns per store per commit. This writes both files with java.nio
+    * instead, the `.crc` in ChecksumFileSystem's own format (magic,
+    * bytes-per-sum, one CRC32 per chunk), so `fs.open` still verifies the
+    * delta. The `.crc` is published first: a delta visible under its final
+    * name carries its own checksum. */
+  private def publishLocal(lfs: LocalFileSystem, local: File, tmp: Path, target: Path): Unit = {
+    val bytesPerSum = lfs.getBytesPerSum
+    val tmpFile = lfs.pathToFile(tmp)
+    val tmpCrc = new File(tmpFile.getParentFile, tmpFile.getName + ".crc.tmp")
+    try {
+      Using.resources(
+        new FileInputStream(local),
+        new FileOutputStream(tmpFile),
+        new DataOutputStream(new BufferedOutputStream(new FileOutputStream(tmpCrc)))
+      ) { (in, out, sums) =>
+        sums.write(SnapshotManager.ChecksumMagic)
+        sums.writeInt(bytesPerSum)
+        val crc = new CRC32()
+        val buf = new Array[Byte](bytesPerSum * 128)
+        var n = in.readNBytes(buf, 0, buf.length)
+        while (n > 0) {
+          out.write(buf, 0, n)
+          var off = 0
+          while (off < n) {
+            val len = math.min(bytesPerSum, n - off)
+            crc.reset()
+            crc.update(buf, off, len)
+            sums.writeInt(crc.getValue.toInt)
+            off += len
+          }
+          n = in.readNBytes(buf, 0, buf.length)
+        }
+      }
+      val move = java.nio.file.StandardCopyOption.ATOMIC_MOVE
+      java.nio.file.Files.move(tmpCrc.toPath, lfs.pathToFile(lfs.getChecksumFile(target)).toPath, move)
+      java.nio.file.Files.move(tmpFile.toPath, lfs.pathToFile(target).toPath, move)
+    } catch {
+      case e: java.io.IOException =>
+        tmpFile.delete()
+        tmpCrc.delete()
+        throw new java.io.IOException(s"Failed to publish delta $target", e)
+    }
+  }
+
+  private def publishViaHadoop(local: File, tmp: Path, target: Path): Unit = {
     val out = fs.create(tmp, true)
     try {
       val in = new FileInputStream(local)
@@ -405,4 +463,7 @@ object SnapshotManager {
     * The name cannot collide with RocksDB files (they never contain '/'
     * prefixes or this literal). */
   val SstRefsEntry = "__graft_sst_refs__"
+
+  /** Header of a ChecksumFileSystem `.crc` side file. */
+  private val ChecksumMagic: Array[Byte] = Array('c', 'r', 'c', 0).map(_.toByte)
 }

@@ -121,6 +121,36 @@ class HandleAdoptionSuite extends AnyFunSuite {
     } finally provider.close()
   }
 
+  test("a read store displaced by a later load closes its handle on release") {
+    val ckpt = newCheckpointDir()
+    val provider = newProvider(ckpt)
+    def openHandles: Long = provider.dbOpens.get() - provider.dbCloses.get()
+    try {
+      val s0 = provider.getStore(0, None)
+      put(s0, "a", 1)
+      s0.commit()
+      val s1 = provider.getStore(1, None)
+      put(s1, "b", 2)
+      s1.commit()
+      val read1 = provider.getReadStore(1, None)
+      assert(readAll(read1) === Map("a" -> 1))
+      // loading another version while read1 is still in use displaces it
+      // from the provider's last-open slot
+      val s2 = provider.getStore(2, None)
+      assert(openHandles === 2)
+      read1.release()
+      assert(openHandles === 1, "only s2 is live; the released read store must be closed")
+      put(s2, "c", 3)
+      s2.commit()
+      // read1's registered dir moves and reopens without a second live handle
+      val again = provider.getStore(1, None)
+      assert(readAll(again) === Map("a" -> 1))
+      again.abort()
+      assert(openHandles === 0)
+    } finally provider.close()
+    assert(provider.dbOpens.get() === provider.dbCloses.get())
+  }
+
   test("clean (write-free) commits chain through adoption") {
     val ckpt = newCheckpointDir()
     val provider = newProvider(ckpt)
@@ -131,7 +161,7 @@ class HandleAdoptionSuite extends AnyFunSuite {
       (1 until 4).foreach { v =>
         val s = provider.getStore(v, None)
         assert(get(s, "a") === Some(1))
-        assert(s.commit() === v + 1) // no writes: dbDirty stays false
+        assert(s.commit() === v + 1) // no writes: the delta is empty
       }
       assert(provider.dbOpens.get() === 1)
       assert(getData(ckpt, 4) === Map("a" -> 1))

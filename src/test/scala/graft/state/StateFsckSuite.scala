@@ -291,6 +291,14 @@ class StateFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
     w.put("default", Array[Byte](1, 2), Array[Byte](3, 4, 5))
     w.put("default", Array[Byte](6), Array[Byte](7))
     w.close()
+    // close and abort both free the writer's native zlib state (an ended
+    // Deflater rejects every further call)
+    intercept[NullPointerException](w.deflater.getTotalIn)
+    val aborted = new Changelog.Writer(Files.createTempFile("graft-fsck-chlog-", ".delta").toFile)
+    aborted.put("default", Array[Byte](1), Array[Byte](2))
+    aborted.abortAndDelete()
+    intercept[NullPointerException](aborted.deflater.getTotalIn)
+    assert(!aborted.file.exists())
     // clean read: two records, iterator ends quietly
     assert(Changelog.readFile(f).size === 2)
     // truncate mid-record: the DEFLATE stream still inflates a prefix, and
