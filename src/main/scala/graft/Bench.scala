@@ -188,10 +188,8 @@ object Bench {
     // slices — a biased sample (PERF r16 computed its geomean over 5 queries
     // from one touched family). Family-level steady sums give an unbiased
     // aggregate per operator family without blowing the summary-line budget.
-    val familyOf: String => String = n =>
-      if (n.startsWith("stream_")) "stream"
-      else if (n.headOption.contains('q') && n.length > 1 && n(1).isDigit) "relational"
-      else n.takeWhile(_ != '_')
+    // A query's family is the registry that contributed it.
+    val familyOf = SparkEntry.familyOf
     val familySteady = results.collect { case (k, ts, _) if ts.nonEmpty => (familyOf(k), ts.min) }
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (f, xs) => "\"" + f + "\":" + xs.map(_._2).sum }

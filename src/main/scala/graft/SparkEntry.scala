@@ -15,16 +15,25 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     operators.Relational.q1_pricing_summary(spark, "/root/testdata/sf0.001")
 
+  /** Every operator registry, under the family name its queries report in
+    * `Bench`'s per-family subtotals. */
+  def registries: Seq[(String, Map[String, (SparkSession, String) => DataFrame])] = Seq(
+    "relational" -> operators.Relational.queries,
+    "text" -> operators.TextAnalysis.queries,
+    "dedup" -> operators.Dedup.queries,
+    "sim" -> operators.Similarity.queries,
+    "mm" -> operators.Multimodal.queries,
+    "pipe" -> operators.Pipeline.queries,
+    "src" -> sources.SourceFormats.queries,
+    "stream" -> streaming.StreamingQueries.queries)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.Relational.queries ++
-    operators.TextAnalysis.queries ++
-    operators.Dedup.queries ++
-    operators.Similarity.queries ++
-    operators.Multimodal.queries ++
-    operators.Pipeline.queries ++
-    sources.SourceFormats.queries ++
-    streaming.StreamingQueries.queries
+    registries.map(_._2).reduce(_ ++ _)
+
+  /** Query name -> the family of the registry that contributed it. */
+  def familyOf: Map[String, String] =
+    registries.flatMap { case (family, reg) => reg.keys.map(_ -> family) }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. */

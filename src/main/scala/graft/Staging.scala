@@ -4,10 +4,11 @@ import java.nio.file.{Files, Path}
 import java.util.Comparator
 
 /** JVM-scoped staging-directory factory. Every gate/bench staging location —
-  * staged corpus copies, stream input chunks, streaming checkpoints — is
-  * created under ONE root that a single shutdown hook deletes recursively,
-  * so repeated gate/bench JVM runs no longer accumulate full table copies
-  * in the system temp dir. Use [[Memo]] for once-per-key staging work.
+  * staged corpus copies, stream input chunks, streaming checkpoints — and
+  * every state-store provider's local working dir is created under ONE
+  * root that a single shutdown hook deletes recursively, so repeated JVM
+  * runs no longer accumulate full table copies or RocksDB dirs in the
+  * system temp dir. Use [[Memo]] for once-per-key staging work.
   */
 object Staging {
   private lazy val root: Path = {

@@ -28,11 +28,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * equivalence suite pins the kernel against the interpreted pipeline on
   * the fixture corpus and adversarial token lists.
   *
-  * Null tokens contribute nothing (the interpreted `transform` lambda maps
-  * null to null and the `aggregate` + arithmetic then propagate null; the
-  * oracle's corpus — `split()` output — contains no null tokens, and the
-  * kernel matches the non-null semantics the fixtures exercise; a null
-  * ARRAY yields null like any unary expression).
+  * A null token votes 0 on every bit, as in the fold: there its hash is
+  * null, `(h >> b) & 1 = 1` is null, and the `CASE` falls to its `ELSE -1`
+  * branch for all 60 counters. The fingerprint stays non-null; only a
+  * null ARRAY yields null, like any unary expression. (`split()` output,
+  * the only input the operators pass, holds no null tokens.)
   */
 case class SimHashBits(child: Expression) extends UnaryExpression {
 
@@ -67,15 +67,13 @@ object SimHashBits {
     val md = digests.get()
     var i = 0
     while (i < n) {
-      if (!toks.isNullAt(i)) {
-        val t = toks.getUTF8String(i)
-        md.reset()
-        val h = H60.ofDigest(md.digest(t.getBytes))
-        var b = 0
-        while (b < 60) {
-          if (((h >>> b) & 1L) == 1L) counters(b) += 1 else counters(b) -= 1
-          b += 1
-        }
+      val h =
+        if (toks.isNullAt(i)) 0L
+        else { md.reset(); H60.ofDigest(md.digest(toks.getUTF8String(i).getBytes)) }
+      var b = 0
+      while (b < 60) {
+        if (((h >>> b) & 1L) == 1L) counters(b) += 1 else counters(b) -= 1
+        b += 1
       }
       i += 1
     }

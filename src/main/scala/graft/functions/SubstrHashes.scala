@@ -70,36 +70,47 @@ object SubstrHashes {
   private val digests = ThreadLocal.withInitial[MessageDigest](() =>
     MessageDigest.getInstance("MD5"))
 
-  /** JVM entry point shared by interpreted eval and generated code.
-    *
-    * Round 17: windows are hashed straight out of ONE byte image of the
-    * string. The previous spelling called `t.substringSQL(pos, winLen)` per
-    * window, and `UTF8String.substring` walks codepoints from byte 0 on
-    * every call — O(len) per window, O(len²) per document (measured: the
-    * dominant stage of the exact-substring dedup family) — plus two byte
-    * copies per window (the substring's buffer and `getBytes`). Window
-    * `pos` covers codepoints [pos-1, pos-1+winLen); its UTF-8 bytes are the
-    * contiguous slice between those codepoints' byte offsets, so one
-    * O(len) offset scan (identity on ASCII) replaces every walk, and
-    * `md.update(bytes, start, len)` hashes the slice with zero copies.
-    * The digested bytes are EXACTLY the bytes `substringSQL(...).getBytes`
-    * produced — same md5, bit-identical h60, oracle untouched. */
+  private val NoHashes = new Array[Long](0)
+
+  /** JVM entry point shared by interpreted eval and generated code. */
   def compute(t: UTF8String, winLen: Int): ArrayData = {
+    val hs = windowHashes(t, winLen)
+    val out = new Array[Any](hs.length)
+    var i = 0
+    while (i < hs.length) {
+      out(i) = new GenericInternalRow(Array[Any](i + 1, hs(i))): InternalRow
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** The window walk every substring kernel shares ([[compute]] and
+    * [[SubstrHashBlocks]]): the h60 of window `pos` at index `pos - 1`,
+    * empty when the string is shorter than `winLen`.
+    *
+    * Windows are hashed straight out of ONE byte image of the string.
+    * Window `pos` covers codepoints [pos-1, pos-1+winLen); its UTF-8 bytes
+    * are the contiguous slice between those codepoints' byte offsets, so
+    * one O(len) offset scan (identity on ASCII) replaces a per-window
+    * `substringSQL` walk (O(len) per window, O(len²) per document), and
+    * `md.update(bytes, start, len)` hashes the slice with zero copies. The
+    * digested bytes are EXACTLY the bytes `substringSQL(...).getBytes`
+    * produces — same md5, bit-identical h60. */
+  private[functions] def windowHashes(t: UTF8String, winLen: Int): Array[Long] = {
     val n = t.numChars()
     val count = n - winLen + 1
-    if (count <= 0) return new GenericArrayData(Array.empty[Any])
+    if (count <= 0) return NoHashes
     val md = digests.get()
-    val out = new Array[Any](count)
+    val out = new Array[Long](count)
     val bytes = t.getBytes
     if (bytes.length == n) {
       // ASCII fast path: codepoint index == byte index
-      var pos = 1
-      while (pos <= count) {
+      var i = 0
+      while (i < count) {
         md.reset()
-        md.update(bytes, pos - 1, winLen)
-        out(pos - 1) = new GenericInternalRow(
-          Array[Any](pos, H60.ofDigest(md.digest()))): InternalRow
-        pos += 1
+        md.update(bytes, i, winLen)
+        out(i) = H60.ofDigest(md.digest())
+        i += 1
       }
     } else {
       // general path: byte offset of each codepoint, one linear scan
@@ -113,17 +124,16 @@ object SubstrHashes {
         i += 1
       }
       offsets(n) = bytes.length
-      var pos = 1
-      while (pos <= count) {
-        val start = offsets(pos - 1)
+      i = 0
+      while (i < count) {
+        val start = offsets(i)
         md.reset()
-        md.update(bytes, start, offsets(pos - 1 + winLen) - start)
-        out(pos - 1) = new GenericInternalRow(
-          Array[Any](pos, H60.ofDigest(md.digest()))): InternalRow
-        pos += 1
+        md.update(bytes, start, offsets(i + winLen) - start)
+        out(i) = H60.ofDigest(md.digest())
+        i += 1
       }
     }
-    new GenericArrayData(out)
+    out
   }
 
   /** `substr_hashes(s, winLen)` as a Column. */

@@ -125,12 +125,13 @@ object Dedup extends Logging {
     * span count, duplicated chars, first span start (0s when clean).
     *
     * Spark-first re-expression of the paper's single-node suffix array:
-    * windows are hashed to 60-bit integers BEFORE the shuffle (24 bytes per
-    * char instead of L+16; md5-derived, so both engines agree bit-for-bit
-    * and a collision — ~N²/2^60 — would be the same collision in the
-    * oracle), the duplicate test is one map-side-combinable count on the
-    * hash, and span merging is a per-doc window bounded by one document's
-    * own length (the [[graft.operators.Relational.q23_sessionize]]
+    * windows are hashed to 60-bit integers BEFORE the shuffle (12 bytes per
+    * char, packed per hash bucket, instead of L+16; md5-derived, so both
+    * engines agree bit-for-bit and a collision — ~N²/2^60 — would be the
+    * same collision in the oracle), the duplicate test is a sort of each
+    * bucket's hashes ([[duplicatedSpans]]), and span merging is a per-doc
+    * window bounded by one document's own length (the
+    * [[graft.operators.Relational.q23_sessionize]]
     * recurrence: stride-1 positions are sorted, so a span breaks exactly
     * when the gap to the previous window exceeds the window length).
     * Stride is 1 = exact at ≥ L; a production run at petabyte scale sets
@@ -142,29 +143,53 @@ object Dedup extends Logging {
     * (doc_id, t, len) and the merged duplicated spans
     * (doc_id, span_id, sp_start, sp_end), 1-based inclusive. */
   private def exactSubstrSpans(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"),
         regexp_replace(trim(col("text")), "\\s+", " ").as("t"))
       .withColumn("len", length(col("t")))
-    // all window hashes in one native pass per document (the codegen'd
-    // [[graft.functions.SubstrHashes]] kernel; the equivalent SQL transform
-    // lambda evaluates interpreted at ~73 µs/window — 300× the digest — and
-    // made this family the slowest batch queries), exploded as 16-byte
-    // (pos, h) structs so the Generate never copies the document text
-    val wins = docs.filter(col("len") >= SubstrLen)
+    (docs, duplicatedSpans(docs))
+  }
+
+  /** Merged duplicated spans (doc_id, span_id, sp_start, sp_end) of the
+    * normalized texts `docs(doc_id, t, len)`.
+    *
+    * Duplicate finding ships packed blocks, not window rows: the
+    * [[graft.functions.SubstrHashBlocks]] kernel hashes each document's
+    * windows once and groups them into at most B blocks
+    * `(bucket, h[], pos[])` with `bucket = h mod B`, where B is the
+    * session's shuffle-partition count. The blocks are exploded and
+    * partitioned by `bucket` itself (`repartitionById`, so bucket b is
+    * partition b), which puts every occurrence of a hash in one partition:
+    * there a partition-local count is the corpus-wide count, taken by
+    * sorting the partition's hashes as one primitive `long[]`
+    * ([[graft.functions.SubstrHashBlocks.duplicated]]). Only the
+    * `(doc_id, pos)` of windows whose hash occurs twice or more leave it:
+    * the windows `count(*) OVER (PARTITION BY h) >= 2` selects, without a
+    * Spark row per window. The finder holds its partition in memory (about
+    * 20 bytes per window) and does not spill, so it is bounded by windows ÷
+    * shuffle partitions (SCALE.md).
+    *
+    * Span merging is a per-doc window over the sorted positions: a new
+    * span starts when the gap to the previous window exceeds the window
+    * length. */
+  private[graft] def duplicatedSpans(docs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.SubstrHashBlocks
+    val s = docs.sparkSession
+    import s.implicits._
+    val buckets = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val dupWins = docs.filter(col("len") >= SubstrLen)
       .select(col("doc_id"),
-        explode(graft.functions.SubstrHashes.of(col("t"), SubstrLen)).as("w"))
-      .select(col("doc_id"), col("w.pos").as("pos"), col("w.h").as("h"))
-    // duplicate test as ONE window count over h — the aggregate+join
-    // spelling computes the whole wins pipeline twice (agg side + probe
-    // side) and shuffles three times; this is one shuffle on h and one
-    // partition-local count, and wins is evaluated exactly once
+        explode(SubstrHashBlocks.of(col("t"), SubstrLen, buckets)).as("b"))
+      .select(col("doc_id"), col("b.bucket").as("bucket"), col("b.h").as("h"),
+        col("b.pos").as("pos"))
+      .repartitionById(buckets, col("bucket"))
+      .drop("bucket")
+      .as[SubstrHashBlocks.Block]
+      .mapPartitions(SubstrHashBlocks.duplicated)
+      .toDF("doc_id", "pos")
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val spans = wins
-      .withColumn("c", count(lit(1)).over(Window.partitionBy(col("h"))))
-      .filter(col("c") >= 2)
-      .select(col("doc_id"), col("pos"))
+    dupWins
       .withColumn("new_span",
         when(lag(col("pos"), 1).over(w).isNull ||
           col("pos") > lag(col("pos"), 1).over(w) + SubstrLen, 1L).otherwise(0L))
@@ -172,7 +197,6 @@ object Dedup extends Logging {
       .groupBy(col("doc_id"), col("span_id"))
       .agg(min(col("pos")).as("sp_start"),
         (max(col("pos")) + (SubstrLen - 1)).as("sp_end"))
-    (docs, spans)
   }
 
   /** Shared oracle CTE chain ending at `spans(doc_id, span_id, sp_start,

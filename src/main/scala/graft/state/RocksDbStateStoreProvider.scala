@@ -97,6 +97,19 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     * any post-commit read. */
   @volatile private var lastOpenStore: Option[RocksDbStateStore] = None
 
+  /** Column-family registration runs for every store this provider builds
+    * (every micro-batch, handle adoption included) and would re-render and
+    * re-parse the same few schemas each time; these hold the results per
+    * provider, keyed by their inputs. */
+  private[state] val schemaJsons = scala.collection.concurrent.TrieMap.empty[StructType, String]
+  private[state] val parsedSchemas = scala.collection.concurrent.TrieMap.empty[String, StructType]
+  private[state] val cfRegJsons = scala.collection.concurrent.TrieMap
+    .empty[(StructType, StructType, KeyStateEncoderSpec, Boolean, Boolean), String]
+
+  private def schemaJson(st: StructType): String = schemaJsons.getOrElseUpdate(st, st.json)
+  private def parsedSchema(json: String): StructType =
+    parsedSchemas.getOrElseUpdate(json, DataType.fromJson(json).asInstanceOf[StructType])
+
   /** Newest known durable full snapshot, cached so the per-commit snapshot
     * cadence check costs no filesystem round trip (one listing per commit
     * per partition would be a NameNode RPC storm at cluster scale).
@@ -129,7 +142,11 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     this.schemaProvider = stateSchemaProvider
     this.conf = RocksDbConf(storeConfs, stateStoreId.checkpointRootLocation)
     this.snapshots = new SnapshotManager(stateStoreId.storeCheckpointLocation(), hadoopConf)
-    this.tempRoot = java.nio.file.Files.createTempDirectory(
+    // Under the JVM's staging root, deleted at exit: Spark unloads a
+    // provider only when maintenance finds it idle, so a JVM that ends
+    // first never calls close() (Spark's own RocksDB provider registers its
+    // local dir for deletion at shutdown for the same reason).
+    this.tempRoot = graft.Staging.tempDir(
       s"graft-state-${stateStoreId.operatorId}-${stateStoreId.partitionId}-").toFile
     snapshots.ensureBaseDir()
     newestFullSnapshot = snapshots.listVersions().maxOption.getOrElse(0L)
@@ -978,15 +995,15 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       // while a restarted query touches its default family in its first
       // batch, so the protection is equivalent. Field renames and
       // nullability flips don't change the UnsafeRow layout and are allowed.
+      val keyJson = schemaJson(cfKeySchema)
       persistedKeySchemas.get(name).foreach { storedJson =>
-        val stored = DataType.fromJson(storedJson).asInstanceOf[StructType]
-        if (!sameKeyLayout(stored, cfKeySchema)) {
+        if (!sameKeyLayout(parsedSchema(storedJson), cfKeySchema)) {
           if (!deferSchemaConflict)
-            throw StateStoreErrors.stateStoreKeySchemaNotCompatible(storedJson, cfKeySchema.json)
-          keySchemaConflicts.put(name, (storedJson, cfKeySchema.json))
+            throw StateStoreErrors.stateStoreKeySchemaNotCompatible(storedJson, keyJson)
+          keySchemaConflicts.put(name, (storedJson, keyJson))
         }
       }
-      cfKeySchemaJson.put(name, cfKeySchema.json)
+      cfKeySchemaJson.put(name, keyJson)
       // put, not getOrElseUpdate: under VALUE-schema evolution a restarted
       // query re-registers the family with the evolved value schema, and the
       // persisted record must follow — a cold reader (the `statestore`
@@ -995,8 +1012,9 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       // rows one field short (the reader then read the added field past the
       // row's end). Commit writes the record only when it differs from the
       // persisted one, so the non-evolving steady state stays write-once.
-      cfRegJson.put(name,
-        RocksDbStateStoreProvider.cfRegToJson(cfKeySchema, cfValueSchema, spec, multiValued, isInternal))
+      cfRegJson.put(name, cfRegJsons.getOrElseUpdate(
+        (cfKeySchema, cfValueSchema, spec, multiValued, isInternal),
+        RocksDbStateStoreProvider.cfRegToJson(cfKeySchema, cfValueSchema, spec, multiValued, isInternal)))
       val info = CfInfo(name, KeyCodec(spec),
         new ValueCodec(cfValueSchema.length, multiValued, evolution),
         cfValueSchema.length, multiValued, isInternal,
@@ -1574,14 +1592,17 @@ object RocksDbStateStoreProvider {
     * multi-value flag, enough for a cold reader to rebuild the codec. */
   private[state] val CfRegMetaPrefix: String = "cfreg:"
 
+  /** Shared by every registration record (an `ObjectMapper` is
+    * thread-safe once configured, and this one never is). */
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
   private[state] def cfRegToJson(
       keySchema: StructType,
       valueSchema: StructType,
       spec: KeyStateEncoderSpec,
       multiValued: Boolean,
       isInternal: Boolean): String = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val o = m.createObjectNode()
+    val o = Json.createObjectNode()
     o.put("keySchema", keySchema.json)
     o.put("valueSchema", valueSchema.json)
     spec match {
@@ -1596,13 +1617,12 @@ object RocksDbStateStoreProvider {
     }
     o.put("multiValued", multiValued)
     o.put("isInternal", isInternal)
-    m.writeValueAsString(o)
+    Json.writeValueAsString(o)
   }
 
   private[state] def cfRegFromJson(json: String)
       : (StructType, StructType, KeyStateEncoderSpec, Boolean, Boolean) = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val o = m.readTree(json)
+    val o = Json.readTree(json)
     val ks = DataType.fromJson(o.get("keySchema").asText()).asInstanceOf[StructType]
     val vs = DataType.fromJson(o.get("valueSchema").asText()).asInstanceOf[StructType]
     val spec: KeyStateEncoderSpec = o.get("spec").asText() match {

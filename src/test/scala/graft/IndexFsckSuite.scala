@@ -34,7 +34,7 @@ class IndexFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // one healthy root with every layout family, shared by the tests
-    root = Files.createTempDirectory("graft-fsck-root-").toString
+    root = graft.Staging.tempDir("graft-fsck-root-").toString
     slug = Similarity.corpusSlug(sfDir)
     val s2 = spark.newSession()
     s2.conf.set(Similarity.IndexRootConf, root)
@@ -56,7 +56,7 @@ class IndexFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Copy one layout into a fresh root (damage sandbox). */
   private def sandbox(layouts: String*): String = {
-    val r = Files.createTempDirectory("graft-fsck-dmg-").toString
+    val r = graft.Staging.tempDir("graft-fsck-dmg-").toString
     layouts.foreach { l =>
       val src = Paths.get(root, l)
       Files.walk(src).iterator().asScala.foreach { p =>
@@ -176,7 +176,7 @@ class IndexFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
     // drop the LAST subspace's rows for EVERY vector: cross-vector
     // agreement still holds, only the codebook knows the true count
     val cut = codes.filter(col("m") < mMax)
-    val tmp2 = Files.createTempDirectory("graft-fsck-cut-")
+    val tmp2 = graft.Staging.tempDir("graft-fsck-cut-")
     cut.write.parquet(s"$tmp2/codes")
     codes.unpersist()
     rmTree(p)
@@ -191,7 +191,7 @@ class IndexFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a stale string-typed signature table is flagged, never passed as clean") {
-    val r = Files.createTempDirectory("graft-fsck-stalefmt-").toString
+    val r = graft.Staging.tempDir("graft-fsck-stalefmt-").toString
     val s = spark
     import s.implicits._
     Seq((1L, Seq("a b"), Seq(1L))).toDF("doc_id", "sh", "sig")
@@ -202,7 +202,7 @@ class IndexFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a wrong-schema table costs its own report row, never the whole run") {
-    val r = Files.createTempDirectory("graft-fsck-alien-").toString
+    val r = graft.Staging.tempDir("graft-fsck-alien-").toString
     val s = spark
     import s.implicits._
     // parses as parquet, carries a foreign schema (no doc_id/sh/sig) —

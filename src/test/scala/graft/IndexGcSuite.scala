@@ -34,7 +34,7 @@ class IndexGcSuite extends AnyFunSuite with BeforeAndAfterAll {
       .appName("indexgc")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    root = Files.createTempDirectory("graft-gc-root-").toString
+    root = graft.Staging.tempDir("graft-gc-root-").toString
     val s2 = spark.newSession()
     s2.conf.set(Similarity.IndexRootConf, root)
     Dedup.pipe_dedup_incremental_lsh(s2, sfDir).collect() // one complete layout
@@ -101,7 +101,7 @@ class IndexGcSuite extends AnyFunSuite with BeforeAndAfterAll {
     // a marker-less layout at the slug publishLayout would target blocks
     // every rebuild ("remove it and retrain") — gc is the removal tool,
     // so the full cycle must work end-to-end on a FRESH root
-    val root2 = Files.createTempDirectory("graft-gc-root2-").toString
+    val root2 = graft.Staging.tempDir("graft-gc-root2-").toString
     val slug = Similarity.corpusSlug(sfDir)
     val stale = Paths.get(root2, s"lsh-sigs-$slug")
     Files.createDirectories(stale.resolve("sigs"))

@@ -31,7 +31,7 @@ class IndexRootSuite extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   test("persisted IVF×PQ index lands under the configured root; search equals staged path") {
-    val root = Files.createTempDirectory("graft-index-root-").toString
+    val root = graft.Staging.tempDir("graft-index-root-").toString
     val s2 = spark.newSession()
     s2.conf.set(Similarity.IndexRootConf, root)
     val durable = Similarity.sim_index_persist(s2, sfDir).collect()
@@ -46,7 +46,7 @@ class IndexRootSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a complete layout under the root is reused, not retrained") {
-    val root = Files.createTempDirectory("graft-index-reuse-").toString
+    val root = graft.Staging.tempDir("graft-index-reuse-").toString
     val p = s"$root/ivfpq-x"
     Similarity.ensureIvfpqLayout(spark, sfDir, p)
     val marker = Paths.get(p, "codes", "_SUCCESS")
@@ -64,7 +64,7 @@ class IndexRootSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("shard + merged layouts land under the configured root; merged search equals staged path") {
-    val root = Files.createTempDirectory("graft-merge-root-").toString
+    val root = graft.Staging.tempDir("graft-merge-root-").toString
     val s2 = spark.newSession()
     s2.conf.set(Similarity.IndexRootConf, root)
     val durable = Similarity.sim_index_merge(s2, sfDir).collect()
@@ -87,7 +87,7 @@ class IndexRootSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   test("merging shards with overlapping vec_ids refuses loudly, before any write") {
     import org.apache.spark.sql.functions.{col, pmod, lit}
-    val root = Files.createTempDirectory("graft-overlap-root-").toString
+    val root = graft.Staging.tempDir("graft-overlap-root-").toString
     val s2 = spark.newSession()
     s2.conf.set(Similarity.IndexRootConf, root)
     // the shared quantizer + two OVERLAPPING shard layouts: vec_id % 2 == 0
@@ -119,7 +119,7 @@ class IndexRootSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("corpus LSH signature table lands under the root and is reused, not re-signed") {
-    val root = Files.createTempDirectory("graft-lsh-root-").toString
+    val root = graft.Staging.tempDir("graft-lsh-root-").toString
     val s2 = spark.newSession()
     s2.conf.set(Similarity.IndexRootConf, root)
     val first = operators.Dedup.pipe_dedup_incremental_lsh(s2, sfDir).collect()
@@ -154,7 +154,7 @@ class IndexRootSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("LSH lifecycle: delta segment holds only the filed batch; takedown rows erased") {
-    val root = Files.createTempDirectory("graft-lsh-lc-root-").toString
+    val root = graft.Staging.tempDir("graft-lsh-lc-root-").toString
     val s2 = spark.newSession()
     s2.conf.set(Similarity.IndexRootConf, root)
     val filed = operators.Dedup.pipe_lsh_file_batch(s2, sfDir).collect().map(_.toSeq).toSet
@@ -193,7 +193,7 @@ class IndexRootSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("folding segments with overlapping doc_ids refuses loudly, before any write") {
-    val tmp = Files.createTempDirectory("graft-lsh-fold-ovl-")
+    val tmp = graft.Staging.tempDir("graft-lsh-fold-ovl-")
     val s = spark
     import s.implicits._
     // two synthetic segments sharing doc_id 3 — the re-filed-document case
@@ -219,7 +219,7 @@ class IndexRootSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a stale string-typed signature table refuses loudly at load") {
-    val tmp = Files.createTempDirectory("graft-lsh-stale-fmt-")
+    val tmp = graft.Staging.tempDir("graft-lsh-stale-fmt-")
     val s = spark
     import s.implicits._
     // the pre-hash-compaction format: sh as strings — unionByName would
@@ -233,7 +233,7 @@ class IndexRootSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("persisted BPE merges land under the configured root; encode equals staged path") {
-    val root = Files.createTempDirectory("graft-bpe-root-").toString
+    val root = graft.Staging.tempDir("graft-bpe-root-").toString
     val s2 = spark.newSession()
     s2.conf.set(Similarity.IndexRootConf, root)
     val durable = TextAnalysis.text_bpe_persist(s2, sfDir).collect()

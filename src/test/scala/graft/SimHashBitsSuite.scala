@@ -66,4 +66,29 @@ class SimHashBitsSuite extends AnyFunSuite with BeforeAndAfterAll {
       .count()
     assert(diff === 0L)
   }
+
+  /** A null token votes 0 on all 60 bits in the fold (its null hash sends
+    * every `CASE` to `ELSE -1`), so the fingerprint is not null. */
+  test("null tokens vote 0 on every bit, as in the fold") {
+    val s = spark; import s.implicits._
+    val cases = Seq(
+      Seq[String](null),
+      Seq("a", null),
+      Seq(null, "a", "a"),
+      Seq(null, null, "café"),
+      Seq("a", "b", null, "c"))
+    val got = cases.toDF("toks")
+      .select(graft.functions.SimHashBits.of(col("toks")).as("a"), expr(sqlFold).as("b"))
+      .collect()
+    got.foreach { r =>
+      assert(!r.isNullAt(0) && !r.isNullAt(1))
+      assert(r.getLong(0) === r.getLong(1))
+    }
+    // one null against one token: the null's -1 on every bit cancels the
+    // token's +1 bits (0 is not > 0), so no bit survives
+    assert(got(1).getLong(0) === 0L)
+    val nullArray = Seq[Seq[String]](null).toDF("toks")
+      .select(graft.functions.SimHashBits.of(col("toks")), expr(sqlFold)).head()
+    assert(nullArray.isNullAt(0) && nullArray.isNullAt(1), "a null array yields null")
+  }
 }

@@ -45,6 +45,18 @@ class SparkEntrySuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(SparkEntry.queries.size == all.size)
   }
 
+  test("a query's bench family is the registry that contributed it") {
+    val familyOf = SparkEntry.familyOf
+    assert(familyOf.keySet === SparkEntry.queries.keySet)
+    assert(familyOf("q1_pricing_summary") === "relational")
+    assert(familyOf("dedup_exact_substr") === "dedup")
+    // the name says `pipe_`, the registry says Dedup: the registry wins
+    val pipeInDedup = operators.Dedup.queries.keySet.filter(_.startsWith("pipe_"))
+    assert(pipeInDedup.nonEmpty)
+    pipeInDedup.foreach(n => assert(familyOf(n) === "dedup", n))
+    streaming.StreamingQueries.queries.keySet.foreach(n => assert(familyOf(n) === "stream", n))
+  }
+
   test("every oracle references a registered query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracles without queries: $orphans")

@@ -40,12 +40,12 @@ class StreamingSinkSuite extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Int]
-    val outDir = Files.createTempDirectory("graft-sink-out-").toString
+    val outDir = graft.Staging.tempDir("graft-sink-out-").toString
     val q = input.toDS().toDF("v")
       .writeStream.format("parquet")
       .option("path", outDir)
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-sink-ckpt-").toString)
+        graft.Staging.tempDir("graft-sink-ckpt-").toString)
       .outputMode(OutputMode.Append())
       .start()
     try {
@@ -76,7 +76,7 @@ class StreamingSinkSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   test("foreachBatch pattern: replaying a batch id does not duplicate output") {
     import spark.implicits._
-    val outDir = Files.createTempDirectory("graft-feb-idem-").toString
+    val outDir = graft.Staging.tempDir("graft-feb-idem-").toString
     def writeBatch(rows: Seq[(Long, Long)], batchId: Long): Unit =
       rows.toDF("user_id", "n")
         .withColumn("batch_id", lit(batchId))

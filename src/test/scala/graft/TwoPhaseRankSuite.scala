@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import graft.operators.{Pipeline, Similarity}
 import org.apache.spark.sql.SparkSession
@@ -54,7 +53,7 @@ class TwoPhaseRankSuite extends AnyFunSuite with BeforeAndAfterAll
   test("pipe_domain_cap survives a Zipf-dominant domain with ties") {
     // one domain holds 90% of the docs and most lengths collide, so both the
     // shard phase and the doc_id tiebreak do real work
-    val tmp = Files.createTempDirectory("graft-zipf-").toString
+    val tmp = graft.Staging.tempDir("graft-zipf-").toString
     val s2 = spark
     import s2.implicits._
     val rows = (0L until 2000L).map { id =>
@@ -120,7 +119,7 @@ class TwoPhaseRankSuite extends AnyFunSuite with BeforeAndAfterAll
     // tie-dense skewed synthetic: 90% of docs in one language and only ~35
     // distinct (uniq, n_tokens) combos, so score buckets hold many rows and
     // both the in-bucket cumsum and the cross-bucket offsets do real work
-    val tmp = Files.createTempDirectory("graft-budget-").toString
+    val tmp = graft.Staging.tempDir("graft-budget-").toString
     val s2 = spark
     import s2.implicits._
     val rows = (0L until 3000L).map { id =>

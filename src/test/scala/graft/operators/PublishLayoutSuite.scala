@@ -24,7 +24,7 @@ class PublishLayoutSuite extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft-publish-").toString
+    graft.Staging.tempDir("graft-publish-").toString
 
   test("clean publish: layout lands at dest with the marker") {
     val p = freshRoot() + "/layout"
@@ -52,7 +52,7 @@ class PublishLayoutSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("pre-created EMPTY dest (staging dir) is replaced, not nested into") {
-    val p = Files.createTempDirectory("graft-publish-staging-").toString
+    val p = graft.Staging.tempDir("graft-publish-staging-").toString
     Similarity.publishLayout(spark, p, "t/_SUCCESS") { tmp =>
       Files.createDirectories(Paths.get(tmp, "t"))
       Files.write(Paths.get(tmp, "t", "_SUCCESS"), Array.emptyByteArray)

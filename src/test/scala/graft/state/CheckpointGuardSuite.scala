@@ -1,6 +1,5 @@
 package graft.state
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -32,7 +31,7 @@ class CheckpointGuardSuite extends AnyFunSuite with BeforeAndAfterAll {
   test("tools refuse a checkpoint a running query holds; stop + lowered window proceeds") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val ckpt = Files.createTempDirectory("graft-guard-ckpt-").toString
+    val ckpt = graft.Staging.tempDir("graft-guard-ckpt-").toString
     val input = MemoryStream[(String, Int)]
     val q = input.toDS().toDF("k", "v")
       .groupBy(col("k")).agg(count(lit(1)).as("n"))
@@ -43,7 +42,7 @@ class CheckpointGuardSuite extends AnyFunSuite with BeforeAndAfterAll {
     try {
       input.addData(("a", 1), ("b", 2))
       q.processAllAvailable() // batch committed seconds ago -> checkpoint is live
-      val newCkpt = Files.createTempDirectory("graft-guard-new-").toString
+      val newCkpt = graft.Staging.tempDir("graft-guard-new-").toString
       // default window (60 s): every write-mode tool refuses, typed
       intercept[CheckpointActiveException] {
         StateRepartition.run(spark, ckpt, s"$newCkpt/r", 4)
@@ -62,7 +61,7 @@ class CheckpointGuardSuite extends AnyFunSuite with BeforeAndAfterAll {
     // passes force) and the same tool call proceeds into real work
     val s2 = spark.newSession()
     s2.conf.set(CheckpointGuard.QuiesceConf, "1")
-    val out = Files.createTempDirectory("graft-guard-out-").toString
+    val out = graft.Staging.tempDir("graft-guard-out-").toString
     val summary = StateCompact.run(s2, ckpt, s"$out/compacted").collect()
     assert(summary.nonEmpty, "post-stop compaction must actually run")
   }
@@ -70,7 +69,7 @@ class CheckpointGuardSuite extends AnyFunSuite with BeforeAndAfterAll {
   test("force waives the guard even inside the window") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val ckpt = Files.createTempDirectory("graft-guard-force-").toString
+    val ckpt = graft.Staging.tempDir("graft-guard-force-").toString
     val input = MemoryStream[(String, Int)]
     val q = input.toDS().toDF("k", "v")
       .groupBy(col("k")).agg(count(lit(1)).as("n"))
@@ -83,7 +82,7 @@ class CheckpointGuardSuite extends AnyFunSuite with BeforeAndAfterAll {
       q.processAllAvailable()
     } finally q.stop()
     // mtimes are seconds old -> guard would fire; force overrides
-    val out = Files.createTempDirectory("graft-guard-force-out-").toString
+    val out = graft.Staging.tempDir("graft-guard-force-out-").toString
     val summary = StateCompact.run(spark, ckpt, s"$out/compacted", force = true).collect()
     assert(summary.nonEmpty)
   }

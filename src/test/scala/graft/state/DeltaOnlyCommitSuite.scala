@@ -109,7 +109,7 @@ class DeltaOnlyCommitSuite extends AnyFunSuite {
   }
 
   test("a delta on a file: checkpoint carries a Hadoop-verified .crc") {
-    val base = new Path(Files.createTempDirectory("graft-delta-crc-").toUri)
+    val base = new Path(graft.Staging.tempDir("graft-delta-crc-").toUri)
     val hadoopConf = new Configuration()
     val fs = base.getFileSystem(hadoopConf).asInstanceOf[LocalFileSystem]
     val baseDir = fs.pathToFile(base)

@@ -1,6 +1,5 @@
 package graft.state
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -268,7 +267,7 @@ class FineGrainedReplaySuite extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[String]
-    val ckptDir = Files.createTempDirectory("graft-fgr-ckpt-").toString
+    val ckptDir = graft.Staging.tempDir("graft-fgr-ckpt-").toString
     val q = input.toDF().toDF("k")
       .groupBy($"k").agg(count(lit(1)).as("n"))
       .writeStream.format("memory").queryName("fgr_sink")
@@ -295,7 +294,7 @@ class FineGrainedReplaySuite extends AnyFunSuite with BeforeAndAfterAll {
     // way an operator would: StateCompact squashes the chain into a full
     // snapshot per store at the last committed version (3 = batchId 2).
     // Snapshot+delta replay is covered by the direct-provider tests above.
-    val compacted = Files.createTempDirectory("graft-fgr-compact-").toString
+    val compacted = graft.Staging.tempDir("graft-fgr-compact-").toString
     StateCompact.run(spark, ckptDir, compacted, force = true)
     // snapshot reads are per-partition, so union all shuffle partitions
     val byPartition = (0 until 2).map { pid =>
@@ -316,7 +315,7 @@ class FineGrainedReplaySuite extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = spark.sqlContext
     val left = MemoryStream[(Int, String)]
     val right = MemoryStream[(Int, String)]
-    val ckptDir = Files.createTempDirectory("graft-join-ckpt-").toString
+    val ckptDir = graft.Staging.tempDir("graft-join-ckpt-").toString
     val joined = left.toDF().toDF("k", "lv")
       .join(right.toDF().toDF("k", "rv"), "k")
     val q = joined.writeStream.format("memory").queryName("fgr_join_sink")
@@ -338,7 +337,7 @@ class FineGrainedReplaySuite extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Long)]
-    val ckptDir = Files.createTempDirectory("graft-tws-ckpt-").toString
+    val ckptDir = graft.Staging.tempDir("graft-tws-ckpt-").toString
     val q = input.toDS()
       .groupByKey(_._1)
       .transformWithState(new FgrCountProcessor,
@@ -374,7 +373,7 @@ class FineGrainedReplaySuite extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Long)]
-    val ckptDir = Files.createTempDirectory("graft-tws-list-ckpt-").toString
+    val ckptDir = graft.Staging.tempDir("graft-tws-list-ckpt-").toString
     val q = input.toDS()
       .groupByKey(_._1)
       .transformWithState(new FgrListProcessor,

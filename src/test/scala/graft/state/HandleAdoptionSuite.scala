@@ -38,6 +38,24 @@ class HandleAdoptionSuite extends AnyFunSuite {
     } finally provider.close()
   }
 
+  test("registration renders and parses each schema once per provider") {
+    val ckpt = newCheckpointDir()
+    val provider = newProvider(ckpt)
+    try {
+      (0 until 6).foreach { v =>
+        val store = provider.getStore(v, None)
+        put(store, s"k$v", v)
+        store.commit()
+      }
+      // six stores registered the default family; versions 1..5 found its
+      // persisted key schema. One entry each, not one per store.
+      assert(provider.schemaJsons.keySet === Set(keySchema))
+      assert(provider.parsedSchemas.size === 1)
+      assert(provider.cfRegJsons.size === 1)
+      assert(getData(ckpt, 6) === (0 until 6).map(v => s"k$v" -> v).toMap)
+    } finally provider.close()
+  }
+
   test("read-store load of the just-committed version adopts too") {
     val ckpt = newCheckpointDir()
     val provider = newProvider(ckpt)

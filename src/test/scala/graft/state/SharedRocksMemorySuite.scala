@@ -161,7 +161,7 @@ class SharedRocksMemorySuite extends AnyFunSuite with BeforeAndAfterAll {
         .writeStream.format("memory").queryName("shared_mem_sink")
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-sm-ckpt-").toString)
+          graft.Staging.tempDir("graft-sm-ckpt-").toString)
         .start()
       try {
         input.addData("a", "a", "b"); q.processAllAvailable()

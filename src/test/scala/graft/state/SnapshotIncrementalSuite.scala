@@ -18,11 +18,7 @@ import scala.util.Try
   */
 class SnapshotIncrementalSuite extends AnyFunSuite {
 
-  private def tmpDir(prefix: String): File = {
-    val f = Files.createTempDirectory(prefix).toFile
-    f.deleteOnExit()
-    f
-  }
+  private def tmpDir(prefix: String): File = graft.Staging.tempDir(prefix).toFile
 
   private def write(dir: File, name: String, content: String): Unit = {
     val f = new File(dir, name)

@@ -42,7 +42,7 @@ class StateFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
     val df = input.toDF().toDF("k", "v")
       .dropDuplicates("k", "v")
       .groupBy($"k").agg(org.apache.spark.sql.functions.sum($"v").as("total"))
-    val ckpt = Files.createTempDirectory("graft-fsck-ckpt-").toString
+    val ckpt = graft.Staging.tempDir("graft-fsck-ckpt-").toString
     input.addData(("a", 1), ("b", 2))
     val q1 = df.writeStream.format("memory").queryName("fsck_h1")
       .outputMode(OutputMode.Complete()).option("checkpointLocation", ckpt).start()
@@ -65,7 +65,7 @@ class StateFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
     * one SST in the pool) + changelog v2 — full control over which durable
     * file each test damages. */
   private def synthCheckpoint(): (String, Path, SnapshotManager) = {
-    val ckpt = Files.createTempDirectory("graft-fsck-synth-").toString
+    val ckpt = graft.Staging.tempDir("graft-fsck-synth-").toString
     Files.createDirectories(Paths.get(ckpt, "commits"))
     Files.write(Paths.get(ckpt, "commits", "0"), "v1\n{}".getBytes("UTF-8"))
     Files.write(Paths.get(ckpt, "commits", "1"), "v1\n{}".getBytes("UTF-8"))
@@ -73,12 +73,13 @@ class StateFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
     val mgr = new SnapshotManager(storeDir, new Configuration())
     mgr.ensureBaseDir()
     // local "RocksDB dir": one immutable SST + a mutable manifest file
-    val local = Files.createTempDirectory("graft-fsck-db-").toFile
+    val local = graft.Staging.tempDir("graft-fsck-db-").toFile
     Files.write(local.toPath.resolve("000007.sst"), ("sst-bytes-" * 100).getBytes("UTF-8"))
     Files.write(local.toPath.resolve("MANIFEST-000001"), "manifest".getBytes("UTF-8"))
     mgr.upload(local, 1, incremental = true)
     // changelog for version 2 (v1 format: headerless)
-    val deltaLocal = Files.createTempFile("graft-fsck-delta-", ".tmp").toFile
+    val deltaLocal = Files.createTempFile(
+      graft.Staging.tempDir("graft-fsck-tmp-"), "graft-fsck-delta-", ".tmp").toFile
     val w = new Changelog.Writer(deltaLocal)
     w.put("default", Array[Byte](1, 2, 3), Array[Byte](4, 5))
     w.put("default", Array[Byte](9), Array[Byte](8, 7, 6))
@@ -101,13 +102,13 @@ class StateFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   test("fan-out: >64 stores run as one task per store (no 64-slice cap)") {
     // 70 minimal stores: one full snapshot each, no pool, no deltas
-    val ckpt = Files.createTempDirectory("graft-fsck-fanout-").toString
+    val ckpt = graft.Staging.tempDir("graft-fsck-fanout-").toString
     Files.createDirectories(Paths.get(ckpt, "commits"))
     Files.write(Paths.get(ckpt, "commits", "0"), "v1\n{}".getBytes("UTF-8"))
     (0 until 70).foreach { p =>
       val mgr = new SnapshotManager(new Path(s"$ckpt/state/0/$p"), new Configuration())
       mgr.ensureBaseDir()
-      val local = Files.createTempDirectory("graft-fsck-fanout-db-").toFile
+      val local = graft.Staging.tempDir("graft-fsck-fanout-db-").toFile
       Files.write(local.toPath.resolve("MANIFEST-000001"), s"m$p".getBytes("UTF-8"))
       mgr.upload(local, 1, incremental = false)
     }
@@ -209,18 +210,19 @@ class StateFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
     * recovery walk follows each delta's lineage header, not version
     * arithmetic. */
   private def synthV2Checkpoint(): (String, Path, SnapshotManager) = {
-    val ckpt = Files.createTempDirectory("graft-fsck-v2-").toString
+    val ckpt = graft.Staging.tempDir("graft-fsck-v2-").toString
     Files.createDirectories(Paths.get(ckpt, "commits"))
     Files.write(Paths.get(ckpt, "commits", "0"), "v1\n{}".getBytes("UTF-8"))
     Files.write(Paths.get(ckpt, "commits", "1"), "v1\n{}".getBytes("UTF-8"))
     val storeDir = new Path(s"$ckpt/state/0/0")
     val mgr = new SnapshotManager(storeDir, new Configuration())
     mgr.ensureBaseDir()
-    val local = Files.createTempDirectory("graft-fsck-v2db-").toFile
+    val local = graft.Staging.tempDir("graft-fsck-v2db-").toFile
     Files.write(local.toPath.resolve("000009.sst"), ("v2-sst-" * 64).getBytes("UTF-8"))
     Files.write(local.toPath.resolve("CURRENT"), "MANIFEST-000001".getBytes("UTF-8"))
     mgr.upload(local, 1, Some("aaa111"), incremental = true)
-    val deltaLocal = Files.createTempFile("graft-fsck-v2delta-", ".tmp").toFile
+    val deltaLocal = Files.createTempFile(
+      graft.Staging.tempDir("graft-fsck-tmp-"), "graft-fsck-v2delta-", ".tmp").toFile
     val w = new Changelog.Writer(deltaLocal, lineage = Some("aaa111"))
     w.put("default", Array[Byte](1), Array[Byte](2))
     w.close()
@@ -247,7 +249,7 @@ class StateFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
     val df = input.toDF().toDF("k", "v")
       .dropDuplicates("k", "v")
       .groupBy($"k").agg(org.apache.spark.sql.functions.sum($"v").as("total"))
-    val oldCkpt = Files.createTempDirectory("graft-compact-ckpt-").toString
+    val oldCkpt = graft.Staging.tempDir("graft-compact-ckpt-").toString
     def runBatch(name: String, ckpt: String): Unit = {
       val q = df.writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Complete()).option("checkpointLocation", ckpt).start()
@@ -264,7 +266,7 @@ class StateFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(before.exists(_.getAs[Int]("chainLength") > 0),
       "fixture must actually have a delta chain to squash")
 
-    val newCkpt = Files.createTempDirectory("graft-compact-out-").toString + "/moved"
+    val newCkpt = graft.Staging.tempDir("graft-compact-out-").toString + "/moved"
     val summary = StateCompact.run(spark, oldCkpt, newCkpt).collect()
     assert(summary.nonEmpty)
     assert(summary.forall(_.getAs[Long]("version") === 2L))
@@ -286,7 +288,8 @@ class StateFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Changelog.read: EOF mid-record is loud, EOF at a boundary is clean") {
-    val f = Files.createTempFile("graft-fsck-chlog-", ".delta").toFile
+    val f = Files.createTempFile(
+      graft.Staging.tempDir("graft-fsck-tmp-"), "graft-fsck-chlog-", ".delta").toFile
     val w = new Changelog.Writer(f)
     w.put("default", Array[Byte](1, 2), Array[Byte](3, 4, 5))
     w.put("default", Array[Byte](6), Array[Byte](7))
@@ -294,7 +297,8 @@ class StateFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
     // close and abort both free the writer's native zlib state (an ended
     // Deflater rejects every further call)
     intercept[NullPointerException](w.deflater.getTotalIn)
-    val aborted = new Changelog.Writer(Files.createTempFile("graft-fsck-chlog-", ".delta").toFile)
+    val aborted = new Changelog.Writer(Files.createTempFile(
+      graft.Staging.tempDir("graft-fsck-tmp-"), "graft-fsck-chlog-", ".delta").toFile)
     aborted.put("default", Array[Byte](1), Array[Byte](2))
     aborted.abortAndDelete()
     intercept[NullPointerException](aborted.deflater.getTotalIn)

@@ -28,13 +28,13 @@ class StateGcSuite extends AnyFunSuite with BeforeAndAfterAll {
     * one orphan planted straight into the pool. Returns (ckpt, storeDir,
     * referencedName, orphanName). */
   private def synth(): (String, Path, String, String) = {
-    val ckpt = Files.createTempDirectory("graft-gc-synth-").toString
+    val ckpt = graft.Staging.tempDir("graft-gc-synth-").toString
     Files.createDirectories(Paths.get(ckpt, "commits"))
     Files.write(Paths.get(ckpt, "commits", "0"), "v1\n{}".getBytes("UTF-8"))
     val storeDir = new Path(s"$ckpt/state/0/0")
     val mgr = new SnapshotManager(storeDir, new Configuration())
     mgr.ensureBaseDir()
-    val local = Files.createTempDirectory("graft-gc-db-").toFile
+    val local = graft.Staging.tempDir("graft-gc-db-").toFile
     Files.write(local.toPath.resolve("000007.sst"), ("sst-bytes-" * 100).getBytes("UTF-8"))
     Files.write(local.toPath.resolve("MANIFEST-000001"), "manifest".getBytes("UTF-8"))
     mgr.upload(local, 1, incremental = true)

@@ -33,7 +33,7 @@ class StateRepartitionSuite extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = { spark; () }
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  private def ckpt(): String = Files.createTempDirectory("graft-repart-ckpt-").toString
+  private def ckpt(): String = graft.Staging.tempDir("graft-repart-ckpt-").toString
 
   /** Processing-time-mode queries self-schedule batches, so stop() can
     * interrupt one mid-commit, leaving a dangling offsets entry that the

@@ -32,7 +32,7 @@ class StateRepartitionV2Suite extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = { spark; () }
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  private def ckpt(): String = Files.createTempDirectory("graft-repart-v2-").toString
+  private def ckpt(): String = graft.Staging.tempDir("graft-repart-v2-").toString
 
   private def runBatch(df: DataFrame, name: String, mode: OutputMode, ckptDir: String): Unit = {
     val q = df.writeStream.format("memory").queryName(name)

@@ -38,7 +38,7 @@ class StateSourceTwsSuite extends AnyFunSuite with BeforeAndAfterAll {
   test("cold statestore reads of tws value/list/map state and timers") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = Files.createTempDirectory("graft-tws-src-").toString
+    val ckpt = graft.Staging.tempDir("graft-tws-src-").toString
     val input = MemoryStream[(String, Int)]
     val q = input.toDS()
       .groupByKey(_._1)
@@ -119,11 +119,11 @@ class StateSourceTwsSuite extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark.newSession()
     s.conf.set("spark.sql.streaming.stateStore.encodingFormat", "avro")
     import s.implicits._
-    val inDir = Files.createTempDirectory("graft-evolve-src-in-")
-    val ckpt = Files.createTempDirectory("graft-evolve-src-ckpt-").toString
+    val inDir = graft.Staging.tempDir("graft-evolve-src-in-")
+    val ckpt = graft.Staging.tempDir("graft-evolve-src-ckpt-").toString
     var tick = System.currentTimeMillis() - 3600000L
     def stage(name: String, rows: Seq[(String, Int)]): Unit = {
-      val tmp = Files.createTempDirectory("graft-evolve-src-stage-")
+      val tmp = graft.Staging.tempDir("graft-evolve-src-stage-")
       rows.toDF("k", "v").coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val st = Files.list(tmp)
       val part =

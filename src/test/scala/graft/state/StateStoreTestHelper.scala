@@ -1,7 +1,6 @@
 package graft.state
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.InternalRow
@@ -36,11 +35,11 @@ object StateStoreTestHelper {
   def keyStr(row: UnsafeRow): String = row.getUTF8String(0).toString
   def valueInt(row: UnsafeRow): Int = row.getInt(0)
 
-  def newCheckpointDir(): String = {
-    val f = Files.createTempDirectory("graft-test-ckpt-").toFile
-    f.deleteOnExit()
-    f.getAbsolutePath
-  }
+  /** A fresh checkpoint dir under the JVM's staging root, which is deleted
+    * recursively at exit (`File.deleteOnExit` removes only empty dirs, so
+    * every used checkpoint stayed behind in the temp dir). */
+  def newCheckpointDir(): String =
+    graft.Staging.tempDir("graft-test-ckpt-").toFile.getAbsolutePath
 
   def storeConf(extra: Map[String, String] = Map.empty, minBatchesToRetain: Int = 3): StateStoreConf = {
     val sqlConf = new SQLConf()

@@ -1,6 +1,5 @@
 package graft.state
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -37,7 +36,7 @@ class StateTimeoutImplicitsSuite extends AnyFunSuite with BeforeAndAfterAll {
       import spark.implicits._
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[String]
-      val root = Files.createTempDirectory("graft-sto-ckpt-").toString
+      val root = graft.Staging.tempDir("graft-sto-ckpt-").toString
       // No queryName arg (reference code relied on reflection over an
       // earlier .queryName(...) — documented deviation): the helper appends
       // /UNNAMED_QUERY to the checkpoint root and publishes the per-query
@@ -72,7 +71,7 @@ class StateTimeoutImplicitsSuite extends AnyFunSuite with BeforeAndAfterAll {
       import spark.implicits._
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[String]
-      val root = Files.createTempDirectory("graft-sto2-ckpt-").toString
+      val root = graft.Staging.tempDir("graft-sto2-ckpt-").toString
       val q = input.toDF().toDF("k")
         .dropDuplicates("k")
         .writeStream.format("memory")

@@ -32,7 +32,7 @@ class StreamingConformanceSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  private def ckpt(): String = Files.createTempDirectory("graft-stream-ckpt-").toString
+  private def ckpt(): String = graft.Staging.tempDir("graft-stream-ckpt-").toString
 
   private def runToMemorySink(df: DataFrame, name: String, mode: OutputMode): DataFrame = {
     val q = df.writeStream
