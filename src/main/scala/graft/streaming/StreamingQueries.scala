@@ -1,14 +1,16 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
 
 import scala.jdk.CollectionConverters._
 
 import graft.Tables
 import graft.state.RocksDbStateStoreProvider
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.types.StructType
 
 /** Stateful streaming operators as driver-gated queries (SURVEY §2C).
   *
@@ -52,20 +54,22 @@ object StreamingQueries {
     * its own file-stream over it with column pruning at the stream scan). */
   private val stagedDirs = new graft.Memo[String]
 
-  /** The shared staged chunk dir (staged once per fixture dir; Memo so a
-    * racing first pair of gates cannot both run the staging write). */
-  private def eventsStagedDir(s: SparkSession, dir: String): String =
-    stagedDirs.getOrStage(dir) {
-      val t = graft.Staging.tempDir("graft-stream-in-").toString
-      Tables.events(s, dir).repartition(Chunks).write.mode("overwrite").parquet(t)
+  /** `table` staged as [[Chunks]] parquet files, once per fixture dir
+    * (`memo` so a racing first pair of gates cannot both run the staging
+    * write). */
+  private def stageChunks(memo: graft.Memo[String], dir: String, prefix: String,
+      table: => DataFrame): String =
+    memo.getOrStage(dir) {
+      val t = graft.Staging.tempDir(prefix).toString
+      table.repartition(Chunks).write.mode("overwrite").parquet(t)
       t
     }
 
-  private def events(s: SparkSession, dir: String): DataFrame = {
-    val base = Tables.events(s, dir)
-    s.readStream.schema(base.schema).option("maxFilesPerTrigger", "1")
-      .parquet(eventsStagedDir(s, dir))
-  }
+  private def eventsStagedDir(s: SparkSession, dir: String): String =
+    stageChunks(stagedDirs, dir, "graft-stream-in-", Tables.events(s, dir))
+
+  private def events(s: SparkSession, dir: String): DataFrame =
+    fileStream(s, Tables.events(s, dir).schema, eventsStagedDir(s, dir))
 
   /** CHAINED stateful operators — two event-time window aggregations in one
     * query (10-minute counts re-windowed into hourly sum/max), the
@@ -119,6 +123,40 @@ object StreamingQueries {
   private val stagedOrderedDirs = new graft.Memo[String]
   private val stagedSortedDirs = new graft.Memo[String]
 
+  /** The first mtime of a sequenced staging or replay: an hour in the past,
+    * so no file is ever future-dated. */
+  private def pastTick: Long = System.currentTimeMillis() - 3600000L
+
+  /** Stamp `files` as the next arrival unit at `tick` and return the next
+    * unit's tick, one minute later. FileStreamSource consumes files in
+    * MODIFICATION-TIME order, and write-time clocks tie or reorder on
+    * coarse-mtime filesystems (HDFS 1 s, some object stores), so every
+    * staging and replay that needs ordered arrival sets its mtimes here. */
+  private def stamp(files: Seq[Path], tick: Long): Long = {
+    files.foreach(Files.setLastModifiedTime(_, FileTime.fromMillis(tick)))
+    tick + 60000L
+  }
+
+  /** Append `chunk` as the next mtime-sequenced unit of staged dir `t`:
+    * the write's new part files (those not in `seen`) are stamped together
+    * at `tick`. Returns the next tick. */
+  private def appendSequencedChunk(
+      chunk: DataFrame, t: String,
+      seen: scala.collection.mutable.HashSet[Path], tick: Long): Long = {
+    chunk.write.mode("append").parquet(t)
+    val parts = partFiles(t).filterNot(seen)
+    seen ++= parts
+    stamp(parts, tick)
+  }
+
+  /** The `part-` files of `dir`, name-sorted (the directory stream is closed). */
+  private def partFiles(dir: String): Vector[Path] = {
+    val st = Files.list(Paths.get(dir))
+    try st.iterator().asScala.filter(_.getFileName.toString.startsWith("part-"))
+      .toVector.sortBy(_.getFileName.toString)
+    finally st.close()
+  }
+
   /** Stage events as [[Chunks]] ascending disjoint ts-range parquet files,
     * one per chunk, mtime-sequenced. Arrival order is enforced by EXPLICIT
     * mtimes (FileStreamSource consumes in mtime order): each chunk's part
@@ -130,29 +168,6 @@ object StreamingQueries {
     * (ts, event_id), making the whole staged sequence one GLOBAL total
     * order (the [[stream_limit]] oracle's premise); the range split happens
     * first either way, so no single task ever sorts the whole table. */
-  /** Append `chunk` as the next mtime-sequenced unit of staged dir `t`:
-    * FileStreamSource consumes files in MODIFICATION-TIME order, so each
-    * write's new part files get an explicit timestamp one minute after the
-    * previous unit's (write-time clocks tie or reorder on coarse-mtime
-    * filesystems — HDFS 1 s, some object stores). Shared by every staging
-    * that needs ordered arrival; returns the next tick. */
-  private def appendSequencedChunk(
-      chunk: DataFrame, t: String,
-      seen: scala.collection.mutable.HashSet[java.nio.file.Path], tick: Long): Long = {
-    chunk.write.mode("append").parquet(t)
-    val stream = java.nio.file.Files.list(java.nio.file.Paths.get(t))
-    val parts =
-      try stream.iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith("part-") && !seen(p)).toVector
-      finally stream.close()
-    parts.foreach { p =>
-      java.nio.file.Files.setLastModifiedTime(
-        p, java.nio.file.attribute.FileTime.fromMillis(tick))
-      seen += p
-    }
-    tick + 60000L
-  }
-
   private def stageEventChunks(
       s: SparkSession, dir: String, sortedWithin: Boolean): String = {
     val t = graft.Staging.tempDir(
@@ -161,8 +176,8 @@ object StreamingQueries {
     val qs = b.stat.approxQuantile("tsl",
       (1 until Chunks).map(_.toDouble / Chunks).toArray, 0.01).map(_.toLong)
     val bounds = (Long.MinValue +: qs :+ Long.MaxValue).toSeq
-    val seen = scala.collection.mutable.HashSet.empty[java.nio.file.Path]
-    var tick = System.currentTimeMillis() - 3600000L // past-dated: no future mtimes
+    val seen = scala.collection.mutable.HashSet.empty[Path]
+    var tick = pastTick
     bounds.sliding(2).foreach { case Seq(lo, hi) =>
       val chunk = b.filter(col("tsl") > lo && col("tsl") <= hi).coalesce(1)
       val shaped =
@@ -173,37 +188,31 @@ object StreamingQueries {
     t
   }
 
-  private def eventsOrdered(s: SparkSession, dir: String): DataFrame = {
-    val base = Tables.events(s, dir)
-    val tmp = stagedOrderedDirs.getOrStage(dir)(stageEventChunks(s, dir, sortedWithin = false))
-    s.readStream.schema(base.schema).option("maxFilesPerTrigger", "1").parquet(tmp)
-  }
+  private def eventsOrdered(s: SparkSession, dir: String): DataFrame =
+    fileStream(s, Tables.events(s, dir).schema,
+      stagedOrderedDirs.getOrStage(dir)(stageEventChunks(s, dir, sortedWithin = false)))
 
-  /** Run to a memory sink under our provider; returns the sink table.
-    *
-    * Per-query engine settings live on a *cloned* session (`newSession()`:
-    * shared SparkContext, isolated SQLConf and temp-view catalog), so the
-    * caller's session is never mutated by running a gate query — `build`
-    * receives the clone and must construct the stream against it.
-    *
-    * Stateful parallelism is pinned to 8 for the fixture-scale streams: the
-    * per-micro-batch cost is one state store commit (changelog upload) per
-    * shuffle partition, so running a 100k-row stream at the session's batch
-    * parallelism (32 on the driver) quadruples checkpoint I/O for no
-    * per-partition work. At production scale this knob is sized to state
-    * volume, not left at the batch default.
-    */
-  private def runToTable(
-      s0: SparkSession, build: SparkSession => DataFrame,
-      mode: OutputMode, name: String): DataFrame =
-    runStream(s0, build, mode, name)._2
+  // ------------------------------------------------------------------
+  // Gate harness: every gate takes its session, its replay feed, its
+  // batch-id sink and its run loop from here.
+  // ------------------------------------------------------------------
 
-  /** The single harness path (every gate entry goes through here): clone,
-    * configure, run to completion, and also hand back the clone and its
-    * checkpoint dir for entries that read state back after the query. */
-  private def runStream(
-      s0: SparkSession, build: SparkSession => DataFrame,
-      mode: OutputMode, name: String): (SparkSession, DataFrame, String) = {
+  /** Trigger interval of the paced gates, and how long a paced run may
+    * take before it fails. Processing-time tws and
+    * `GroupStateTimeout.ProcessingTimeTimeout` schedule batches forever,
+    * so `AvailableNow` never ends for them: they run on this trigger and
+    * stop once their done batch has committed. */
+  private val PaceMs = 25L
+  private val PollDeadlineMs = 240000L
+
+  /** The gate session. Per-query engine settings live on a *cloned*
+    * session (`newSession()`: shared SparkContext, isolated SQLConf and
+    * temp-view catalog), so the caller's session is never mutated by
+    * running a gate; the gate builds its stream against the clone. `extra`
+    * confs (avro state encoding, strict TTL, the checkpoint format
+    * version) are set after the common ones. Gates without a stateful
+    * operator get the same settings; they change none of their output. */
+  private def gateSession(s0: SparkSession, extra: (String, String)*): SparkSession = {
     val s = s0.newSession()
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       classOf[RocksDbStateStoreProvider].getName)
@@ -235,13 +244,114 @@ object StreamingQueries {
     // default stays `true` — reference-compatible exact metrics — and the
     // suite pins the exact-count behavior under that default.
     s.conf.set(graft.state.RocksDbConf.TRACK_TOTAL_ROWS, "false")
-    val sink = name + "_" + java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val ckptDir = graft.Staging.tempDir("graft-ckpt-").toString
-    val q = build(s).writeStream.format("memory").queryName(sink).outputMode(mode)
+    extra.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
+
+  private val AvroState = "spark.sql.streaming.stateStore.encodingFormat" -> "avro"
+
+  /** A memory-sink name unique to this run: a gate may run more than once
+    * in one JVM. */
+  private def sinkName(name: String): String =
+    name + "_" + java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+
+  /** A file stream over `path` that takes one file per micro-batch. */
+  private def fileStream(s: SparkSession, schema: StructType, path: String): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(path)
+
+  /** Replay `files` through a fresh input dir in two halves, calling
+    * `phase(inDir, 1)` once the first half has landed and `phase(inDir, 2)`
+    * once the second has. The restart gates stop their query at the end of
+    * phase 1, so the checkpoint sees a true stop. Each copy is stamped one
+    * mtime unit after the previous one, in feed order across both halves. */
+  private[streaming] def replayInHalves(files: Seq[Path])(phase: (String, Int) => Unit): Unit = {
+    val inDir = graft.Staging.tempDir("graft-replay-in-")
+    var tick = pastTick
+    val (first, second) = files.splitAt(files.size / 2)
+    Seq(first, second).zipWithIndex.foreach { case (half, i) =>
+      half.foreach { p =>
+        tick = stamp(Seq(Files.copy(p, inDir.resolve(p.getFileName.toString))), tick)
+      }
+      phase(inDir.toString, i + 1)
+    }
+  }
+
+  /** The idempotent batch-id sink: `batch` lands in `outDir` as the
+    * parquet partition `batch_id=key` under dynamic partition overwrite,
+    * so a batch replayed at recovery (stopped after its write but before
+    * its commit) overwrites its own partition instead of duplicating it —
+    * how foreachBatch achieves exactly-once on engines without a streaming
+    * sink. `key` is the batch id unless a gate needs more than one id
+    * space in one dir. */
+  private[streaming] def writeBatch(batch: DataFrame, key: Long, outDir: String): Unit =
+    batch.withColumn("batch_id", lit(key))
+      .write.mode("overwrite").format("parquet")
+      .partitionBy("batch_id")
+      .option("partitionOverwriteMode", "dynamic")
+      .save(outDir)
+
+  /** Run `w` on `Trigger.AvailableNow` until its input is drained. */
+  private def drain(w: DataStreamWriter[Row]): Unit =
+    w.trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+  /** Run `out` on the [[PaceMs]] trigger with every batch, empty or not,
+    * written through [[writeBatch]] into `outDir`, until `done` holds.
+    * `done` is asked, inside the batch and after its write returned, about
+    * that batch's OWN just-written partition (a batch that wrote nothing
+    * is not done), so the signal is race-free by construction and no Spark
+    * job runs per poll. The run then waits for the done batch's commit-log
+    * entry, which closes the phase exactly: a resumed query starts after
+    * it, so no batch is re-run into another phase's output dir. Fails,
+    * naming `name`, if that has not happened within `deadlineMs` (always
+    * [[PollDeadlineMs]] for the gates; tests shorten it); the query is
+    * stopped either way. Batches after the done one must be
+    * empty (no input remains); one that is not adds rows to `outDir`, and
+    * the oracle hash fails on them. */
+  private[streaming] def pacedRun(name: String, out: DataFrame, ckptDir: String, outDir: String,
+      deadlineMs: Long = PollDeadlineMs)(done: DataFrame => Boolean): Unit = {
+    val s = out.sparkSession
+    val doneBatch = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val q = out.writeStream.outputMode(OutputMode.Update())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        writeBatch(batch, batchId, outDir)
+        if (doneBatch.get < 0 &&
+            scala.util.Try(done(s.read.parquet(s"$outDir/batch_id=$batchId"))).getOrElse(false))
+          doneBatch.set(batchId)
+      }
       .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
+      .trigger(Trigger.ProcessingTime(PaceMs))
       .start()
-    q.awaitTermination()
+    try {
+      def committed: Boolean = doneBatch.get >= 0 &&
+        Files.exists(Paths.get(ckptDir, "commits", doneBatch.get.toString))
+      val deadline = System.nanoTime() + deadlineMs * 1000000L
+      while (!committed && System.nanoTime() < deadline) Thread.sleep(PaceMs)
+      require(committed, s"$name: poll deadline reached before its done batch " +
+        s"(${doneBatch.get}, -1 = none) was emitted and committed")
+    } finally q.stop()
+  }
+
+  /** `done` for [[pacedRun]]: the batch emitted a row of day-bucket `b`. */
+  private def emitsBucket(b: Int)(part: DataFrame): Boolean =
+    part.filter(col("bucket") === b).limit(1).count() == 1L
+
+  /** Run to a memory sink under our provider; returns the sink table. */
+  private def runToTable(
+      s0: SparkSession, build: SparkSession => DataFrame,
+      mode: OutputMode, name: String): DataFrame =
+    runStream(s0, build, mode, name)._2
+
+  /** The memory-sink path of most gates: clone and configure the session,
+    * drain the query built on it, and also hand back the clone and its
+    * checkpoint dir for entries that read state back after the query. */
+  private def runStream(
+      s0: SparkSession, build: SparkSession => DataFrame,
+      mode: OutputMode, name: String): (SparkSession, DataFrame, String) = {
+    val s = gateSession(s0)
+    val sink = sinkName(name)
+    val ckptDir = graft.Staging.tempDir("graft-ckpt-").toString
+    drain(build(s).writeStream.format("memory").queryName(sink).outputMode(mode)
+      .option("checkpointLocation", ckptDir))
     (s, s.table(sink), ckptDir)
   }
 
@@ -855,8 +965,8 @@ object StreamingQueries {
     val b = Tables.events(s, dir).withColumn("bucket",
       (datediff(col("ts").cast("date"), lit("1970-01-01").cast("date")) % BucketCount)
         .cast("int"))
-    val seen = scala.collection.mutable.HashSet.empty[java.nio.file.Path]
-    var tick = System.currentTimeMillis() - 3600000L // past-dated: no future mtimes
+    val seen = scala.collection.mutable.HashSet.empty[Path]
+    var tick = pastTick
     (0 until BucketCount).foreach { k =>
       val chunk = b.filter(col("bucket") === k).coalesce(1)
       require(chunk.limit(1).count() == 1L,
@@ -867,12 +977,12 @@ object StreamingQueries {
     t
   }
 
-  private def eventsBucketed(s: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.events(s, dir)
-      .withColumn("bucket", lit(0)).schema
-    val tmp = stagedBucketDirs.getOrStage(dir)(stageEventBuckets(s, dir))
-    s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(tmp)
-  }
+  /** A file stream of bucket-staged events (events plus `bucket`) over `path`. */
+  private def bucketedFrom(s: SparkSession, dir: String, path: String): DataFrame =
+    fileStream(s, Tables.events(s, dir).withColumn("bucket", lit(0)).schema, path)
+
+  private def eventsBucketed(s: SparkSession, dir: String): DataFrame =
+    bucketedFrom(s, dir, stagedBucketDirs.getOrStage(dir)(stageEventBuckets(s, dir)))
 
   /** transformWithState with NATIVE per-variable TTL (`TTLConfig`) — the
     * modern form of the reference's one novel feature (reference
@@ -901,41 +1011,22 @@ object StreamingQueries {
     * oracle states both counters directly: per-(user, bucket) counts and
     * the running per-user cumulative sum over buckets. */
   def stream_tws_ttl(s0: SparkSession, dir: String): DataFrame = {
-    // ProcessingTime-mode tws always requests another batch (the TTL/timer
-    // sweep), so AvailableNow never terminates — run on a paced trigger and
-    // poll-and-stop once the last bucket's emissions land (the same
-    // discipline the conformance suite uses for proc-time-timeout queries).
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      classOf[RocksDbStateStoreProvider].getName)
-    s.conf.set("spark.sql.shuffle.partitions", gateShufflePartitions(s))
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "1s")
-    s.conf.set(graft.state.RocksDbConf.TOTAL_MEMORY_MB, "512")
-    s.conf.set(graft.state.RocksDbConf.TRACK_TOTAL_ROWS, "false")
-    val sink = "stream_tws_ttl_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val ckptDir = graft.Staging.tempDir("graft-ckpt-").toString
+    val s = gateSession(s0)
+    val outDir = graft.Staging.tempDir("graft-twsttl-out-").toString
+    pacedRun("stream_tws_ttl", ttlBucketCounts(eventsBucketed(s, dir)),
+      graft.Staging.tempDir("graft-ckpt-").toString, outDir)(emitsBucket(BucketCount - 1))
+    s.read.parquet(outDir).drop("batch_id")
+  }
+
+  /** [[stream_tws_ttl]]'s two-variable TTL straddle over bucketed input. */
+  private def ttlBucketCounts(in: DataFrame): DataFrame = {
+    val s = in.sparkSession
     import s.implicits._
-    val typed = eventsBucketed(s, dir)
-      .select(col("user_id"), col("bucket")).as[(Long, Int)]
-    val out = typed.groupByKey(_._1)
+    in.select(col("user_id"), col("bucket")).as[(Long, Int)]
+      .groupByKey(_._1)
       .transformWithState(new TtlBucketProcessor, TimeMode.ProcessingTime(),
         OutputMode.Update())
       .toDF("user_id", "bucket", "n_batch", "n_cum")
-    val q = out.writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.ProcessingTime("25 milliseconds"))
-      .start()
-    try {
-      def lastBucketSeen: Boolean =
-        s.table(sink).filter(col("bucket") === BucketCount - 1).limit(1).count() == 1L
-      val deadline = System.nanoTime() + 240L * 1000000000L
-      while (!lastBucketSeen && System.nanoTime() < deadline) Thread.sleep(25)
-      require(lastBucketSeen,
-        "stream_tws_ttl: poll deadline reached before the final bucket was emitted")
-    } finally q.stop()
-    s.table(sink)
   }
 
   private class TtlBucketProcessor
@@ -971,14 +1062,10 @@ object StreamingQueries {
 
   /** The staged bucket files in arrival order (mtime-sequenced at
     * staging) — the replay units the restart/evolution gates feed in
-    * halves through a fresh input dir. */
-  private def stagedBucketFiles(s: SparkSession, dir: String): Vector[java.nio.file.Path] = {
+    * halves through [[replayInHalves]]. */
+  private def stagedBucketFiles(s: SparkSession, dir: String): Vector[Path] = {
     val staged = stagedBucketDirs.getOrStage(dir)(stageEventBuckets(s, dir))
-    val st = java.nio.file.Files.list(java.nio.file.Paths.get(staged))
-    val files =
-      try st.iterator().asScala.filter(_.getFileName.toString.startsWith("part-"))
-        .toVector.sortBy(p => java.nio.file.Files.getLastModifiedTime(p).toMillis)
-      finally st.close()
+    val files = partFiles(staged).sortBy(Files.getLastModifiedTime(_).toMillis)
     require(files.size == BucketCount,
       s"expected $BucketCount staged bucket files, found ${files.size}")
     files
@@ -1000,90 +1087,22 @@ object StreamingQueries {
     *    sweeps — a value outliving its persisted deadline inflates
     *    `n_batch`.
     *
-    * Restart mechanics: a fresh input dir fed in halves ([[stream_restart]]
-    * discipline, bucket files copied mtime-sequenced), and the sink is
-    * per-batch-partitioned parquet with dynamic overwrite so a batch
-    * replayed at recovery (stopped after its write but before its commit)
-    * lands idempotently ([[stream_dedup_ttl]] discipline). */
+    * Restart mechanics: the bucket files are replayed in halves
+    * ([[replayInHalves]]), each phase runs paced until it emits its last
+    * bucket ([[pacedRun]]), and every batch lands through the idempotent
+    * batch-id sink ([[writeBatch]]), so a batch replayed at recovery
+    * (stopped after its write but before its commit) overwrites its own
+    * partition. */
   def stream_tws_ttl_restart(s0: SparkSession, dir: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      classOf[RocksDbStateStoreProvider].getName)
-    s.conf.set("spark.sql.shuffle.partitions", gateShufflePartitions(s))
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "1s")
-    s.conf.set(graft.state.RocksDbConf.TOTAL_MEMORY_MB, "512")
-    s.conf.set(graft.state.RocksDbConf.TRACK_TOTAL_ROWS, "false")
-    val schema = Tables.events(s, dir).withColumn("bucket", lit(0)).schema
-    val bucketFiles = stagedBucketFiles(s, dir)
-    val inDir = graft.Staging.tempDir("graft-twsttl-restart-in-")
+    val s = gateSession(s0)
     val outDir = graft.Staging.tempDir("graft-twsttl-restart-out-").toString
     val ckptDir = graft.Staging.tempDir("graft-twsttl-restart-ckpt-").toString
-    var tick = System.currentTimeMillis() - 3600000L
-    def feed(parts: Seq[java.nio.file.Path]): Unit = parts.foreach { p =>
-      val dst = inDir.resolve(p.getFileName.toString)
-      java.nio.file.Files.copy(p, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(tick))
-      tick += 60000L
+    // phase 1 drains buckets 0-1 and is then KILLED; phase 2 is a brand-new
+    // query that resumes from the checkpoint for buckets 2-3
+    replayInHalves(stagedBucketFiles(s, dir)) { (inDir, phase) =>
+      pacedRun("stream_tws_ttl_restart", ttlBucketCounts(bucketedFrom(s, dir, inDir)),
+        ckptDir, outDir)(emitsBucket(phase * BucketCount / 2 - 1))
     }
-    import s.implicits._
-    def runUntil(bucket: Int): Unit = {
-      // Done signal set INSIDE foreachBatch, after save() returned: at that
-      // point the batch's dynamic-overwrite commit has fully landed, and the
-      // check reads only the batch's OWN just-committed partition — so the
-      // signal is race-free by construction and stop() needs no settle wait
-      // (the old harness polled the live table, whose rows become visible
-      // while sibling files may still be moving, and then had to wait two
-      // more batchId advances at 100 ms pacing to prove the writer closed
-      // out — pure dead time on every phase, measured round 16).
-      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val typed = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(inDir.toString)
-        .select(col("user_id"), col("bucket")).as[(Long, Int)]
-      val out = typed.groupByKey(_._1)
-        .transformWithState(new TtlBucketProcessor, TimeMode.ProcessingTime(),
-          OutputMode.Update())
-        .toDF("user_id", "bucket", "n_batch", "n_cum")
-      val q = out.writeStream
-        .outputMode(OutputMode.Update())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (done.get) {
-            // The phase's exactness rests on post-done batches being EMPTY
-            // (no input files remain and the TTL processor emits nothing
-            // timer-driven) — a post-done in-flight batch interrupted by
-            // stop() mid dynamic-overwrite would otherwise leave a partial
-            // batch_id partition the final read sweeps up. Assert the
-            // invariant instead of assuming it (ADVICE r16): an empty batch
-            // writes nothing, so skipping its sink write changes no output.
-            require(batch.isEmpty,
-              s"stream_tws_ttl_restart: post-done batch $batchId emitted rows")
-          } else {
-            batch.withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").format("parquet")
-              .partitionBy("batch_id")
-              .option("partitionOverwriteMode", "dynamic")
-              .save(outDir)
-            if (scala.util.Try(
-                s.read.parquet(s"$outDir/batch_id=$batchId")
-                  .filter(col("bucket") === bucket).limit(1).count() == 1L)
-                .getOrElse(false)) done.set(true)
-          }
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(Trigger.ProcessingTime("25 milliseconds"))
-        .start()
-      try {
-        val deadline = System.nanoTime() + 240L * 1000000000L
-        while (!done.get && System.nanoTime() < deadline) Thread.sleep(25)
-        require(done.get,
-          s"stream_tws_ttl_restart: poll deadline reached before bucket $bucket was emitted")
-      } finally q.stop()
-    }
-    val (firstHalf, secondHalf) = bucketFiles.splitAt(BucketCount / 2)
-    feed(firstHalf)
-    runUntil(BucketCount / 2 - 1) // drains buckets 0..1, then KILLED
-    feed(secondHalf)
-    runUntil(BucketCount - 1) // brand-new query resumes from the checkpoint
     s.read.parquet(outDir).select(col("user_id"), col("bucket"),
       col("n_batch"), col("n_cum"))
   }
@@ -1106,67 +1125,59 @@ object StreamingQueries {
     *  - the added field reads as its default (0) for pre-evolution state,
     *    so `late_mille` accumulates exactly from bucket 2 on.
     *
-    * Input feed and idempotent per-batch parquet sink follow
-    * [[stream_tws_ttl_restart]]; each phase writes its own output dir
-    * (their schemas differ — that is the point), unioned with the old
-    * generation's `late_mille` stated as 0. */
-  def stream_tws_evolve(s0: SparkSession, dir: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      classOf[RocksDbStateStoreProvider].getName)
-    s.conf.set("spark.sql.shuffle.partitions", gateShufflePartitions(s))
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "1s")
-    s.conf.set(graft.state.RocksDbConf.TOTAL_MEMORY_MB, "512")
-    s.conf.set(graft.state.RocksDbConf.TRACK_TOTAL_ROWS, "false")
-    s.conf.set("spark.sql.streaming.stateStore.encodingFormat", "avro")
-    val schema = Tables.events(s, dir).withColumn("bucket", lit(0)).schema
-    val bucketFiles = stagedBucketFiles(s, dir)
-    val inDir = graft.Staging.tempDir("graft-twsevolve-in-")
-    val out1 = graft.Staging.tempDir("graft-twsevolve-out1-").toString
-    val out2 = graft.Staging.tempDir("graft-twsevolve-out2-").toString
-    val ckptDir = graft.Staging.tempDir("graft-twsevolve-ckpt-").toString
-    var tick = System.currentTimeMillis() - 3600000L
-    def feed(parts: Seq[java.nio.file.Path]): Unit = parts.foreach { p =>
-      val dst = inDir.resolve(p.getFileName.toString)
-      java.nio.file.Files.copy(p, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(tick))
-      tick += 60000L
+    * The two-phase body is [[evolveGate]]'s. */
+  def stream_tws_evolve(s0: SparkSession, dir: String): DataFrame =
+    evolveValueGate(s0, dir, "stream_tws_evolve", TTLConfig.NONE)
+
+  /** The two-phase body shared by the evolution gates: replay buckets 0-1
+    * into phase 1's query, stop, and resume from the same checkpoint with
+    * phase 2's query over buckets 2-3 ([[replayInHalves]]). Each phase
+    * writes its own output dir through the batch-id sink (their schemas
+    * differ — that is the point); the result is their union, with phase
+    * 1's missing `late` column stated as 0. `paced` phases (processing-time
+    * processors, which self-schedule batches forever) run with
+    * [[pacedRun]] until they emit their last bucket; its wait for the done
+    * batch's commit-log entry matters here, because a phase-1 batch re-run
+    * at resume would land in the other output dir — duplicates, not an
+    * idempotent heal. `query` gets the replayed input, with `mille` =
+    * floor(value × 1000), and the phase number. */
+  private def evolveGate(s: SparkSession, dir: String, name: String, paced: Boolean,
+      cols: Seq[String], late: String)(query: (DataFrame, Int) => DataFrame): DataFrame = {
+    val ckptDir = graft.Staging.tempDir(s"graft-$name-ckpt-").toString
+    val outs = Seq(1, 2).map(p => graft.Staging.tempDir(s"graft-$name-out$p-").toString)
+    replayInHalves(stagedBucketFiles(s, dir)) { (inDir, phase) =>
+      val out = query(bucketedFrom(s, dir, inDir)
+        .withColumn("mille", expr("CAST(floor(value * 1000) AS BIGINT)")), phase)
+      val outDir = outs(phase - 1)
+      if (paced) pacedRun(name, out, ckptDir, outDir)(emitsBucket(phase * BucketCount / 2 - 1))
+      else drain(out.writeStream.outputMode(OutputMode.Update())
+        .foreachBatch((b: DataFrame, id: Long) => writeBatch(b, id, outDir))
+        .option("checkpointLocation", ckptDir))
     }
+    s.read.parquet(outs(0)).select(cols.map(col) :+ lit(0L).as(late): _*)
+      .unionByName(s.read.parquet(outs(1)).select((cols :+ late).map(col): _*))
+  }
+
+  /** [[stream_tws_evolve]] and [[stream_tws_evolve_ttl]]: a ValueState of
+    * [[EvolveS1]] evolves to [[EvolveS2]] under `ttl`; a TTL'd state needs
+    * processing-time mode, so its phases run paced. */
+  private def evolveValueGate(s0: SparkSession, dir: String, name: String,
+      ttl: TTLConfig): DataFrame = {
+    val s = gateSession(s0, AvroState)
     import s.implicits._
-    def input = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(inDir.toString)
-      .select(col("user_id"), col("bucket"),
-        expr("CAST(floor(value * 1000) AS BIGINT)").as("mille"))
-      .as[(Long, Int, Long)]
-    def run(out: DataFrame, outDir: String): Unit = {
-      val q = out.writeStream
-        .outputMode(OutputMode.Update())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").format("parquet")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .save(outDir)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val paced = ttl != TTLConfig.NONE
+    val mode = if (paced) TimeMode.ProcessingTime() else TimeMode.None()
+    evolveGate(s, dir, name, paced, Seq("user_id", "bucket", "n_cum"), "late_mille") {
+      (in, phase) =>
+        val byUser = in.select(col("user_id"), col("bucket"), col("mille"))
+          .as[(Long, Int, Long)].groupByKey(_._1)
+        if (phase == 1)
+          byUser.transformWithState(new EvolveV1Processor(ttl), mode, OutputMode.Update())
+            .toDF("user_id", "bucket", "n_cum")
+        else
+          byUser.transformWithState(new EvolveV2Processor(ttl), mode, OutputMode.Update())
+            .toDF("user_id", "bucket", "n_cum", "late_mille")
     }
-    val (firstHalf, secondHalf) = bucketFiles.splitAt(BucketCount / 2)
-    feed(firstHalf)
-    run(input.groupByKey(_._1)
-      .transformWithState(new EvolveV1Processor, TimeMode.None(), OutputMode.Update())
-      .toDF("user_id", "bucket", "n_cum"), out1)
-    feed(secondHalf)
-    run(input.groupByKey(_._1)
-      .transformWithState(new EvolveV2Processor, TimeMode.None(), OutputMode.Update())
-      .toDF("user_id", "bucket", "n_cum", "late_mille"), out2)
-    s.read.parquet(out1)
-      .select(col("user_id"), col("bucket"), col("n_cum"), lit(0L).as("late_mille"))
-      .unionByName(s.read.parquet(out2)
-        .select(col("user_id"), col("bucket"), col("n_cum"), col("late_mille")))
   }
 
   val stream_tws_evolve_sql: String =
@@ -1195,96 +1206,10 @@ object StreamingQueries {
     * across a full stop + checkpoint resume, with the oracle shared with
     * [[stream_tws_evolve]] (the TTL provably expires nothing during the
     * drain, so the emitted rows must be identical). TTL requires
-    * `TimeMode.ProcessingTime`, which self-schedules batches forever —
-    * each phase runs on a paced trigger with an in-batch done signal
-    * (foreachBatch checks its own just-committed partition for the target
-    * bucket) followed by a commit-log existence wait for the done batch,
-    * because the two phases write DIFFERENT outDirs (see the note inside
-    * runUntil below). */
-  def stream_tws_evolve_ttl(s0: SparkSession, dir: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      classOf[RocksDbStateStoreProvider].getName)
-    s.conf.set("spark.sql.shuffle.partitions", gateShufflePartitions(s))
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "1s")
-    s.conf.set(graft.state.RocksDbConf.TOTAL_MEMORY_MB, "512")
-    s.conf.set(graft.state.RocksDbConf.TRACK_TOTAL_ROWS, "false")
-    s.conf.set("spark.sql.streaming.stateStore.encodingFormat", "avro")
-    val schema = Tables.events(s, dir).withColumn("bucket", lit(0)).schema
-    val bucketFiles = stagedBucketFiles(s, dir)
-    val inDir = graft.Staging.tempDir("graft-twsevolvettl-in-")
-    val out1 = graft.Staging.tempDir("graft-twsevolvettl-out1-").toString
-    val out2 = graft.Staging.tempDir("graft-twsevolvettl-out2-").toString
-    val ckptDir = graft.Staging.tempDir("graft-twsevolvettl-ckpt-").toString
-    var tick = System.currentTimeMillis() - 3600000L
-    def feed(parts: Seq[java.nio.file.Path]): Unit = parts.foreach { p =>
-      val dst = inDir.resolve(p.getFileName.toString)
-      java.nio.file.Files.copy(p, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(tick))
-      tick += 60000L
-    }
-    import s.implicits._
-    def input = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(inDir.toString)
-      .select(col("user_id"), col("bucket"),
-        expr("CAST(floor(value * 1000) AS BIGINT)").as("mille"))
-      .as[(Long, Int, Long)]
-    def runUntil(out: DataFrame, outDir: String, bucket: Int): Unit = {
-      // Race-free done signal from inside foreachBatch over the batch's own
-      // just-committed partition (stream_tws_ttl_restart discipline). UNLIKE
-      // that gate, the two phases here write to DIFFERENT outDirs (the
-      // evolved schema adds a column), so a phase-1 batch re-run at resume
-      // would land bucket-1 rows in out2 while out1 keeps its copy —
-      // duplicates, not an idempotent heal. Therefore after the done batch
-      // the harness also waits for ITS commit-log entry (a filesystem
-      // check, not a paced-trigger settle), which closes the phase exactly.
-      val done = new java.util.concurrent.atomic.AtomicLong(-1L)
-      val q = out.writeStream
-        .outputMode(OutputMode.Update())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").format("parquet")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .save(outDir)
-          if (done.get < 0 && scala.util.Try(
-              s.read.parquet(s"$outDir/batch_id=$batchId")
-                .filter(col("bucket") === bucket).limit(1).count() == 1L)
-              .getOrElse(false)) done.set(batchId)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(Trigger.ProcessingTime("25 milliseconds"))
-        .start()
-      try {
-        val deadline = System.nanoTime() + 240L * 1000000000L
-        while (done.get < 0 && System.nanoTime() < deadline) Thread.sleep(25)
-        require(done.get >= 0,
-          s"stream_tws_evolve_ttl: poll deadline reached before bucket $bucket was emitted")
-        val commitFile = java.nio.file.Paths.get(ckptDir, "commits", done.get.toString)
-        while (!java.nio.file.Files.exists(commitFile) &&
-          System.nanoTime() < deadline) Thread.sleep(10)
-        require(java.nio.file.Files.exists(commitFile),
-          s"stream_tws_evolve_ttl: bucket $bucket emitted but batch ${done.get} " +
-            "never reached the commit log before the poll deadline")
-      } finally q.stop()
-    }
-    val (firstHalf, secondHalf) = bucketFiles.splitAt(BucketCount / 2)
-    feed(firstHalf)
-    runUntil(input.groupByKey(_._1)
-      .transformWithState(new EvolveTtlV1Processor, TimeMode.ProcessingTime(),
-        OutputMode.Update())
-      .toDF("user_id", "bucket", "n_cum"), out1, BucketCount / 2 - 1)
-    feed(secondHalf)
-    runUntil(input.groupByKey(_._1)
-      .transformWithState(new EvolveTtlV2Processor, TimeMode.ProcessingTime(),
-        OutputMode.Update())
-      .toDF("user_id", "bucket", "n_cum", "late_mille"), out2, BucketCount - 1)
-    s.read.parquet(out1)
-      .select(col("user_id"), col("bucket"), col("n_cum"), lit(0L).as("late_mille"))
-      .unionByName(s.read.parquet(out2)
-        .select(col("user_id"), col("bucket"), col("n_cum"), col("late_mille")))
-  }
+    * `TimeMode.ProcessingTime`, which self-schedules batches forever, so
+    * [[evolveGate]] runs each phase paced. */
+  def stream_tws_evolve_ttl(s0: SparkSession, dir: String): DataFrame =
+    evolveValueGate(s0, dir, "stream_tws_evolve_ttl", TTLConfig(java.time.Duration.ofHours(1)))
 
   /** The 1 h TTL expires nothing during the drain, so the emitted rows
     * must equal the un-TTL'd evolve gate's — shared oracle. */
@@ -1300,68 +1225,22 @@ object StreamingQueries {
     * oracle hash-matches only if every pre-evolution map entry decodes
     * into the evolved shape with its count intact (`n_type_cum` continues
     * mid-series per (user, type)) and the added field reads as 0
-    * (`late_mille` accumulates exactly from bucket 2 on). Harness =
-    * [[stream_tws_evolve]]'s (halved feed, one checkpoint, idempotent
-    * per-batch sinks). */
+    * (`late_mille` accumulates exactly from bucket 2 on). Two-phase body:
+    * [[evolveGate]]. */
   def stream_tws_evolve_map(s0: SparkSession, dir: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      classOf[RocksDbStateStoreProvider].getName)
-    s.conf.set("spark.sql.shuffle.partitions", gateShufflePartitions(s))
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "1s")
-    s.conf.set(graft.state.RocksDbConf.TOTAL_MEMORY_MB, "512")
-    s.conf.set(graft.state.RocksDbConf.TRACK_TOTAL_ROWS, "false")
-    s.conf.set("spark.sql.streaming.stateStore.encodingFormat", "avro")
-    val schema = Tables.events(s, dir).withColumn("bucket", lit(0)).schema
-    val bucketFiles = stagedBucketFiles(s, dir)
-    val inDir = graft.Staging.tempDir("graft-twsevolvemap-in-")
-    val out1 = graft.Staging.tempDir("graft-twsevolvemap-out1-").toString
-    val out2 = graft.Staging.tempDir("graft-twsevolvemap-out2-").toString
-    val ckptDir = graft.Staging.tempDir("graft-twsevolvemap-ckpt-").toString
-    var tick = System.currentTimeMillis() - 3600000L
-    def feed(parts: Seq[java.nio.file.Path]): Unit = parts.foreach { p =>
-      val dst = inDir.resolve(p.getFileName.toString)
-      java.nio.file.Files.copy(p, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(tick))
-      tick += 60000L
-    }
+    val s = gateSession(s0, AvroState)
     import s.implicits._
-    def input = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(inDir.toString)
-      .select(col("user_id"), col("event_type"), col("bucket"),
-        expr("CAST(floor(value * 1000) AS BIGINT)").as("mille"))
-      .as[(Long, String, Int, Long)]
-    def run(out: DataFrame, outDir: String): Unit = {
-      val q = out.writeStream
-        .outputMode(OutputMode.Update())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").format("parquet")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .save(outDir)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    evolveGate(s, dir, "stream_tws_evolve_map", paced = false,
+      Seq("user_id", "bucket", "event_type", "n_type_cum"), "late_mille") { (in, phase) =>
+      val byUser = in.select(col("user_id"), col("event_type"), col("bucket"), col("mille"))
+        .as[(Long, String, Int, Long)].groupByKey(_._1)
+      if (phase == 1)
+        byUser.transformWithState(new EvolveMapV1Processor, TimeMode.None(), OutputMode.Update())
+          .toDF("user_id", "bucket", "event_type", "n_type_cum")
+      else
+        byUser.transformWithState(new EvolveMapV2Processor, TimeMode.None(), OutputMode.Update())
+          .toDF("user_id", "bucket", "event_type", "n_type_cum", "late_mille")
     }
-    val (firstHalf, secondHalf) = bucketFiles.splitAt(BucketCount / 2)
-    feed(firstHalf)
-    run(input.groupByKey(_._1)
-      .transformWithState(new EvolveMapV1Processor, TimeMode.None(), OutputMode.Update())
-      .toDF("user_id", "bucket", "event_type", "n_type_cum"), out1)
-    feed(secondHalf)
-    run(input.groupByKey(_._1)
-      .transformWithState(new EvolveMapV2Processor, TimeMode.None(), OutputMode.Update())
-      .toDF("user_id", "bucket", "event_type", "n_type_cum", "late_mille"), out2)
-    s.read.parquet(out1)
-      .select(col("user_id"), col("bucket"), col("event_type"), col("n_type_cum"),
-        lit(0L).as("late_mille"))
-      .unionByName(s.read.parquet(out2)
-        .select(col("user_id"), col("bucket"), col("event_type"), col("n_type_cum"),
-          col("late_mille")))
   }
 
   val stream_tws_evolve_map_sql: String =
@@ -1388,66 +1267,22 @@ object StreamingQueries {
     * hash-matches only if every old element's `mille` survives (the
     * cumulative `sum_mille` is seeded by phase-1 appends) and the added
     * `w` reads as 0 on old elements while phase-2 appends carry `w = 1`
-    * (`late_items` counts exactly the post-evolution appends). */
+    * (`late_items` counts exactly the post-evolution appends). Two-phase
+    * body: [[evolveGate]]. */
   def stream_tws_evolve_list(s0: SparkSession, dir: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      classOf[RocksDbStateStoreProvider].getName)
-    s.conf.set("spark.sql.shuffle.partitions", gateShufflePartitions(s))
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "1s")
-    s.conf.set(graft.state.RocksDbConf.TOTAL_MEMORY_MB, "512")
-    s.conf.set(graft.state.RocksDbConf.TRACK_TOTAL_ROWS, "false")
-    s.conf.set("spark.sql.streaming.stateStore.encodingFormat", "avro")
-    val schema = Tables.events(s, dir).withColumn("bucket", lit(0)).schema
-    val bucketFiles = stagedBucketFiles(s, dir)
-    val inDir = graft.Staging.tempDir("graft-twsevolvelist-in-")
-    val out1 = graft.Staging.tempDir("graft-twsevolvelist-out1-").toString
-    val out2 = graft.Staging.tempDir("graft-twsevolvelist-out2-").toString
-    val ckptDir = graft.Staging.tempDir("graft-twsevolvelist-ckpt-").toString
-    var tick = System.currentTimeMillis() - 3600000L
-    def feed(parts: Seq[java.nio.file.Path]): Unit = parts.foreach { p =>
-      val dst = inDir.resolve(p.getFileName.toString)
-      java.nio.file.Files.copy(p, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(tick))
-      tick += 60000L
-    }
+    val s = gateSession(s0, AvroState)
     import s.implicits._
-    def input = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(inDir.toString)
-      .select(col("user_id"), col("bucket"),
-        expr("CAST(floor(value * 1000) AS BIGINT)").as("mille"))
-      .as[(Long, Int, Long)]
-    def run(out: DataFrame, outDir: String): Unit = {
-      val q = out.writeStream
-        .outputMode(OutputMode.Update())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").format("parquet")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .save(outDir)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    evolveGate(s, dir, "stream_tws_evolve_list", paced = false,
+      Seq("user_id", "bucket", "n_items", "sum_mille"), "late_items") { (in, phase) =>
+      val byUser = in.select(col("user_id"), col("bucket"), col("mille"))
+        .as[(Long, Int, Long)].groupByKey(_._1)
+      if (phase == 1)
+        byUser.transformWithState(new EvolveListV1Processor, TimeMode.None(), OutputMode.Update())
+          .toDF("user_id", "bucket", "n_items", "sum_mille")
+      else
+        byUser.transformWithState(new EvolveListV2Processor, TimeMode.None(), OutputMode.Update())
+          .toDF("user_id", "bucket", "n_items", "sum_mille", "late_items")
     }
-    val (firstHalf, secondHalf) = bucketFiles.splitAt(BucketCount / 2)
-    feed(firstHalf)
-    run(input.groupByKey(_._1)
-      .transformWithState(new EvolveListV1Processor, TimeMode.None(), OutputMode.Update())
-      .toDF("user_id", "bucket", "n_items", "sum_mille"), out1)
-    feed(secondHalf)
-    run(input.groupByKey(_._1)
-      .transformWithState(new EvolveListV2Processor, TimeMode.None(), OutputMode.Update())
-      .toDF("user_id", "bucket", "n_items", "sum_mille", "late_items"), out2)
-    s.read.parquet(out1)
-      .select(col("user_id"), col("bucket"), col("n_items"), col("sum_mille"),
-        lit(0L).as("late_items"))
-      .unionByName(s.read.parquet(out2)
-        .select(col("user_id"), col("bucket"), col("n_items"), col("sum_mille"),
-          col("late_items")))
   }
 
   val stream_tws_evolve_list_sql: String =
@@ -1472,38 +1307,19 @@ object StreamingQueries {
     * between buckets (per-user batch counter restarts). Each batch emits
     * one row per (user, touched type). */
   def stream_tws_ttl_map(s0: SparkSession, dir: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      classOf[RocksDbStateStoreProvider].getName)
-    s.conf.set("spark.sql.shuffle.partitions", gateShufflePartitions(s))
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "1s")
-    s.conf.set(graft.state.RocksDbConf.TOTAL_MEMORY_MB, "512")
-    s.conf.set(graft.state.RocksDbConf.TRACK_TOTAL_ROWS, "false")
-    val sink = "stream_tws_ttl_map_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val ckptDir = graft.Staging.tempDir("graft-ckpt-").toString
+    val s = gateSession(s0)
     import s.implicits._
-    val typed = eventsBucketed(s, dir)
+    val out = eventsBucketed(s, dir)
       .select(col("user_id"), col("event_type"), col("bucket"))
       .as[(Long, String, Int)]
-    val out = typed.groupByKey(_._1)
+      .groupByKey(_._1)
       .transformWithState(new TtlMapBucketProcessor, TimeMode.ProcessingTime(),
         OutputMode.Update())
       .toDF("user_id", "bucket", "event_type", "n_type_cum", "n_batch")
-    val q = out.writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.ProcessingTime("25 milliseconds"))
-      .start()
-    try {
-      def lastBucketSeen: Boolean =
-        s.table(sink).filter(col("bucket") === BucketCount - 1).limit(1).count() == 1L
-      val deadline = System.nanoTime() + 240L * 1000000000L
-      while (!lastBucketSeen && System.nanoTime() < deadline) Thread.sleep(25)
-      require(lastBucketSeen,
-        "stream_tws_ttl_map: poll deadline reached before the final bucket was emitted")
-    } finally q.stop()
-    s.table(sink)
+    val outDir = graft.Staging.tempDir("graft-twsttlmap-out-").toString
+    pacedRun("stream_tws_ttl_map", out, graft.Staging.tempDir("graft-ckpt-").toString,
+      outDir)(emitsBucket(BucketCount - 1))
+    s.read.parquet(outDir).drop("batch_id")
   }
 
   private class TtlMapBucketProcessor
@@ -1561,18 +1377,9 @@ object StreamingQueries {
     * data batch runs, "flush" when the following batch fires the timeout
     * (a key with data in consecutive buckets flushes the superseded state
     * inline, same count). Proc-time mode self-schedules batches forever, so
-    * the harness polls until every live row has its flush and stops. */
+    * the gate runs paced until every live row has its flush. */
   def stream_fmgws_timeout(s0: SparkSession, dir: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      classOf[RocksDbStateStoreProvider].getName)
-    s.conf.set("spark.sql.shuffle.partitions", gateShufflePartitions(s))
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "1s")
-    s.conf.set(graft.state.RocksDbConf.TOTAL_MEMORY_MB, "512")
-    s.conf.set(graft.state.RocksDbConf.TRACK_TOTAL_ROWS, "false")
-    val sink = "stream_fmgws_timeout_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val ckptDir = graft.Staging.tempDir("graft-ckpt-").toString
+    val s = gateSession(s0)
     import s.implicits._
     val typed = eventsBucketed(s, dir)
       .select(col("user_id"), col("bucket")).as[(Long, Int)]
@@ -1595,29 +1402,22 @@ object StreamingQueries {
           }
       }
       .toDF("user_id", "bucket", "n", "phase")
-    val q = out.writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.ProcessingTime("25 milliseconds"))
-      .start()
-    try {
-      // ONE collect per poll: separate count() jobs could straddle a batch
-      // commit (live from before, flush from after) and satisfy the check
-      // while the final bucket's flushes are still pending
-      def done: Boolean = {
-        val t = s.table(sink)
-          .groupBy(col("phase"), (col("bucket") === BucketCount - 1).as("lastB"))
-          .count().collect()
-        val live = t.filter(_.getString(0) == "live").map(_.getLong(2)).sum
-        val flush = t.filter(_.getString(0) == "flush").map(_.getLong(2)).sum
-        t.exists(r => r.getString(0) == "live" && r.getBoolean(1)) && live == flush
-      }
-      val deadline = System.nanoTime() + 240L * 1000000000L
-      while (!done && System.nanoTime() < deadline) Thread.sleep(25)
-      require(done,
-        "stream_fmgws_timeout: poll deadline reached before every timeout flushed")
-    } finally q.stop()
-    s.table(sink)
+    val outDir = graft.Staging.tempDir("graft-fmgwsto-out-").toString
+    // Done once the final bucket's live rows are out and every live row has
+    // its flush. Each batch's own partition is counted once (one collect),
+    // and the totals accumulate across batches.
+    var live, flush = 0L
+    var lastLive = false
+    pacedRun("stream_fmgws_timeout", out, graft.Staging.tempDir("graft-ckpt-").toString,
+      outDir) { part =>
+      part.groupBy(col("phase"), (col("bucket") === BucketCount - 1).as("lastB"))
+        .count().collect().foreach { r =>
+          if (r.getString(0) == "live") { live += r.getLong(2); lastLive ||= r.getBoolean(1) }
+          else flush += r.getLong(2)
+        }
+      lastLive && live == flush
+    }
+    s.read.parquet(outDir).drop("batch_id")
   }
 
   val stream_fmgws_timeout_sql: String =
@@ -1638,39 +1438,20 @@ object StreamingQueries {
     * grow monotonically), the 1 ms `eph` ValueState provably expires
     * between buckets — both polarities visible in the emitted row. */
   def stream_tws_ttl_list(s0: SparkSession, dir: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      classOf[RocksDbStateStoreProvider].getName)
-    s.conf.set("spark.sql.shuffle.partitions", gateShufflePartitions(s))
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "1s")
-    s.conf.set(graft.state.RocksDbConf.TOTAL_MEMORY_MB, "512")
-    s.conf.set(graft.state.RocksDbConf.TRACK_TOTAL_ROWS, "false")
-    val sink = "stream_tws_ttl_list_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val ckptDir = graft.Staging.tempDir("graft-ckpt-").toString
+    val s = gateSession(s0)
     import s.implicits._
-    val typed = eventsBucketed(s, dir)
+    val out = eventsBucketed(s, dir)
       .select(col("user_id"), floor(col("value") * 1000).cast("long").as("mille"),
         col("bucket"))
       .as[(Long, Long, Int)]
-    val out = typed.groupByKey(_._1)
+      .groupByKey(_._1)
       .transformWithState(new TtlListBucketProcessor, TimeMode.ProcessingTime(),
         OutputMode.Update())
       .toDF("user_id", "bucket", "n_items", "sum_mille", "n_batch")
-    val q = out.writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.ProcessingTime("25 milliseconds"))
-      .start()
-    try {
-      def lastBucketSeen: Boolean =
-        s.table(sink).filter(col("bucket") === BucketCount - 1).limit(1).count() == 1L
-      val deadline = System.nanoTime() + 240L * 1000000000L
-      while (!lastBucketSeen && System.nanoTime() < deadline) Thread.sleep(25)
-      require(lastBucketSeen,
-        "stream_tws_ttl_list: poll deadline reached before the final bucket was emitted")
-    } finally q.stop()
-    s.table(sink)
+    val outDir = graft.Staging.tempDir("graft-twsttllist-out-").toString
+    pacedRun("stream_tws_ttl_list", out, graft.Staging.tempDir("graft-ckpt-").toString,
+      outDir)(emitsBucket(BucketCount - 1))
+    s.read.parquet(outDir).drop("batch_id")
   }
 
   private class TtlListBucketProcessor
@@ -1697,7 +1478,9 @@ object StreamingQueries {
     }
   }
 
-  /** [[stream_tws_evolve]]'s two state generations: V2 adds one field.
+  /** [[stream_tws_evolve]]'s two state generations: V2 adds one field;
+    * [[stream_tws_evolve_ttl]] stores them under a 1 h `TTLConfig` (the
+    * nested-wrapper codec path).
     * NOT `private`: Spark's encoder codegen compiles generated Java that
     * constructs/reads these classes by name — on a private nested class
     * Janino fails resolution ("No applicable constructor/method found"),
@@ -1707,12 +1490,11 @@ object StreamingQueries {
   case class EvolveS1(cnt: Long)
   case class EvolveS2(cnt: Long, mille: Long)
 
-  private class EvolveV1Processor
+  private class EvolveV1Processor(ttl: TTLConfig)
     extends StatefulProcessor[Long, (Long, Int, Long), (Long, Int, Long)] {
     @transient private var st: ValueState[EvolveS1] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[EvolveS1]("agg", Encoders.product[EvolveS1],
-        TTLConfig.NONE)
+      st = getHandle.getValueState[EvolveS1]("agg", Encoders.product[EvolveS1], ttl)
     override def handleInputRows(user: Long, rows: Iterator[(Long, Int, Long)],
         timerValues: TimerValues): Iterator[(Long, Int, Long)] = {
       var bucket = -1
@@ -1724,12 +1506,11 @@ object StreamingQueries {
     }
   }
 
-  private class EvolveV2Processor
+  private class EvolveV2Processor(ttl: TTLConfig)
     extends StatefulProcessor[Long, (Long, Int, Long), (Long, Int, Long, Long)] {
     @transient private var st: ValueState[EvolveS2] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[EvolveS2]("agg", Encoders.product[EvolveS2],
-        TTLConfig.NONE)
+      st = getHandle.getValueState[EvolveS2]("agg", Encoders.product[EvolveS2], ttl)
     override def handleInputRows(user: Long, rows: Iterator[(Long, Int, Long)],
         timerValues: TimerValues): Iterator[(Long, Int, Long, Long)] = {
       var bucket = -1
@@ -1791,46 +1572,6 @@ object StreamingQueries {
         byType.updateValue(t, v)
         (user, bucket, t, v.cnt, v.mille)
       }.toVector.iterator
-    }
-  }
-
-  /** [[stream_tws_evolve_ttl]]'s two generations: [[EvolveS1]] →
-    * [[EvolveS2]] under a 1 h `TTLConfig` (the nested-wrapper codec
-    * path). */
-  private class EvolveTtlV1Processor
-    extends StatefulProcessor[Long, (Long, Int, Long), (Long, Int, Long)] {
-    @transient private var st: ValueState[EvolveS1] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[EvolveS1]("agg", Encoders.product[EvolveS1],
-        TTLConfig(java.time.Duration.ofHours(1)))
-    override def handleInputRows(user: Long, rows: Iterator[(Long, Int, Long)],
-        timerValues: TimerValues): Iterator[(Long, Int, Long)] = {
-      var bucket = -1
-      var n = 0L
-      rows.foreach { r => bucket = r._2; n += 1 }
-      val cnt = (if (st.exists()) st.get().cnt else 0L) + n
-      st.update(EvolveS1(cnt))
-      Iterator.single((user, bucket, cnt))
-    }
-  }
-
-  private class EvolveTtlV2Processor
-    extends StatefulProcessor[Long, (Long, Int, Long), (Long, Int, Long, Long)] {
-    @transient private var st: ValueState[EvolveS2] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[EvolveS2]("agg", Encoders.product[EvolveS2],
-        TTLConfig(java.time.Duration.ofHours(1)))
-    override def handleInputRows(user: Long, rows: Iterator[(Long, Int, Long)],
-        timerValues: TimerValues): Iterator[(Long, Int, Long, Long)] = {
-      var bucket = -1
-      var n = 0L
-      var add = 0L
-      rows.foreach { r => bucket = r._2; n += 1; add += r._3 }
-      // pre-evolution rows decode with the added field at its default (0)
-      val prev = if (st.exists()) st.get() else EvolveS2(0L, 0L)
-      val v = EvolveS2(prev.cnt + n, prev.mille + add)
-      st.update(v)
-      Iterator.single((user, bucket, v.cnt, v.mille))
     }
   }
 
@@ -1906,43 +1647,39 @@ object StreamingQueries {
     * EXERCISES expiry in the output: keys seen at buckets {0, 2} re-emit at
     * 2, keys seen at {0, 1, 2} do not. */
   def stream_dedup_ttl(s0: SparkSession, dir: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      classOf[RocksDbStateStoreProvider].getName)
-    s.conf.set("spark.sql.shuffle.partitions", gateShufflePartitions(s))
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "1s")
-    s.conf.set(graft.state.RocksDbConf.TOTAL_MEMORY_MB, "512")
-    s.conf.set(graft.state.RocksDbConf.TRACK_TOTAL_ROWS, "false")
-    s.conf.set(graft.state.RocksDbConf.STRICT_EXPIRE, "true")
+    val s = gateSession(s0, StrictTtl)
     val outDir = graft.Staging.tempDir("graft-dedupttl-out-").toString
-    val ckptRoot = graft.Staging.tempDir("graft-ckpt-").toString
+    dedupTtlRun(s, eventsBucketed(s, dir), "dedupttl",
+      graft.Staging.tempDir("graft-ckpt-").toString, outDir)
+    s.read.parquet(outDir)
+      .select(col("user_id"), col("event_type"), col("bucket"))
+  }
+
+  private val StrictTtl = graft.state.RocksDbConf.STRICT_EXPIRE -> "true"
+
+  /** One drain of [[stream_dedup_ttl]]'s query over `in`, with the
+    * provider's TTL clock pinned to `batch_id` hours, into `outDir` through
+    * the batch-id sink. The checkpoint is `ckptRoot/queryName`. */
+  private def dedupTtlRun(s: SparkSession, in: DataFrame, queryName: String,
+      ckptRoot: String, outDir: String): Unit = {
     val base = 1700000000000L // arbitrary fixed epoch for the pinned clock
-    graft.state.RocksDbStateStoreProvider.withTtlClock(() => base) {
+    RocksDbStateStoreProvider.withTtlClock(() => base) {
       import graft.state.implicits._
-      val q = eventsBucketed(s, dir)
-        .select(col("user_id"), col("event_type"), col("bucket"))
+      drain(in.select(col("user_id"), col("event_type"), col("bucket"))
         .dropDuplicates("user_id", "event_type")
         .writeStream
         .outputMode(OutputMode.Append())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           // pin the TTL clock for THIS batch before its stateful plan runs
-          // (the dedup operator executes inside the write below)
-          graft.state.RocksDbStateStoreProvider.clock = () => base + batchId * 3600000L
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .format("parquet")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .save(outDir)
+          // (the dedup operator executes inside the write below); batch ids
+          // CONTINUE across a restart, so recovered deadlines written under
+          // batches 0-1 face clocks 2 h/3 h later
+          RocksDbStateStoreProvider.clock = () => base + batchId * 3600000L
+          writeBatch(batch, batchId, outDir)
         }
-        .stateTimeout(s.conf, queryName = "dedupttl", expirySecs = 5400,
-          checkpointLocation = ckptRoot)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .stateTimeout(s.conf, queryName = queryName, expirySecs = 5400,
+          checkpointLocation = ckptRoot))
     }
-    s.read.parquet(outDir)
-      .select(col("user_id"), col("event_type"), col("bucket"))
   }
 
   val stream_dedup_ttl_sql: String =
@@ -1969,63 +1706,17 @@ object StreamingQueries {
     * every suppression only if surviving entries rode recovery intact
     * (over-eager expiry re-emits, lost deadlines suppress — both break the
     * hash). Oracle identical to [[stream_dedup_ttl]]'s. Restart mechanics:
-    * halved mtime-sequenced feed + idempotent per-batch dynamic-overwrite
-    * parquet ([[stream_tws_ttl_restart]] discipline). */
+    * the bucket files replayed in halves ([[replayInHalves]]) + the
+    * idempotent batch-id sink ([[stream_tws_ttl_restart]] discipline). */
   def stream_dedup_ttl_restart(s0: SparkSession, dir: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      classOf[RocksDbStateStoreProvider].getName)
-    s.conf.set("spark.sql.shuffle.partitions", gateShufflePartitions(s))
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "1s")
-    s.conf.set(graft.state.RocksDbConf.TOTAL_MEMORY_MB, "512")
-    s.conf.set(graft.state.RocksDbConf.TRACK_TOTAL_ROWS, "false")
-    s.conf.set(graft.state.RocksDbConf.STRICT_EXPIRE, "true")
-    val schema = Tables.events(s, dir).withColumn("bucket", lit(0)).schema
-    val bucketFiles = stagedBucketFiles(s, dir)
-    val inDir = graft.Staging.tempDir("graft-dedupttlrs-in-")
+    val s = gateSession(s0, StrictTtl)
     val outDir = graft.Staging.tempDir("graft-dedupttlrs-out-").toString
     val ckptRoot = graft.Staging.tempDir("graft-ckpt-").toString
-    var tick = System.currentTimeMillis() - 3600000L
-    def feed(parts: Seq[java.nio.file.Path]): Unit = parts.foreach { p =>
-      val dst = inDir.resolve(p.getFileName.toString)
-      java.nio.file.Files.copy(p, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(tick))
-      tick += 60000L
+    // phase 1 runs buckets 0-1 and the query is then STOPPED entirely; in
+    // phase 2 a new query resumes from the checkpoint for buckets 2-3
+    replayInHalves(stagedBucketFiles(s, dir)) { (inDir, _) =>
+      dedupTtlRun(s, bucketedFrom(s, dir, inDir), "dedupttlrestart", ckptRoot, outDir)
     }
-    val base = 1700000000000L // arbitrary fixed epoch for the pinned clock
-    def runPhase(): Unit =
-      graft.state.RocksDbStateStoreProvider.withTtlClock(() => base) {
-        import graft.state.implicits._
-        val q = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(inDir.toString)
-          .select(col("user_id"), col("event_type"), col("bucket"))
-          .dropDuplicates("user_id", "event_type")
-          .writeStream
-          .outputMode(OutputMode.Append())
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // pin the TTL clock for THIS batch before its stateful plan
-            // runs; batch ids CONTINUE across the restart, so recovered
-            // deadlines written under batches 0-1 face clocks 2 h/3 h later
-            graft.state.RocksDbStateStoreProvider.clock = () => base + batchId * 3600000L
-            batch.withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .format("parquet")
-              .partitionBy("batch_id")
-              .option("partitionOverwriteMode", "dynamic")
-              .save(outDir)
-          }
-          .stateTimeout(s.conf, queryName = "dedupttlrestart", expirySecs = 5400,
-            checkpointLocation = ckptRoot)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    val (firstHalf, secondHalf) = bucketFiles.splitAt(BucketCount / 2)
-    feed(firstHalf)
-    runPhase() // buckets 0-1, then the query is STOPPED entirely
-    feed(secondHalf)
-    runPhase() // a new query resumes from the checkpoint for buckets 2-3
     s.read.parquet(outDir)
       .select(col("user_id"), col("event_type"), col("bucket"))
   }
@@ -2040,12 +1731,7 @@ object StreamingQueries {
 
   private def documentsStream(s: SparkSession, dir: String): DataFrame = {
     val base = Tables.documents(s, dir)
-    val tmp = stagedDocDirs.getOrStage(dir) {
-      val t = graft.Staging.tempDir("graft-stream-docs-").toString
-      base.repartition(Chunks).write.mode("overwrite").parquet(t)
-      t
-    }
-    s.readStream.schema(base.schema).option("maxFilesPerTrigger", "1").parquet(tmp)
+    fileStream(s, base.schema, stageChunks(stagedDocDirs, dir, "graft-stream-docs-", base))
   }
 
   /** Streaming corpus-ingestion dedup — the LLM-pipeline operator the state
@@ -2424,12 +2110,7 @@ object StreamingQueries {
 
   private def embeddingsStream(s: SparkSession, dir: String): DataFrame = {
     val base = Tables.embeddings(s, dir)
-    val tmp = stagedEmbDirs.getOrStage(dir) {
-      val t = graft.Staging.tempDir("graft-stream-emb-").toString
-      base.repartition(Chunks).write.mode("overwrite").parquet(t)
-      t
-    }
-    s.readStream.schema(base.schema).option("maxFilesPerTrigger", "1").parquet(tmp)
+    fileStream(s, base.schema, stageChunks(stagedEmbDirs, dir, "graft-stream-emb-", base))
   }
 
   /** Streaming SEMANTIC dedup — embedding near-dup state maintained in the
@@ -2661,14 +2342,10 @@ object StreamingQueries {
       s0: SparkSession, dir: String,
       idxOf: (SparkSession, String) => String): DataFrame = {
     import graft.operators.Similarity
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      classOf[RocksDbStateStoreProvider].getName)
-    s.conf.set("spark.sql.shuffle.partitions", gateShufflePartitions(s))
+    val s = gateSession(s0)
     val idx = idxOf(s, dir)
     val dim = Tables.embeddingsDim(s, dir)
     val outDir = graft.Staging.tempDir("graft-annserve-out-").toString
-    val ckptDir = graft.Staging.tempDir("graft-ckpt-").toString
     // the QUANTIZER tables (centroids + codebook — broadcast-sized at any
     // corpus scale, k + PqM*PqK rows) pin in memory once per serve query
     // instead of being re-read per micro-batch; the O(N) per-vector tables
@@ -2679,26 +2356,16 @@ object StreamingQueries {
     val cells = s.read.parquet(s"$idx/cells")
     val code = s.read.parquet(s"$idx/codebook").persist()
     val codes = s.read.parquet(s"$idx/codes")
-    try {
-      val q = embeddingsStream(s, dir)
-        .filter(col("vec_id") < 50)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          Similarity.ivfpqSearchFor(batch.select(col("vec_id"), col("embedding")), dim,
-              cent, cells, code, codes)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .format("parquet")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .save(outDir)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally Seq(cent, code).foreach(_.unpersist(false))
+    try drain(embeddingsStream(s, dir)
+      .filter(col("vec_id") < 50)
+      .writeStream
+      .outputMode(OutputMode.Append())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        writeBatch(Similarity.ivfpqSearchFor(batch.select(col("vec_id"), col("embedding")),
+          dim, cent, cells, code, codes), batchId, outDir)
+      }
+      .option("checkpointLocation", graft.Staging.tempDir("graft-ckpt-").toString))
+    finally Seq(cent, code).foreach(_.unpersist(false))
     s.read.parquet(outDir).select(col("qid"), col("neighbor_id"), col("rank"))
   }
 
@@ -2741,32 +2408,19 @@ object StreamingQueries {
 
   private def indexUpdateAgainst(s0: SparkSession, dir: String, idx: String): DataFrame = {
     import graft.operators.Similarity
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      classOf[RocksDbStateStoreProvider].getName)
-    s.conf.set("spark.sql.shuffle.partitions", gateShufflePartitions(s))
+    val s = gateSession(s0)
     val dim = Tables.embeddingsDim(s, dir)
     val outDir = graft.Staging.tempDir("graft-idxupd-out-").toString
-    val ckptDir = graft.Staging.tempDir("graft-ckpt-").toString
-    val q = embeddingsStream(s, dir)
+    drain(embeddingsStream(s, dir)
       .writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s2 = batch.sparkSession
-        Similarity.ivfpqFileFor(batch.select(col("vec_id"), col("embedding")), dim,
-            s2.read.parquet(s"$idx/centroids"),
-            s2.read.parquet(s"$idx/codebook"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .format("parquet")
-          .partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .save(outDir)
+        writeBatch(Similarity.ivfpqFileFor(batch.select(col("vec_id"), col("embedding")), dim,
+          s2.read.parquet(s"$idx/centroids"), s2.read.parquet(s"$idx/codebook")),
+          batchId, outDir)
       }
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("checkpointLocation", graft.Staging.tempDir("graft-ckpt-").toString))
     s.read.parquet(outDir).select(col("vec_id"), col("cell"), col("m"), col("cid"))
   }
 
@@ -2798,31 +2452,17 @@ object StreamingQueries {
     * being compaction's amortized job. */
   def stream_index_delete(s0: SparkSession, dir: String): DataFrame = {
     import graft.operators.Similarity
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      classOf[RocksDbStateStoreProvider].getName)
-    s.conf.set("spark.sql.shuffle.partitions", gateShufflePartitions(s))
+    val s = gateSession(s0)
     val idx = Similarity.persistedIvfpqIndex(s, dir)
     val dim = Tables.embeddingsDim(s, dir)
     val tombDir = graft.Staging.tempDir("graft-idxdel-tomb-").toString
-    val ckptDir = graft.Staging.tempDir("graft-ckpt-").toString
-    val q = embeddingsStream(s, dir)
+    drain(embeddingsStream(s, dir)
       .filter(expr(Similarity.TombstonePred))
       .select(col("vec_id"))
       .writeStream
       .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .format("parquet")
-          .partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .save(tombDir)
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .foreachBatch((batch: DataFrame, batchId: Long) => writeBatch(batch, batchId, tombDir))
+      .option("checkpointLocation", graft.Staging.tempDir("graft-ckpt-").toString))
     // explicit schema: a chunking that left every tombstone in one batch
     // must not make an empty-dir read unable to infer anything
     val tombs = s.read.schema("vec_id LONG").parquet(tombDir).select(col("vec_id"))
@@ -2953,27 +2593,17 @@ object StreamingQueries {
     * rename-based directory races, consumers always see a consistent
     * prefix of batches. */
   def stream_file_sink(s0: SparkSession, dir: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      classOf[RocksDbStateStoreProvider].getName)
-    s.conf.set("spark.sql.shuffle.partitions", gateShufflePartitions(s))
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "1s")
-    s.conf.set(graft.state.RocksDbConf.TOTAL_MEMORY_MB, "512")
-    s.conf.set(graft.state.RocksDbConf.TRACK_TOTAL_ROWS, "false")
+    val s = gateSession(s0)
     val outDir = graft.Staging.tempDir("graft-filesink-out-").toString
-    val ckptDir = graft.Staging.tempDir("graft-ckpt-").toString
-    val q = eventsOrdered(s, dir)
+    drain(eventsOrdered(s, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("window.start").as("win_start"), col("event_type"), col("n_events"))
       .writeStream.format("parquet")
       .option("path", outDir)
-      .option("checkpointLocation", ckptDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("checkpointLocation", graft.Staging.tempDir("graft-ckpt-").toString)
+      .outputMode(OutputMode.Append()))
     s.read.parquet(outDir)
   }
 
@@ -2989,33 +2619,16 @@ object StreamingQueries {
     * `max_by` on batch_id) must equal the plain batch aggregate — a lost,
     * re-ordered, or double-applied batch hash-fails. */
   def stream_foreach_batch(s0: SparkSession, dir: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      classOf[RocksDbStateStoreProvider].getName)
-    s.conf.set("spark.sql.shuffle.partitions", gateShufflePartitions(s))
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "1s")
-    s.conf.set(graft.state.RocksDbConf.TOTAL_MEMORY_MB, "512")
-    s.conf.set(graft.state.RocksDbConf.TRACK_TOTAL_ROWS, "false")
+    val s = gateSession(s0)
     val outDir = graft.Staging.tempDir("graft-feb-out-").toString
-    val ckptDir = graft.Staging.tempDir("graft-ckpt-").toString
-    val q = events(s, dir)
+    drain(events(s, dir)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,2)")).as("sum_value"))
       .writeStream
       .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite") // idempotent: partition == this batch id
-          .format("parquet")
-          .partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .save(outDir)
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .foreachBatch((batch: DataFrame, batchId: Long) => writeBatch(batch, batchId, outDir))
+      .option("checkpointLocation", graft.Staging.tempDir("graft-ckpt-").toString))
     // Final image cast to DOUBLE: the per-row DECIMAL(18,2) sum is exact,
     // but a raw DECIMAL output hashes by its engine-specific precision
     // (Spark DECIMAL(28,2) vs DuckDB DECIMAL(38,2)) — the round-10 driver
@@ -3285,48 +2898,53 @@ object StreamingQueries {
     * the whole fixture, so any lost or double-counted key hash-fails.
     * (Suite-level recovery coverage lives in `StreamingConformanceSuite`;
     * this entry proves it under the driver's own gate harness.) */
-  def stream_restart(s0: SparkSession, dir: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      classOf[RocksDbStateStoreProvider].getName)
-    s.conf.set("spark.sql.shuffle.partitions", gateShufflePartitions(s))
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "1s")
-    s.conf.set(graft.state.RocksDbConf.TOTAL_MEMORY_MB, "512")
-    s.conf.set(graft.state.RocksDbConf.TRACK_TOTAL_ROWS, "false")
-    val base = Tables.events(s, dir)
-    // The shared staged dir provides the chunk files; feed them through a
-    // fresh input dir in two halves so the checkpoint sees a true stop.
-    val stagedParts = stagedEventParts(s, dir)
-    val inDir = graft.Staging.tempDir("graft-restart-in-")
-    val ckptDir = graft.Staging.tempDir("graft-restart-ckpt-").toString
-    val sink = "stream_restart_" + java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    def feed(parts: Seq[java.nio.file.Path]): Unit = parts.foreach { p =>
-      java.nio.file.Files.copy(p, inDir.resolve(p.getFileName.toString))
-    }
-    def run(sinkName: String): Unit = {
-      val q = s.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
+  def stream_restart(s0: SparkSession, dir: String): DataFrame =
+    dedupAggRestart(gateSession(s0), dir, "stream_restart", migrate = false)
+
+  val stream_restart_sql: String =
+    "SELECT event_type, count(DISTINCT user_id) AS n_users FROM events GROUP BY 1"
+
+  /** The staged chunk files of the shared events staging, name-sorted —
+    * the replay units the restart/repartition gates feed in halves. */
+  private def stagedEventParts(s: SparkSession, dir: String): Vector[Path] =
+    partFiles(eventsStagedDir(s, dir))
+
+  /** The dedup→agg restart topology — ONE implementation for
+    * [[stream_restart]], [[stream_repartition]] and [[stream_v2_repartition]]:
+    * replay half the chunks, STOP, and resume from the checkpoint over the
+    * second half ([[replayInHalves]]). With `migrate`, the resume runs at
+    * 16 partitions from the checkpoint [[migrateTo16]] made of the stopped
+    * one. */
+  private def dedupAggRestart(s: SparkSession, dir: String, name: String,
+      migrate: Boolean): DataFrame = {
+    var ckptDir = graft.Staging.tempDir(s"graft-$name-ckpt-").toString
+    var sink = ""
+    replayInHalves(stagedEventParts(s, dir)) { (inDir, phase) =>
+      if (migrate && phase == 2) ckptDir = migrateTo16(s, name, ckptDir)
+      sink = sinkName(name)
+      drain(fileStream(s, Tables.events(s, dir).schema, inDir)
         .select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_users"))
-        .writeStream.format("memory").queryName(sinkName)
+        .writeStream.format("memory").queryName(sink)
         .outputMode(OutputMode.Complete())
-        .option("checkpointLocation", ckptDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .option("checkpointLocation", ckptDir))
     }
-    val (firstHalf, secondHalf) = stagedParts.splitAt(stagedParts.size / 2)
-    feed(firstHalf)
-    run(sink + "_phase1") // processes half the chunks, then STOPS entirely
-    feed(secondHalf)
-    run(sink) // a brand-new query resumes from the checkpoint
     s.table(sink)
   }
 
-  val stream_restart_sql: String =
-    "SELECT event_type, count(DISTINCT user_id) AS n_users FROM events GROUP BY 1"
+  /** Migrate the stopped checkpoint `from` to 16 state partitions with
+    * [[graft.state.StateRepartition]] and switch the session to 16;
+    * returns the migrated checkpoint. `force` waives the quiescence guard:
+    * the gate stopped its own query moments ago, and the guard's mtime
+    * heuristic would see seconds-old batch logs. */
+  private def migrateTo16(s: SparkSession, name: String, from: String): String = {
+    val to = graft.Staging.tempDir(s"graft-$name-ckptB-").toString + "/migrated"
+    graft.state.StateRepartition.run(s, from, to, 16, force = true)
+    s.conf.set("spark.sql.shuffle.partitions", "16")
+    to
+  }
 
   /** Mid-stream OFFLINE REPARTITION, gated end-to-end: the [[stream_restart]]
     * topology (dedup → aggregation, both stateful), but between the stop and
@@ -3339,69 +2957,8 @@ object StreamingQueries {
     * fixture only if every dedup seen-key and agg buffer landed on exactly
     * the partition the new `HashPartitioning(16)` reads — one misplaced key
     * double-counts (dedup miss) or splits an aggregate (two rows per key). */
-  /** The staged chunk files of the shared events staging, name-sorted —
-    * the replay units the restart/repartition gates feed in halves (the
-    * directory stream is closed; three earlier inline copies leaked it). */
-  private def stagedEventParts(s: SparkSession, dir: String): Vector[java.nio.file.Path] = {
-    val st = java.nio.file.Files.list(java.nio.file.Paths.get(eventsStagedDir(s, dir)))
-    try st.iterator().asScala
-      .filter(_.getFileName.toString.startsWith("part-"))
-      .toVector.sortBy(_.getFileName.toString)
-    finally st.close()
-  }
-
-  /** The shared dedup→agg repartition topology ([[stream_repartition]] /
-    * [[stream_v2_repartition]] — ONE implementation, the format version is
-    * the only delta): run half the chunks at 8 partitions, STOP, migrate
-    * the checkpoint to 16 with [[graft.state.StateRepartition]], resume at
-    * 16 over the second half. */
-  private def repartitionGate(s0: SparkSession, dir: String, name: String,
-      v2: Boolean): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      classOf[RocksDbStateStoreProvider].getName)
-    s.conf.set("spark.sql.shuffle.partitions", gateShufflePartitions(s))
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "1s")
-    s.conf.set(graft.state.RocksDbConf.TOTAL_MEMORY_MB, "512")
-    s.conf.set(graft.state.RocksDbConf.TRACK_TOTAL_ROWS, "false")
-    if (v2) s.conf.set("spark.sql.streaming.stateStore.checkpointFormatVersion", "2")
-    val base = Tables.events(s, dir)
-    val stagedParts = stagedEventParts(s, dir)
-    val inDir = graft.Staging.tempDir(s"graft-$name-in-")
-    val ckptA = graft.Staging.tempDir(s"graft-$name-ckptA-").toString
-    val ckptB = graft.Staging.tempDir(s"graft-$name-ckptB-").toString + "/migrated"
-    val sink = name + "_" + java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    def feed(parts: Seq[java.nio.file.Path]): Unit = parts.foreach { p =>
-      java.nio.file.Files.copy(p, inDir.resolve(p.getFileName.toString))
-    }
-    def run(sinkName: String, ckptDir: String): Unit = {
-      val q = s.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-        .select(col("user_id"), col("event_type"))
-        .dropDuplicates("user_id", "event_type")
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_users"))
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode(OutputMode.Complete())
-        .option("checkpointLocation", ckptDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val (firstHalf, secondHalf) = stagedParts.splitAt(stagedParts.size / 2)
-    feed(firstHalf)
-    run(sink + "_phase1", ckptA) // 8 partitions, then STOP entirely
-    // this gate stopped its own query the line above — the quiescence
-    // guard's mtime heuristic would see seconds-old batch logs
-    graft.state.StateRepartition.run(s, ckptA, ckptB, 16, force = true)
-    s.conf.set("spark.sql.shuffle.partitions", "16")
-    feed(secondHalf)
-    run(sink, ckptB) // resumes at 16 from the migrated checkpoint
-    s.table(sink)
-  }
-
   def stream_repartition(s0: SparkSession, dir: String): DataFrame =
-    repartitionGate(s0, dir, "stream_repartition", v2 = false)
+    dedupAggRestart(gateSession(s0), dir, "stream_repartition", migrate = true)
 
   val stream_repartition_sql: String =
     "SELECT event_type, count(DISTINCT user_id) AS n_users FROM events GROUP BY 1"
@@ -3416,7 +2973,9 @@ object StreamingQueries {
     * wrong slot order, a mis-minted ID, or a misplaced key is a hard error
     * or a hash mismatch, never a silent fallback. */
   def stream_v2_repartition(s0: SparkSession, dir: String): DataFrame =
-    repartitionGate(s0, dir, "stream_v2_repartition", v2 = true)
+    dedupAggRestart(
+      gateSession(s0, "spark.sql.streaming.stateStore.checkpointFormatVersion" -> "2"),
+      dir, "stream_v2_repartition", migrate = true)
 
   val stream_v2_repartition_sql: String = stream_repartition_sql
 
@@ -3432,29 +2991,17 @@ object StreamingQueries {
     * reads: a misplaced value-state row resets a user's count mid-stream,
     * a misplaced map row forks a (user, type) counter in two. */
   def stream_tws_repartition(s0: SparkSession, dir: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      classOf[RocksDbStateStoreProvider].getName)
-    s.conf.set("spark.sql.shuffle.partitions", gateShufflePartitions(s))
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "1s")
-    s.conf.set(graft.state.RocksDbConf.TOTAL_MEMORY_MB, "512")
-    s.conf.set(graft.state.RocksDbConf.TRACK_TOTAL_ROWS, "false")
-    val base = Tables.events(s, dir)
-    val stagedParts = stagedEventParts(s, dir)
-    val inDir = graft.Staging.tempDir("graft-twsrepart-in-")
-    val ckptA = graft.Staging.tempDir("graft-twsrepart-ckptA-").toString
-    val ckptB = graft.Staging.tempDir("graft-twsrepart-ckptB-").toString + "/migrated"
+    val s = gateSession(s0)
+    import s.implicits._
     val outDir = graft.Staging.tempDir("graft-twsrepart-out-").toString
-    def feed(parts: Seq[java.nio.file.Path]): Unit = parts.foreach { p =>
-      java.nio.file.Files.copy(p, inDir.resolve(p.getFileName.toString))
-    }
-    // update-mode memory sinks refuse checkpoint recovery — egress through
-    // foreachBatch with phase/batch-stamped parquet partitions instead
-    // (the stream_foreach_batch idempotence discipline)
-    def run(phase: Int, ckptDir: String): Unit = {
-      import s.implicits._
-      val q = s.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
+    var ckptDir = graft.Staging.tempDir("graft-twsrepart-ckpt-").toString
+    // phase 1 runs at 8 partitions and STOPS entirely; phase 2 resumes at 16
+    // from the migrated checkpoint. Update-mode memory sinks refuse
+    // checkpoint recovery, so egress goes through the batch-id sink, keyed
+    // phase * 1000 + batch id.
+    replayInHalves(stagedEventParts(s, dir)) { (inDir, phase) =>
+      if (phase == 2) ckptDir = migrateTo16(s, "twsrepart", ckptDir)
+      drain(fileStream(s, Tables.events(s, dir).schema, inDir)
         .select(col("user_id"), col("event_type"))
         .as[(Long, String)]
         .groupByKey(_._1)
@@ -3462,27 +3009,9 @@ object StreamingQueries {
         .toDF("user_id", "event_type", "n", "total")
         .writeStream
         .outputMode(OutputMode.Update())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("part", lit(phase * 1000 + batchId))
-            .write.mode("overwrite")
-            .format("parquet")
-            .partitionBy("part")
-            .option("partitionOverwriteMode", "dynamic")
-            .save(outDir)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .foreachBatch((b: DataFrame, id: Long) => writeBatch(b, phase * 1000 + id, outDir))
+        .option("checkpointLocation", ckptDir))
     }
-    val (firstHalf, secondHalf) = stagedParts.splitAt(stagedParts.size / 2)
-    feed(firstHalf)
-    run(1, ckptA) // 8 partitions, then STOP entirely
-    // stopped our own query above: waive the quiescence mtime guard
-    graft.state.StateRepartition.run(s, ckptA, ckptB, 16, force = true)
-    s.conf.set("spark.sql.shuffle.partitions", "16")
-    feed(secondHalf)
-    run(2, ckptB) // resumes at 16 from the migrated checkpoint
     // update-mode emissions only cover keys touched in each batch: a
     // (user, type) finished in phase 1 appears only in phase-1 output.
     // Counts are monotone per key, so max over all emissions IS the final
@@ -3578,8 +3107,6 @@ object StreamingQueries {
 
   val stream_funnel_sql: String = graft.operators.Relational.q28_sql
 
-  /** Streaming global limit (append mode); which rows land is
-    * non-deterministic, so this entry is rows-only checked. */
   /** A third staged copy for the LIMIT gate: globally (ts, event_id)-SORTED
     * chunks — each chunk is a disjoint ascending ts-range (the
     * [[eventsOrdered]] quantile bounds) sorted within, one file per chunk,
@@ -3590,11 +3117,9 @@ object StreamingQueries {
     * defined limit operator into a DETERMINISTIC set (the lowest n by the
     * total order) with a plain SQL oracle. Staging sorts chunk-locally
     * (range-split first), never the whole table in one task. */
-  private def eventsSorted(s: SparkSession, dir: String): DataFrame = {
-    val base = Tables.events(s, dir)
-    val tmp = stagedSortedDirs.getOrStage(dir)(stageEventChunks(s, dir, sortedWithin = true))
-    s.readStream.schema(base.schema).option("maxFilesPerTrigger", "1").parquet(tmp)
-  }
+  private def eventsSorted(s: SparkSession, dir: String): DataFrame =
+    fileStream(s, Tables.events(s, dir).schema,
+      stagedSortedDirs.getOrStage(dir)(stageEventChunks(s, dir, sortedWithin = true)))
 
   /** Streaming LIMIT over the sorted staging: the emitted set is exactly
     * the 100 lowest events by (ts, event_id) — a total order, so the

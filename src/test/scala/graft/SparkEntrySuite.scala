@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
@@ -92,6 +94,27 @@ class SparkEntrySuite extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(banned.isEmpty,
       s"gate outputs with engine-ambiguous numeric types:\n  ${banned.mkString("\n  ")}")
+  }
+
+  // Scratch and probe mains piled up to 17 before they were deleted; a new
+  // entry point has to be added here, in a reviewed edit.
+  test("the only mains are the documented entry points") {
+    val sources = Seq("src/main/scala", "src/test/scala").flatMap { root =>
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
+      finally walk.close()
+    }
+    assert(sources.nonEmpty, s"no sources under ${sys.props("user.dir")}")
+    val objectDecl = """(?m)^\s*(?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|case\s+)*object\s+(\w+)""".r
+    val mains = sources.flatMap { p =>
+      val src = java.nio.file.Files.readString(p)
+      val objects = objectDecl.findAllMatchIn(src).map(m => m.start -> m.group(1)).toVector
+      // each `def main(` belongs to the nearest object declared above it
+      """def main\s*\(""".r.findAllMatchIn(src)
+        .flatMap(m => objects.takeWhile(_._1 < m.start).lastOption.map(_._2))
+    }
+    assert(mains.sorted === Seq("Bench", "IndexFsck", "IndexGc", "Probe", "StateCompact",
+      "StateFsck", "StateGc", "StateRepartition", "Verify"))
   }
 
   test("every gate entry carries a full oracle — zero rows-only entries") {
