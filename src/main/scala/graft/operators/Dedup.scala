@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.NormSpace
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -51,7 +52,7 @@ object Dedup extends Logging {
   def dedup_exact(s: SparkSession, dir: String): DataFrame = {
     Tables.documents(s, dir)
       .select(col("doc_id"),
-        md5(regexp_replace(trim(col("text")), "\\s+", " ")).as("fp"))
+        md5(NormSpace.of(col("text"))).as("fp"))
       .groupBy(col("fp"))
       .agg(min(col("doc_id")).as("rep_doc_id"), count(lit(1)).as("n_copies"))
   }
@@ -128,9 +129,9 @@ object Dedup extends Logging {
     * windows are hashed to 60-bit integers BEFORE the shuffle (12 bytes per
     * char, packed per hash bucket, instead of L+16; md5-derived, so both
     * engines agree bit-for-bit and a collision — ~N²/2^60 — would be the
-    * same collision in the oracle), the duplicate test is a sort of each
-    * bucket's hashes ([[duplicatedSpans]]), and span merging is a per-doc
-    * window bounded by one document's own length (the
+    * same collision in the oracle), the duplicate test is a count table
+    * over each bucket's hashes ([[duplicatedSpans]]), and span merging is a
+    * per-doc kernel bounded by one document's own length (the
     * [[graft.operators.Relational.q23_sessionize]]
     * recurrence: stride-1 positions are sorted, so a span breaks exactly
     * when the gap to the previous window exceeds the window length).
@@ -144,41 +145,42 @@ object Dedup extends Logging {
     * (doc_id, span_id, sp_start, sp_end), 1-based inclusive. */
   private def exactSubstrSpans(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val docs = Tables.documents(s, dir)
-      .select(col("doc_id"),
-        regexp_replace(trim(col("text")), "\\s+", " ").as("t"))
+      .select(col("doc_id"), NormSpace.of(col("text")).as("t"))
       .withColumn("len", length(col("t")))
     (docs, duplicatedSpans(docs))
   }
 
   /** Merged duplicated spans (doc_id, span_id, sp_start, sp_end) of the
-    * normalized texts `docs(doc_id, t, len)`.
+    * normalized texts `docs(doc_id, t, len)`: two shuffles, each feeding
+    * one kernel of [[graft.functions.SubstrHashBlocks]].
     *
     * Duplicate finding ships packed blocks, not window rows: the
-    * [[graft.functions.SubstrHashBlocks]] kernel hashes each document's
-    * windows once and groups them into at most B blocks
-    * `(bucket, h[], pos[])` with `bucket = h mod B`, where B is the
-    * session's shuffle-partition count. The blocks are exploded and
-    * partitioned by `bucket` itself (`repartitionById`, so bucket b is
-    * partition b), which puts every occurrence of a hash in one partition:
-    * there a partition-local count is the corpus-wide count, taken by
-    * sorting the partition's hashes as one primitive `long[]`
-    * ([[graft.functions.SubstrHashBlocks.duplicated]]). Only the
-    * `(doc_id, pos)` of windows whose hash occurs twice or more leave it:
-    * the windows `count(*) OVER (PARTITION BY h) >= 2` selects, without a
-    * Spark row per window. The finder holds its partition in memory (about
-    * 20 bytes per window) and does not spill, so it is bounded by windows ÷
-    * shuffle partitions (SCALE.md).
+    * `substr_hash_blocks` expression hashes each document's windows once
+    * and groups them into at most B blocks `(bucket, h[], pos[])` with
+    * `bucket = h mod B`, where B is the session's shuffle-partition count.
+    * The blocks are exploded and partitioned by `bucket` itself
+    * (`repartitionById`, so bucket b is partition b), which puts every
+    * occurrence of a hash in one partition: there a partition-local count
+    * is the corpus-wide count, taken in one open-addressing count table
+    * ([[graft.functions.SubstrHashBlocks.duplicated]]). Only a block's
+    * duplicated positions leave it, as one ascending `int[]` per
+    * `(doc, block)`: the windows `count(*) OVER (PARTITION BY h) >= 2`
+    * selects, without a Spark row per window. The finder holds its
+    * partition in memory (12 to 24 bytes per window beside the blocks'
+    * 12) and does not spill, so it is bounded by windows ÷ shuffle
+    * partitions (SCALE.md).
     *
-    * Span merging is a per-doc window over the sorted positions: a new
-    * span starts when the gap to the previous window exceeds the window
-    * length. */
+    * Span merging shuffles those rows on `doc_id`, sorts each partition by
+    * `doc_id`, and runs [[graft.functions.SubstrHashBlocks.spans]] over
+    * each document's sorted positions: a new span starts when the gap to
+    * the previous window exceeds the window length. It holds one
+    * document's positions at a time. */
   private[graft] def duplicatedSpans(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import graft.functions.SubstrHashBlocks
     val s = docs.sparkSession
     import s.implicits._
     val buckets = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val dupWins = docs.filter(col("len") >= SubstrLen)
+    docs.filter(col("len") >= SubstrLen)
       .select(col("doc_id"),
         explode(SubstrHashBlocks.of(col("t"), SubstrLen, buckets)).as("b"))
       .select(col("doc_id"), col("b.bucket").as("bucket"), col("b.h").as("h"),
@@ -187,16 +189,10 @@ object Dedup extends Logging {
       .drop("bucket")
       .as[SubstrHashBlocks.Block]
       .mapPartitions(SubstrHashBlocks.duplicated)
-      .toDF("doc_id", "pos")
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    dupWins
-      .withColumn("new_span",
-        when(lag(col("pos"), 1).over(w).isNull ||
-          col("pos") > lag(col("pos"), 1).over(w) + SubstrLen, 1L).otherwise(0L))
-      .withColumn("span_id", sum(col("new_span")).over(w))
-      .groupBy(col("doc_id"), col("span_id"))
-      .agg(min(col("pos")).as("sp_start"),
-        (max(col("pos")) + (SubstrLen - 1)).as("sp_end"))
+      .repartition(buckets, col("doc_id"))
+      .sortWithinPartitions(col("doc_id"))
+      .mapPartitions(SubstrHashBlocks.spans(SubstrLen))
+      .toDF()
   }
 
   /** Shared oracle CTE chain ending at `spans(doc_id, span_id, sp_start,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.WordShingles
+import graft.functions.{NormSpace, WordShingles}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{aggregate, BloomFilterMightContain, Literal}
 import org.apache.spark.sql.expressions.Window
@@ -904,7 +904,7 @@ object Pipeline {
       Similarity.publishLayout(s, p, "fps/_SUCCESS") { tmp =>
         Tables.documents(s, dir)
           .filter(expr(s"CAST(substring(source, 4) AS INT) < $IncrCorpusSources"))
-          .select(col("doc_id"), md5(regexp_replace(trim(col("text")), "\\s+", " ")).as("fp"))
+          .select(col("doc_id"), md5(NormSpace.of(col("text"))).as("fp"))
           .groupBy(col("fp")).agg(min(col("doc_id")).as("corpus_rep"))
           .write.parquet(s"$tmp/fps")
       }
@@ -915,7 +915,7 @@ object Pipeline {
     val corpus = s.read.parquet(s"${persistedCorpusFps(s, dir)}/fps")
     val isCorpus = expr(s"CAST(substring(source, 4) AS INT) < $IncrCorpusSources")
     Tables.documents(s, dir).filter(!isCorpus)
-      .select(col("doc_id"), md5(regexp_replace(trim(col("text")), "\\s+", " ")).as("fp"))
+      .select(col("doc_id"), md5(NormSpace.of(col("text"))).as("fp"))
       .withColumn("batch_rep", min(col("doc_id")).over(Window.partitionBy(col("fp"))))
       .join(corpus, Seq("fp"), "left")
       .withColumn("status",
@@ -1121,7 +1121,7 @@ object Pipeline {
     * partition; every other metric is already a constant-size partial. */
   def pipe_dataset_card(s: SparkSession, dir: String): DataFrame = {
     val toks = split(trim(col("text")), "\\s+")
-    val fp = md5(regexp_replace(trim(col("text")), "\\s+", " "))
+    val fp = md5(NormSpace.of(col("text")))
     val nTok = size(toks).cast("long")
     val uniq = size(array_distinct(toks)).cast("long")
     val stopHits = size(filter(toks, t => t.isin(stopwordList: _*))).cast("long")
@@ -1173,7 +1173,7 @@ object Pipeline {
     * map-side combinable — strictly cheaper than the dedup itself at any
     * corpus size. */
   def pipe_dup_report(s: SparkSession, dir: String): DataFrame = {
-    val fp = md5(regexp_replace(trim(col("text")), "\\s+", " "))
+    val fp = md5(NormSpace.of(col("text")))
     Tables.documents(s, dir).select(col("source"), fp.as("fp"))
       .groupBy(col("source"), col("fp")).agg(count(lit(1)).as("n"))
       .groupBy(col("source"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.NormSpace
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -436,7 +437,7 @@ object TextAnalysis {
     Tables.documents(s, dir)
       .select(
         col("doc_id"),
-        md5(regexp_replace(trim(col("text")), "\\s+", " ")).as("fp_exact"),
+        md5(NormSpace.of(col("text"))).as("fp_exact"),
         md5(concat_ws(" ", array_sort(array_distinct(tokens)))).as("fp_bag"))
   }
 

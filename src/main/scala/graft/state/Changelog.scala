@@ -47,10 +47,13 @@ object Changelog {
     private val out = new DataOutputStream(new BufferedOutputStream(
       new DeflaterOutputStream(raw, deflater), 64 * 1024))
     private var count = 0L
+    // a delta names a handful of column families over many records:
+    // encode each name once, not once per record
+    private val cfNames = new java.util.HashMap[String, Array[Byte]]()
 
     private def writeCommon(op: Int, cf: String, key: Array[Byte]): Unit = {
       out.writeByte(op)
-      val cfBytes = cf.getBytes("UTF-8")
+      val cfBytes = cfNames.computeIfAbsent(cf, _.getBytes("UTF-8"))
       out.writeShort(cfBytes.length)
       out.write(cfBytes)
       out.writeInt(key.length)

@@ -6,6 +6,7 @@ import java.nio.file.attribute.FileTime
 import scala.jdk.CollectionConverters._
 
 import graft.Tables
+import graft.functions.NormSpace
 import graft.state.RocksDbStateStoreProvider
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1745,7 +1746,7 @@ object StreamingQueries {
   def stream_doc_dedup(s: SparkSession, dir: String): DataFrame =
     runToTable(s, s2 =>
       documentsStream(s2, dir)
-        .select(md5(regexp_replace(trim(col("text")), "\\s+", " ")).as("fp"))
+        .select(md5(NormSpace.of(col("text"))).as("fp"))
         .dropDuplicates("fp"),
       OutputMode.Append(), "stream_doc_dedup")
 
@@ -1935,7 +1936,7 @@ object StreamingQueries {
     import graft.operators.TextAnalysis
     runToTable(s, s2 =>
       documentsStream(s2, dir)
-        .select(md5(regexp_replace(trim(col("text")), "\\s+", " ")).as("fp"),
+        .select(md5(NormSpace.of(col("text"))).as("fp"),
           TextAnalysis.nTokensCol.cast("long").as("n_tokens"),
           TextAnalysis.qualityClassCol.as("quality_class"))
         .dropDuplicates("fp")

@@ -1,9 +1,13 @@
 package graft
 
-import graft.operators.{Pipeline, TextAnalysis}
+import graft.functions.NormSpace
+import graft.operators.{Dedup, Pipeline, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.functions.{col, length}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -44,6 +48,22 @@ class PlanShapeSuite extends AnyFunSuite with BeforeAndAfterAll
     collectWithSubqueries(df.queryExecution.executedPlan) {
       case s: FileSourceScanExec => s
     }.map(System.identityHashCode).distinct.size
+  }
+
+  test("dedup_exact_substr: no window operator; its spans take exactly two shuffles") {
+    val q = Dedup.dedup_exact_substr(spark, sfDir)
+    q.collect()
+    assert(collectWithSubqueries(q.queryExecution.executedPlan) { case w: WindowExec => w }
+      .isEmpty, "span merging is the per-document kernel, not lag/sum windows")
+    val docs = Tables.documents(spark, sfDir)
+      .select(col("doc_id"), NormSpace.of(col("text")).as("t"))
+      .withColumn("len", length(col("t")))
+    val spans = Dedup.duplicatedSpans(docs)
+    spans.collect()
+    val shuffles = collectWithSubqueries(spans.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e
+    }.map(System.identityHashCode).distinct.size
+    assert(shuffles === 2, "one shuffle by hash bucket, one by doc_id")
   }
 
   test("text_tfidf_top explodes the corpus once (reused exchange)") {

@@ -86,6 +86,15 @@ class SubstrHashBlocksSuite extends AnyFunSuite with BeforeAndAfterAll {
     assertSameMultiset(corpus.map(_._2), L, 7)
   }
 
+  /** The finder's output as `(doc, pos)` pairs, after checking that every
+    * row holds positions, ascending. */
+  private def found(blocks: Seq[SubstrHashBlocks.Block]): Seq[(Long, Int)] =
+    SubstrHashBlocks.duplicated(blocks.iterator).toSeq.flatMap { hit =>
+      assert(hit.pos.nonEmpty, "a row holds at least one position")
+      assert(hit.pos.toSeq === hit.pos.toSeq.sorted.distinct, "positions ascend within a row")
+      hit.pos.toSeq.map(p => (hit.doc_id, p))
+    }.sorted
+
   test("the finder returns exactly the windows whose hash occurs twice or more") {
     import SubstrHashBlocks.Block
     val blocks = Seq(
@@ -93,9 +102,52 @@ class SubstrHashBlocksSuite extends AnyFunSuite with BeforeAndAfterAll {
       Block(2L, Array(9L, 7L), Array(4, 8)),        // 9 shared with doc 1
       Block(3L, Array(9L, 11L), Array(1, 2)),       // 9 a third time
       Block(4L, Array(13L), Array(6)))
-    val got = SubstrHashBlocks.duplicated(blocks.iterator).toSeq.sorted
-    assert(got === Seq((1L, 1), (1L, 2), (1L, 3), (2L, 4), (3L, 1)))
+    assert(found(blocks) === Seq((1L, 1), (1L, 2), (1L, 3), (2L, 4), (3L, 1)))
     assert(SubstrHashBlocks.duplicated(Iterator.empty).isEmpty)
+  }
+
+  test("the finder's count table: one residue mod B, h = 0, one row per block") {
+    import SubstrHashBlocks.Block
+    // every hash ≡ 3 (mod 64), as in the partition of bucket 3 at B = 64:
+    // low bits alone would put them all in a few slots
+    val r = new SplittableRandom(5)
+    val hs = Array.fill(20000)(r.nextLong(5000) * 64 + 3) // singles and repeats
+    val blocks = hs.grouped(100).zipWithIndex.map { case (h, d) =>
+      Block(d.toLong, h, Array.tabulate(h.length)(_ * 3 + 1))
+    }.toSeq
+    val counts = hs.groupBy(identity).map { case (h, xs) => h -> xs.length }
+    val expected = blocks.flatMap(b => b.h.indices.filter(j => counts(b.h(j)) >= 2)
+      .map(j => (b.doc_id, b.pos(j)))).sorted
+    assert(expected.nonEmpty && expected.size < hs.length)
+    assert(found(blocks) === expected)
+    // and with a known set of repeats among the same residue class
+    val dup = blocks.take(3).map(b => b.copy(doc_id = b.doc_id + 1000))
+    val withDup = found(blocks ++ dup)
+    assert(withDup.count(_._1 >= 1000) === 300, "every window of a copied block is duplicated")
+    // the zero hash is a key like any other
+    assert(found(Seq(Block(1L, Array(0L, 4L), Array(1, 2)), Block(2L, Array(0L), Array(7)))) ===
+      Seq((1L, 1), (2L, 7)))
+    assert(found(Seq(Block(1L, Array(0L, 4L), Array(1, 2)))).isEmpty, "one zero is not a repeat")
+    intercept[IllegalArgumentException](found(Seq(Block(1L, Array(-1L), Array(1)))))
+    // one output row per block that holds a duplicated window
+    val rows = SubstrHashBlocks.duplicated(Iterator(
+      Block(1L, Array(8L, 8L), Array(1, 2)), Block(1L, Array(9L, 9L, 10L), Array(3, 4, 5)),
+      Block(2L, Array(11L), Array(1)))).toSeq
+    assert(rows.map(h => (h.doc_id, h.pos.toSeq)) === Seq((1L, Seq(1, 2)), (1L, Seq(3, 4))))
+  }
+
+  test("the span kernel: a gap of L merges, L + 1 splits, rows of one document merge") {
+    import SubstrHashBlocks.{Hits, Span}
+    def spans(hits: Hits*): Seq[Span] = SubstrHashBlocks.spans(L)(hits.iterator).toSeq
+    assert(spans(Hits(1L, Array(10, 10 + L))) === Seq(Span(1L, 1L, 10, 10 + 2 * L - 1)))
+    assert(spans(Hits(1L, Array(10, 11 + L))) ===
+      Seq(Span(1L, 1L, 10, 10 + L - 1), Span(1L, 2L, 11 + L, 11 + 2 * L - 1)))
+    // a same-document repeat whose windows fell into two buckets: the
+    // rows' positions interleave and are merged before the walk
+    assert(spans(Hits(7L, Array(1, 3, 100)), Hits(7L, Array(2, 151)), Hits(8L, Array(5))) === Seq(
+      Span(7L, 1L, 1, 3 + L - 1), Span(7L, 2L, 100, 100 + L - 1), Span(7L, 3L, 151, 151 + L - 1),
+      Span(8L, 1L, 5, 5 + L - 1)))
+    assert(spans().isEmpty)
   }
 
   /** The spelling the block pipeline replaced: one `(doc_id, pos, h)` row

@@ -1,17 +1,21 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate.
 
-Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [jsonOut]
+Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [jsonOut] [--only NAME ...]
 
 Reads each <verifyOutDir>/<name>/ parquet result (written by graft.Verify),
 runs the matching SQL from oracle_sql.json in DuckDB over the sfDir tables,
 and compares as sorted multisets (columns sorted by name, values normalized).
+With --only, checks just the named queries (the names a subset
+`graft.Verify <sfDir> <outDir> NAME ...` run was given) and exits 0 when
+they all pass; a name with neither an oracle nor a result fails.
 With [jsonOut], also writes a {name: {"status": ..., "rows": N}} artifact —
 committed at round close so the gate record is reproducible in-history even
 when the driver's own CORRECTNESS artifact starves (see SCALE.md "Gate
 economics"). This is a development tool only — the engine itself never
 depends on it.
 """
+import argparse
 import json
 import math
 import sys
@@ -66,15 +70,29 @@ def types_mismatch(gcols, gtypes_by_col, etypes_by_col):
 
 
 def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    json_out = sys.argv[3] if len(sys.argv) > 3 else None
+    ap = argparse.ArgumentParser(description="Compare graft.Verify results with the DuckDB oracle.")
+    ap.add_argument("sf_dir")
+    ap.add_argument("out_dir")
+    ap.add_argument("json_out", nargs="?")
+    ap.add_argument("--only", nargs="+", metavar="NAME", help="check only these queries")
+    args = ap.parse_args()
+    sf_dir, out_dir, json_out = args.sf_dir, args.out_dir, args.json_out
+    only = set(args.only) if args.only else None
     record = {}
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.loads(Path(out_dir, "oracle_sql.json").read_text())
     failures = 0
+    if only is not None:
+        for name in sorted(only - set(oracle)):
+            if not Path(out_dir, name).is_dir():
+                print(f"FAIL {name}: no such query")
+                record[name] = {"status": "FAIL", "reason": "no such query"}
+                failures += 1
     for name in sorted(oracle):
+        if only is not None and name not in only:
+            continue
         res_dir = Path(out_dir, name)
         if not res_dir.exists():
             print(f"FAIL {name}: no result parquet")
@@ -121,7 +139,7 @@ def main():
             record[name] = {"status": "PASS", "rows": len(grows)}
     # queries with no oracle: rows-only check
     for d in sorted(Path(out_dir).iterdir()):
-        if d.is_dir() and d.name not in oracle:
+        if d.is_dir() and d.name not in oracle and (only is None or d.name in only):
             n = con.sql(f"SELECT count(*) FROM '{d}/*.parquet'").fetchone()[0]
             print(f"ROWS {d.name}: {n} rows {'(OK)' if n > 0 else '(EMPTY!)'}")
             record[d.name] = {"status": "ROWS" if n > 0 else "EMPTY", "rows": n}
