@@ -196,19 +196,21 @@ object Bench {
       .mkString("{", ",", "}")
     // "cpus" records the session's core count (and shuffle-partition setting)
     // in the artifact itself; the streaming gates additionally pin their
-    // stateful parallelism to min(8, cpus) inside their fixtures — recorded
-    // here so the driver's 8-vs-32-core scaling comparison is legible
-    // (PERF r16 flagged suspect_cpus_ignored; the env var was always
-    // honored — see the master(local[$cpus]) above — but the artifact never
-    // said so).
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","steady_total":$steadyTotal,"cpus":$cpus,"stream_shuffle_partitions":${math.min(8, cpus.toInt)},"family_steady":$familySteady,"queries":$qs,"steady":$steady,"repeats":$repeats,"stats":$stats,"failed":$failed,"partial":$partial,"contended":$contended,"sf":"$sfDir"}"""
+    // stateful parallelism to min(8, cores) inside their fixtures, and the
+    // scaling canary spreads over all of them — recorded here, with the
+    // host's processor count and the JVM's max heap, so runs at different
+    // core counts and on different hosts can be told apart and compared.
+    val parallelism = spark.sparkContext.defaultParallelism
+    val host = s""""nproc":${Runtime.getRuntime.availableProcessors},"max_heap_mb":${Runtime.getRuntime.maxMemory >> 20}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","steady_total":$steadyTotal,"cpus":$cpus,$host,"default_parallelism":$parallelism,"stream_shuffle_partitions":${math.min(8, parallelism)},"family_steady":$familySteady,"queries":$qs,"steady":$steady,"repeats":$repeats,"stats":$stats,"failed":$failed,"partial":$partial,"contended":$contended,"sf":"$sfDir"}"""
     // File first: captured stdout can be truncated mid-line (BENCH_r05 and
     // BENCH_r08 both lost the stdout tail — `"parsed": null`); the file is
     // the complete, archivable artifact regardless of what the pipe kept.
     // A filtered run is a local probe — never let it clobber the committed
-    // full-suite artifact.
+    // full-suite artifact. One artifact per core count: an 8-core run must
+    // not overwrite the 32-core one.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (only.isDefined) "/tmp/BENCH_ONLY.json" else "BENCH_LOCAL.json")
+      if (only.isDefined) "/tmp/BENCH_ONLY.json" else s"BENCH_LOCAL_c$cpus.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] could not write $out: ${e.getMessage}") }
     println(json)

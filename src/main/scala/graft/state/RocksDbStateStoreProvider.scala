@@ -74,12 +74,25 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
 
   /** Local dir holding exactly one committed version, tagged (under
     * checkpoint-format v2) with the unique ID of the commit that produced
-    * it so a retried task's different commit is never reused by mistake. */
-  private[state] case class LocalSnapshot(dir: File, ckptId: Option[String])
+    * it so a retried task's different commit is never reused by mistake.
+    * `owner` is the finished store that registered the dir; it may still
+    * hold the dir open, and whoever removes the entry adopts or closes
+    * that handle ([[takeLocal]], [[dropLocal]]). */
+  private[state] case class LocalSnapshot(
+      dir: File, ckptId: Option[String], owner: Option[RocksDbStateStore])
 
   /** version -> local RocksDB dir holding exactly that committed version
     * (reference `localSnapshots`, `:114, :299-304`). */
-  private val localSnapshots = new ConcurrentHashMap[Long, LocalSnapshot]()
+  private[state] val localSnapshots = new ConcurrentHashMap[Long, LocalSnapshot]()
+
+  /** Stores whose RocksDB handle is open: every Updating store, plus at
+    * most one finished store, the owner of the newest registration. Spark
+    * reads `iterator()`/`metrics` *after* `commit()` (e.g. Complete-mode
+    * output), so a finished store keeps its DB open until the next load
+    * adopts it, a later registration closes it, or the provider closes.
+    * The reference closed the DB inside `commit()` (`:208`) and would have
+    * segfaulted on any post-commit read. */
+  private[state] val openStores = ConcurrentHashMap.newKeySet[RocksDbStateStore]()
 
   /** Observability for the handle-adoption hot path: physical RocksDB opens
     * performed for store instances (an adopted handle does not count). The
@@ -88,14 +101,6 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
   /** Physical RocksDB closes of store instances (a detached, adopted handle
     * does not count): `dbOpens - dbCloses` is the number of open handles. */
   private[state] val dbCloses = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** The store most recently opened by this provider. Spark reads
-    * `iterator()`/`metrics` *after* `commit()` (e.g. Complete-mode output),
-    * so a store must keep its RocksDB open past commit; the provider closes
-    * it when the next version loads (or at provider close). The reference
-    * closed the DB inside `commit()` (`:208`) — and would have segfaulted on
-    * any post-commit read. */
-  @volatile private var lastOpenStore: Option[RocksDbStateStore] = None
 
   /** Column-family registration runs for every store this provider builds
     * (every micro-batch, handle adoption included) and would re-render and
@@ -169,10 +174,8 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     * importer records into the rewritten commit log. */
   private[state] def emptyStoreAt(version: Long): RocksDbStateStore = synchronized {
     require(version >= 0, "Version cannot be less than 0")
-    lastOpenStore.filter(_.isFinished).foreach(_.ensureClosed())
-    val store = new RocksDbStateStore(version, freshDir(), readOnly = false, None)
-    lastOpenStore = Some(store)
-    store
+    closeOwners()
+    new RocksDbStateStore(version, freshDir(), readOnly = false, None)
   }
 
   override def upgradeReadStoreToWriteStore(
@@ -191,15 +194,13 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     }
 
   /** Resolve a local directory containing committed state for `version` and
-    * open a store over it. Hot path first: when the previous batch's
-    * finished store already holds exactly `version` (its dir is the
-    * registered local snapshot for it), the new store ADOPTS the open
-    * RocksDB handle — no close, no dir move, no reopen (measured round 16:
-    * 13.5 ms open + 1.2 ms close per store per micro-batch, the largest
-    * provider-owned fixed cost left; VERDICT r16 item 1). Otherwise exact
-    * version resolution (local move, else snapshot download); on corruption
-    * fall back loudly to the newest older snapshot, then to empty state —
-    * the reference's resilience contract (`:384-401`, tested
+    * open a store over it. Hot path first: the registered local dir of
+    * exactly that commit ([[takeLocal]]), usually with the previous batch's
+    * open RocksDB handle to adopt (measured round 16: 13.5 ms open + 1.2 ms
+    * close per store per micro-batch, the largest provider-owned fixed cost
+    * left; VERDICT r16 item 1). Otherwise recovery from the durable files;
+    * on corruption fall back loudly to the newest older snapshot, then to
+    * empty state — the reference's resilience contract (`:384-401`, tested
     * `RocksDbStateStoreProviderSuite.scala:106-133`). */
   private def loadStore(
       version: Long, readOnly: Boolean, uniqueId: Option[String] = None): RocksDbStateStore =
@@ -211,69 +212,73 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       val resolvedId: Option[String] =
         if (!ckptIdsEnabled || version == 0) None
         else uniqueId.orElse(resolveIdByVersion(version))
-      // Handle adoption: sound only when the registry proves the previous
-      // store's OWN dir holds exactly the requested commit — commit()
-      // registers its dir under the version it published, release() under
-      // the version it read, and abort never registers — so
-      // a registry entry pointing at the previous store's dir certifies its
-      // open handle views exactly `version`. Under checkpoint-format v2 the
-      // entry's commit ID must additionally match the resolved lineage (a
-      // same-version sibling from a retried task must never be adopted),
-      // mirroring materializeV2's local-reuse filter. detachDb() drains
-      // in-flight readers under the round-8 native-handle lifetime contract;
-      // if they do not drain the handle is leaked (never freed under a live
-      // thread) and the normal move+reopen path takes over.
-      val adopted: Option[(File, OpenDb)] =
-        if (version == 0) None
-        else lastOpenStore.filter(_.isFinished).flatMap { prev =>
-          Option(localSnapshots.get(version))
-            .filter(e => prev.ownsDir(e.dir) && e.dir.isDirectory)
-            .filter(e => !ckptIdsEnabled || (resolvedId.isDefined && e.ckptId == resolvedId))
-            .flatMap { e =>
-              prev.detachDb().map { db =>
-                localSnapshots.remove(version)
-                (e.dir, db)
-              }
-            }
-        }
-      adopted.foreach { case (dir, db) =>
-        val store = new RocksDbStateStore(version, dir, readOnly, resolvedId, Some(db))
-        lastOpenStore = Some(store)
-        return store
-      }
-      // Close the previous batch's finished store before (possibly) moving its
-      // directory; a store still Updating (e.g. an in-use read store) is left
-      // alone — its dir is not in the registry yet.
-      lastOpenStore.filter(_.isFinished).foreach(_.ensureClosed())
-      val dir =
-        if (version == 0) freshDir()
+      val (dir, db) =
+        if (version == 0) (freshDir(), None)
         else if (ckptIdsEnabled) {
           val id = resolvedId.getOrElse(throw new IllegalStateException(
             s"No durable commit found for state version $version of $stateStoreId_ " +
               "(checkpoint format v2)"))
           // v2 is exact-or-fail: silently substituting an older version would
           // defeat the lineage contract.
-          materializeV2(version, id).getOrElse(throw new IllegalStateException(
-            s"Cannot materialize state version $version (commit $id) of $stateStoreId_: " +
-              "snapshot or changelog chain missing or unreadable"))
+          takeLocal(version, resolvedId).getOrElse((materializeV2(version, id).getOrElse(
+            throw new IllegalStateException(
+              s"Cannot materialize state version $version (commit $id) of $stateStoreId_: " +
+                "snapshot or changelog chain missing or unreadable")), None))
         } else {
-          tryMaterialize(version).getOrElse {
+          def load(v: Long) = takeLocal(v, None).orElse(tryMaterialize(v).map(d => (d, None)))
+          load(version).getOrElse {
             val candidates =
               (snapshots.listVersions() ++ snapshots.listDeltaVersions() ++
                 localSnapshots.keySet().asScala)
               .filter(v => v < version && v > 0).distinct.sorted(Ordering.Long.reverse)
             logWarning(s"State version $version of $stateStoreId_ is missing or unreadable; " +
               s"falling back (candidates: ${candidates.mkString(",")})")
-            candidates.iterator.flatMap(tryMaterialize).nextOption().getOrElse {
+            candidates.iterator.flatMap(load).nextOption().getOrElse {
               logWarning(s"No readable snapshot at all for $stateStoreId_; starting empty at version $version")
-              freshDir()
+              (freshDir(), None)
             }
           }
         }
-      val store = new RocksDbStateStore(version, dir, readOnly, resolvedId)
-      lastOpenStore = Some(store)
-      store
+      closeOwners()
+      new RocksDbStateStore(version, dir, readOnly, resolvedId, db)
     }
+
+  /** Take the registered local dir of commit `(v, id)` out of the registry
+    * for a new store: zero-copy reuse of a batch this provider committed
+    * (the reference's hot-path trick, `:485-498`). An open owner hands its
+    * handle over ([[RocksDbStateStore.detachDb]] drains in-flight readers
+    * under the round-8 native-handle contract, or leaks the handle if they
+    * never drain), so the new store skips close, move and reopen. An owner
+    * that is already closed leaves the dir to be moved to a fresh name and
+    * reopened. A local dir needs no verify-open: this provider produced it,
+    * and once closed its WAL carries every write not yet flushed, which the
+    * reopen replays. */
+  private def takeLocal(v: Long, id: Option[String]): Option[(File, Option[OpenDb])] =
+    Option(localSnapshots.get(v))
+      .filter(e => e.ckptId == id && e.dir.isDirectory && localSnapshots.remove(v, e))
+      .map { e =>
+        val adopted = e.owner.flatMap(_.detachDb())
+        if (adopted.isDefined) (e.dir, adopted)
+        else {
+          val dest = freshDir()
+          dest.delete()
+          java.nio.file.Files.move(e.dir.toPath, dest.toPath)
+          (dest, None)
+        }
+      }
+
+  /** Remove-side twin of [[takeLocal]] for an entry nobody reuses (replaced
+    * or pruned): close its owner, then delete the dir. */
+  private def dropLocal(e: LocalSnapshot): Unit = {
+    e.owner.foreach(_.ensureClosed())
+    deleteRecursively(e.dir)
+  }
+
+  /** Close the registered owners other than `keep`: a finished store stays
+    * open only until the next registration, or the next load, which
+    * adopts its handle or closes it here. */
+  private def closeOwners(keep: RocksDbStateStore = null): Unit =
+    localSnapshots.values().asScala.flatMap(_.owner).filter(_ ne keep).foreach(_.ensureClosed())
 
   /** v2 without a caller-provided lineage ID: pick the commit for `version`
     * from what is visible (local registry first, then durable files). */
@@ -282,32 +287,28 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       .orElse((snapshots.idsAt(version, snapshot = true) ++
         snapshots.idsAt(version, snapshot = false)).maxOption)
 
-  /** Materialize exactly commit `(v, id)`: local-move reuse when the tagged
-    * commit matches, else walk the delta lineage headers back to a full
-    * snapshot of the chain and replay forward. */
-  private def materializeV2(v: Long, id: String): Option[File] = {
-    val fromLocal = Option(localSnapshots.get(v))
-      .filter(e => e.ckptId.contains(id) && e.dir.isDirectory)
-      .flatMap(e => Option(localSnapshots.remove(v)).map(_ => e.dir))
-      .map { src =>
-        val dest = freshDir()
-        dest.delete()
-        java.nio.file.Files.move(src.toPath, dest.toPath)
-        dest
-      }
-    fromLocal.orElse(Try {
-      // chain of deltas (ascending) to replay over the snapshot base
-      var chain = List.empty[(Long, String)]
-      var curV = v
-      var curId = id
-      while (curV > 0 && !snapshots.snapshotExists(curV, Some(curId))) {
-        chain = (curV, curId) :: chain
-        curId = Changelog.readHeaderOnly(snapshots.openDelta(curV, Some(curId)))
-        curV -= 1
-      }
+  /** The v2 commit chain below `(v, id)`: walks the delta lineage headers
+    * back until `stop(version, id)` holds and returns the walked commits
+    * `(stop, v]` ascending, as [[replayDeltas]] takes them, with the ID of
+    * the commit the walk stopped at. */
+  @annotation.tailrec
+  private def lineage(v: Long, id: String, stop: (Long, String) => Boolean,
+      above: List[(Long, Option[String])] = Nil): (List[(Long, Option[String])], String) =
+    if (stop(v, id)) (above, id)
+    else lineage(v - 1, Changelog.readHeaderOnly(snapshots.openDelta(v, Some(id))), stop,
+      (v, Some(id)) :: above)
+
+  /** Recover exactly commit `(v, id)` from the durable files: walk the
+    * delta lineage back to a full snapshot of the chain (or the empty base)
+    * and replay forward. */
+  private def materializeV2(v: Long, id: String): Option[File] =
+    Try {
+      val (chain, baseId) =
+        lineage(v, id, (cv, cid) => cv <= 0 || snapshots.snapshotExists(cv, Some(cid)))
+      val base = v - chain.size
       val dest = freshDir()
-      if (curV > 0) snapshots.download(curV, dest, Some(curId))
-      if (chain.nonEmpty) replayDeltas(dest, chain.map { case (dv, did) => (dv, Some(did)) })
+      if (base > 0) snapshots.download(base, dest, Some(baseId))
+      if (chain.nonEmpty) replayDeltas(dest, chain)
       dest
     }.recoverWith { case e =>
       logWarning(s"Recovery of commit ($v, $id) failed for $stateStoreId_: $e")
@@ -317,56 +318,41 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
         val ok = Try { openDb(d, verifyOnly = true) }.isSuccess
         if (!ok) logWarning(s"Recovered dir for commit ($v, $id) of $stateStoreId_ failed to open; ignoring")
         ok
-      })
-  }
+      }
 
-  /** Try to produce a local dir holding exactly `v`: move the local snapshot
-    * if registered (zero-copy reuse of the previous batch — the reference's
-    * hot-path trick, `:485-498`), else recover from the durable files: the
+  /** Recover a local dir holding exactly `v` from the durable files: the
     * newest full snapshot `s <= v` whose changelog chain `(s, v]` is
     * complete, downloaded and replayed. Every candidate is verified to open
     * before being accepted. */
   private def tryMaterialize(v: Long): Option[File] = {
-    // Local move needs no verify-open: this provider produced the dir itself,
-    // and a registered dir is closed before it moves, so its WAL carries
-    // every write not yet flushed and the reopen replays it; a second open
-    // would double store-open latency on every micro-batch's hot path.
-    val fromLocal = Option(localSnapshots.remove(v)).map(_.dir).filter(_.isDirectory).map { src =>
-      val dest = freshDir()
-      dest.delete()
-      java.nio.file.Files.move(src.toPath, dest.toPath)
-      dest
-    }
-    fromLocal.orElse {
-      val snaps = snapshots.listVersions()
-      val deltas = snapshots.listDeltaVersions().toSet
-      // Base candidates: every full snapshot <= v, newest first, plus the
-      // EMPTY base (version 0) — a young chain legitimately has no full
-      // snapshot at all since the version-1 commit-path snapshot was
-      // retired (the cadence snapshot only lands after minDeltasForSnapshot
-      // commits), and its recovery is a replay of deltas 1..v from empty,
-      // exactly like the v2 lineage walk's v=0 terminal.
-      (snaps.filter(_ <= v).sorted(Ordering.Long.reverse).iterator ++ Iterator.single(0L))
-        .filter(s => ((s + 1) to v).forall(deltas.contains))
-        .flatMap { s =>
-          Try {
-            val dest = freshDir()
-            if (s > 0) snapshots.download(s, dest)
-            if (s < v) replayDeltas(dest, ((s + 1) to v).map(dv => (dv, Option.empty[String])))
-            dest
-          }.recoverWith { case e =>
-            logWarning(s"Recovery of version $v from snapshot $s failed for $stateStoreId_: $e")
-            scala.util.Failure(e)
-          }.toOption
-        }
-        // recovered dirs are verified to open before being accepted
-        .filter { d =>
-          val ok = Try { openDb(d, verifyOnly = true) }.isSuccess
-          if (!ok) logWarning(s"Recovered dir for version $v of $stateStoreId_ failed to open; ignoring")
-          ok
-        }
-        .nextOption()
-    }
+    val snaps = snapshots.listVersions()
+    val deltas = snapshots.listDeltaVersions().toSet
+    // Base candidates: every full snapshot <= v, newest first, plus the
+    // EMPTY base (version 0) — a young chain legitimately has no full
+    // snapshot at all since the version-1 commit-path snapshot was
+    // retired (the cadence snapshot only lands after minDeltasForSnapshot
+    // commits), and its recovery is a replay of deltas 1..v from empty,
+    // exactly like the v2 lineage walk's v=0 terminal.
+    (snaps.filter(_ <= v).sorted(Ordering.Long.reverse).iterator ++ Iterator.single(0L))
+      .filter(s => ((s + 1) to v).forall(deltas.contains))
+      .flatMap { s =>
+        Try {
+          val dest = freshDir()
+          if (s > 0) snapshots.download(s, dest)
+          if (s < v) replayDeltas(dest, ((s + 1) to v).map(dv => (dv, Option.empty[String])))
+          dest
+        }.recoverWith { case e =>
+          logWarning(s"Recovery of version $v from snapshot $s failed for $stateStoreId_: $e")
+          scala.util.Failure(e)
+        }.toOption
+      }
+      // recovered dirs are verified to open before being accepted
+      .filter { d =>
+        val ok = Try { openDb(d, verifyOnly = true) }.isSuccess
+        if (!ok) logWarning(s"Recovered dir for version $v of $stateStoreId_ failed to open; ignoring")
+        ok
+      }
+      .nextOption()
   }
 
   /** Apply the changelog deltas of `chain` (ascending `(version, ckptId)`)
@@ -440,7 +426,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     require(snapshotVersion >= 1, s"snapshotVersion must be >= 1, got $snapshotVersion")
     require(endVersion >= snapshotVersion,
       s"endVersion $endVersion cannot precede snapshotVersion $snapshotVersion")
-    lastOpenStore.filter(_.isFinished).foreach(_.ensureClosed())
+    closeOwners()
     // Under v2 the store's lineage is the commit the replay materialized:
     // a WRITABLE replayed store commits endVersion+1 with this as its
     // lineage header, so the chain walks back through the exact commit the
@@ -454,14 +440,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
             s"No durable commit found for state version $endVersion of $stateStoreId_ " +
               "(checkpoint format v2)"))
         replayedLineage = Some(endId)
-        var chain = List.empty[(Long, Option[String])]
-        var curV = endVersion
-        var curId = endId
-        while (curV > snapshotVersion) {
-          chain = (curV, Some(curId)) :: chain
-          curId = Changelog.readHeaderOnly(snapshots.openDelta(curV, Some(curId)))
-          curV -= 1
-        }
+        val (chain, curId) = lineage(endVersion, endId, (cv, _) => cv <= snapshotVersion)
         startStateStoreCkptId.foreach { sid =>
           if (sid != curId) throw new IllegalStateException(
             s"Snapshot lineage mismatch at version $snapshotVersion of $stateStoreId_: " +
@@ -493,9 +472,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
           replayDeltas(dest, ((snapshotVersion + 1) to endVersion).map(v => (v, Option.empty[String])))
         dest
       }
-    val store = new RocksDbStateStore(endVersion, dir, readOnly, replayedLineage)
-    lastOpenStore = Some(store)
-    store
+    new RocksDbStateStore(endVersion, dir, readOnly, replayedLineage)
   }
 
   /** Change feed over the default column family, decoded straight from the
@@ -533,16 +510,8 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
           throw new IllegalStateException(
             s"No durable commit found for state version $endVersion of $stateStoreId_ " +
               "(checkpoint format v2)"))
-        var acc = List.empty[(Long, Option[String])]
-        var curV = endVersion
-        var curId = endId
-        while (curV >= startVersion) {
-          acc = (curV, Some(curId)) :: acc
-          if (curV > startVersion)
-            curId = Changelog.readHeaderOnly(snapshots.openDelta(curV, Some(curId)))
-          curV -= 1
-        }
-        acc
+        val (chain, startId) = lineage(endVersion, endId, (cv, _) => cv <= startVersion)
+        (startVersion, Some(startId)) :: chain
       }
     val keyCodec = KeyCodec(keyEncoderSpec)
     // Evolution must be looked up under the family actually being decoded:
@@ -633,19 +602,20 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
   override def supportedInstanceMetrics: Seq[StateStoreInstanceMetric] =
     Seq(StateStoreSnapshotLastUploadInstanceMetric())
 
+  /** Snapshots from the registry's open owner, then prunes retired local
+    * dirs; holds no provider lock, so a snapshot upload never blocks a
+    * load (an owner being snapshotted is adopted once the upload ends). */
   override def doMaintenance(): Unit = {
-    if (conf.changelogEnabled) lastOpenStore.foreach(_.snapshotIfDue())
-    val cutoff = snapshots.cleanup(storeConf.minVersionsToRetain)
-    cutoff.foreach { c =>
-      localSnapshots.entrySet().asScala.filter(_.getKey < c).foreach { e =>
-        if (localSnapshots.remove(e.getKey, e.getValue)) deleteRecursively(e.getValue.dir)
+    if (conf.changelogEnabled) localSnapshots.values().asScala.flatMap(_.owner).foreach(_.snapshotIfDue())
+    snapshots.cleanup(storeConf.minVersionsToRetain).foreach { c =>
+      localSnapshots.asScala.foreach { case (v, e) =>
+        if (v < c && localSnapshots.remove(v, e)) dropLocal(e)
       }
     }
   }
 
   override def close(): Unit = {
-    lastOpenStore.foreach(_.ensureClosed())
-    lastOpenStore = None
+    openStores.asScala.foreach(_.ensureClosed())
     localSnapshots.clear()
     if (tempRoot != null) deleteRecursively(tempRoot)
   }
@@ -757,7 +727,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     * with mutator verification (reference `:124-126`). */
   class RocksDbStateStore private[state] (
       override val version: Long,
-      dir: File,
+      private[state] val dir: File,
       private var readOnly: Boolean,
       loadedCkptId: Option[String] = None,
       adoptedDb: Option[OpenDb] = None)
@@ -778,6 +748,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     @volatile private var dbClosed = false
 
     private val opened = adoptedDb.getOrElse { dbOpens.incrementAndGet(); openDb(dir, verifyOnly = false) }
+    openStores.add(this)
     private def db: TtlDB = {
       verify(!dbClosed, "State store RocksDB instance is already closed")
       opened.db
@@ -801,8 +772,6 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     /** Set when the changelog cannot express a change (column family drop):
       * this commit must publish a full snapshot. */
     private var forceFullSnapshot = false
-
-    private[state] def isFinished: Boolean = state != State.Updating
 
     /** Native-handle lifetime contract (round-8 SIGSEGV postmortem — two JVM
       * crashes with heap-corruption signatures traced to freeing the native
@@ -854,6 +823,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     private def retireDb(): Boolean = {
       cachedMetrics = Some(computeMetrics())
       dbClosed = true
+      openStores.remove(this)
       val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
       while (nativeRefs.get() > 0 && System.nanoTime() < deadline) Thread.sleep(5)
       if (nativeRefs.get() > 0) {
@@ -890,11 +860,6 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       else if (retireDb()) Some(opened)
       else None
     }
-
-    /** Is `d` this store's own local dir? (Adoption guard: the registry
-      * entry for the requested version must point at the previous store's
-      * dir for its open handle to view exactly that version.) */
-    private[state] def ownsDir(d: File): Boolean = d == dir
 
     // Concurrent: cfInfo's fast path reads these WITHOUT the store lock
     // (only the auto-registration slow path synchronizes), and the provider
@@ -1422,11 +1387,10 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
         }
         if (fullSnapshotDue) uploadFullSnapshot()
 
-        registerLocalSnapshot(newVersion, dir, commitCkptId)
+        registerLocalSnapshot(newVersion, commitCkptId)
         // Committed only after the durable upload succeeded (the reference
-        // flipped state first — SURVEY §4 defect 5). The DB stays open:
-        // Spark reads iterator()/metrics after commit; the provider closes
-        // it when the next version loads.
+        // flipped state first — SURVEY §4 defect 5). The DB stays open for
+        // Spark's post-commit iterator()/metrics reads (see [[openStores]]).
         state = State.Committed
         if (storeConf.commitValidationEnabled) {
           StateStore.reportCommitToCoordinator(newVersion, stateStoreId_, hadoopConf)
@@ -1496,37 +1460,38 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       }
     }
 
-    // Provider lock first, as loadStore takes it before a store's lock: a
-    // concurrent load must not displace this store between the ownership
-    // check and the registration below.
-    override def release(): Unit = RocksDbStateStoreProvider.this.synchronized {
-      synchronized {
-        if (state == State.Updating) {
-          verify(readOnly, "release() is only valid on a read store; use commit()/abort()")
-          state = State.Released
-          // A read store never wrote: its dir still holds exactly `version`,
-          // so park it for zero-copy reuse by the next load. While this is
-          // the provider's last open store the DB stays OPEN, mirroring
-          // commit(): the next load closes it, or adopts the handle outright
-          // when it loads this same version. A store that a later load
-          // displaced from that slot has no owner left to close it, and its
-          // registered dir may be moved and reopened, so it closes here.
-          if (version > 0) {
-            if (!lastOpenStore.exists(_ eq this)) ensureClosed()
-            registerLocalSnapshot(version, dir, loadedCkptId)
-          } else { ensureClosed(); deleteRecursively(dir) }
-        }
+    override def release(): Unit = synchronized {
+      if (state == State.Updating) {
+        verify(readOnly, "release() is only valid on a read store; use commit()/abort()")
+        state = State.Released
+        // A read store never wrote: its dir still holds exactly `version`,
+        // so it is parked, like a commit's, for the next load to adopt. No
+        // reader is left, so while another store of this provider is open
+        // (and will publish the next version) the handle closes now.
+        if (version > 0) {
+          registerLocalSnapshot(version, loadedCkptId)
+          if (openStores.asScala.exists(_ ne this)) ensureClosed()
+        } else { ensureClosed(); deleteRecursively(dir) }
       }
     }
 
-    private def registerLocalSnapshot(v: Long, d: File, id: Option[String]): Unit = {
-      Option(localSnapshots.put(v, LocalSnapshot(d, id)))
-        .map(_.dir).filter(_ != d).foreach(deleteRecursively)
-      val cutoff = v - math.max(storeConf.minVersionsToRetain, 1) + 1
-      localSnapshots.entrySet().asScala.filter(_.getKey < cutoff).foreach { e =>
-        if (localSnapshots.remove(e.getKey, e.getValue)) deleteRecursively(e.getValue.dir)
+    /** Register this finished store's dir as the local copy of commit
+      * `(v, id)`, owned by this store. Ownership rule: an entry leaves the
+      * registry only with its owner's handle adopted or closed before the
+      * dir moves or is deleted, and only the newest registration's owner
+      * stays open ([[closeOwners]]). Runs under the provider lock (lock
+      * order: store, provider, owner), so two registrations never wait on
+      * each other. */
+    private def registerLocalSnapshot(v: Long, id: Option[String]): Unit =
+      RocksDbStateStoreProvider.this.synchronized {
+        Option(localSnapshots.put(v, LocalSnapshot(dir, id, Some(this))))
+          .filter(_.dir != dir).foreach(dropLocal)
+        val cutoff = v - math.max(storeConf.minVersionsToRetain, 1) + 1
+        localSnapshots.asScala.foreach { case (k, e) =>
+          if (k < cutoff && localSnapshots.remove(k, e)) dropLocal(e)
+        }
+        closeOwners(keep = this)
       }
-    }
 
     @volatile private var cachedMetrics: Option[StateStoreMetrics] = None
 

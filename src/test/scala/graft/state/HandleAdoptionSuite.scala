@@ -105,8 +105,9 @@ class HandleAdoptionSuite extends AnyFunSuite {
       val s1 = provider.getStore(1, None)
       put(s1, "b", 2)
       s1.commit()
-      // re-load version 1 (retry semantics): lastOpenStore holds version 2,
-      // so adoption must not fire; the store must see exactly version 1
+      // re-load version 1 (retry semantics): the registry's open owner holds
+      // version 2, so adoption must not fire; the store must see exactly
+      // version 1
       val retry = provider.getStore(1, None)
       assert(readAll(retry) === Map("a" -> 1))
       put(retry, "c", 3)
@@ -152,8 +153,8 @@ class HandleAdoptionSuite extends AnyFunSuite {
       s1.commit()
       val read1 = provider.getReadStore(1, None)
       assert(readAll(read1) === Map("a" -> 1))
-      // loading another version while read1 is still in use displaces it
-      // from the provider's last-open slot
+      // s2 adopts s1's handle while read1 is still in use; s2 will publish
+      // the next version, so read1's handle is not worth keeping open
       val s2 = provider.getStore(2, None)
       assert(openHandles === 2)
       read1.release()
@@ -167,6 +168,33 @@ class HandleAdoptionSuite extends AnyFunSuite {
       assert(openHandles === 0)
     } finally provider.close()
     assert(provider.dbOpens.get() === provider.dbCloses.get())
+  }
+
+  test("a write store displaced while Updating is adopted, never moved while open") {
+    val ckpt = newCheckpointDir()
+    val provider = newProvider(ckpt)
+    def openHandles: Long = provider.dbOpens.get() - provider.dbCloses.get()
+    try {
+      val s0 = provider.getStore(0, None)
+      put(s0, "a", 1)
+      s0.commit()
+      val w1 = provider.getStore(1, None) // adopts s0's handle
+      val x = provider.getStore(1, None) // a second load of version 1 while w1 is Updating
+      put(w1, "b", 2)
+      assert(w1.commit() === 2)
+      x.abort()
+      // version 2's dir is w1's: the load takes it over with w1's handle;
+      // it must not be moved and reopened while w1 still holds it
+      val s2 = provider.getStore(2, None)
+      assert(openHandles === 1, "only s2 may hold a handle over version 2's files")
+      assert(readAll(s2) === Map("a" -> 1, "b" -> 2))
+      val e = intercept[IllegalStateException](get(w1, "a"))
+      assert(e.getMessage.contains("already closed"))
+      put(s2, "c", 3)
+      s2.commit()
+    } finally provider.close()
+    assert(openHandles === 0, "provider close must leave no RocksDB handle open")
+    assert(getData(ckpt, 3) === Map("a" -> 1, "b" -> 2, "c" -> 3))
   }
 
   test("clean (write-free) commits chain through adoption") {

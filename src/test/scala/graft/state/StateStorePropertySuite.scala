@@ -1,5 +1,8 @@
 package graft.state
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.streaming.state.{ReadStateStore, StateStore}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -142,6 +145,153 @@ class StateStorePropertySuite extends AnyFunSuite {
 
   test("multi-valued store == model Map[String, Vector[Int]] under arbitrary op sequences") {
     samples(Gen.listOfN(50, mOpGen), 10).foreach(runMultiOps)
+  }
+
+  // ------------------- store lifecycle state machine -------------------
+  // Every SPI lifecycle step in random order against one provider, with a
+  // model of each version's content and of every live store's pending
+  // writes. After each step: each live store equals its model, every open
+  // RocksDB handle is a live (Updating) store's or the one open registry
+  // owner's, and no open store's dir has been moved or deleted. A commit
+  // from an older version (a retried batch) forks the chain: the model drops
+  // the versions above it. v1 names a version's files by number, so a store
+  // commits only while its base is still the model's content at its version,
+  // and a fork only while no full snapshot of the old chain sits above its
+  // base (a later load of the new chain would read it).
+
+  sealed trait Step
+  case class Load(write: Boolean, older: Boolean, pick: Int) extends Step
+  case class Write(pick: Int, k: String, v: Option[Int]) extends Step
+  case class Commit(pick: Int) extends Step
+  case class Abort(pick: Int) extends Step
+  case class Release(pick: Int) extends Step
+  case class Upgrade(pick: Int, sameVersion: Boolean) extends Step
+  case object Maintain extends Step
+  case object Restart extends Step
+  case class Tick(secs: Int) extends Step
+
+  private val pickGen = Gen.choose(0, 1000)
+  private val stepGen: Gen[Step] = Gen.frequency(
+    4 -> (for { w <- Gen.oneOf(true, false); o <- Gen.prob(0.3); p <- pickGen } yield Load(w, o, p)),
+    8 -> (for { p <- pickGen; k <- keyGen; v <- Gen.option(Gen.choose(0, 1000)) } yield Write(p, k, v)),
+    3 -> pickGen.map(Commit(_)),
+    1 -> pickGen.map(Abort(_)),
+    2 -> pickGen.map(Release(_)),
+    1 -> (for { p <- pickGen; same <- Gen.oneOf(true, false) } yield Upgrade(p, same)),
+    1 -> Gen.const(Maintain),
+    1 -> Gen.const(Restart),
+    1 -> Gen.choose(1, 4).map(Tick(_)))
+
+  private def runLifecycle(steps: List[Step], ttlSecs: Int): Unit = withFakeClock { clock =>
+    val ckpt = newCheckpointDir()
+    val conf = storeConf(Map(
+      RocksDbConf.STATE_EXPIRY_SECS -> ttlSecs.toString,
+      RocksDbConf.STRICT_EXPIRE -> "true",
+      org.apache.spark.sql.internal.SQLConf.STATE_STORE_MIN_DELTAS_FOR_SNAPSHOT.key -> "2"))
+    type Content = Map[String, (Int, Long)] // key -> (value, last write time)
+    def visible(c: Content): Map[String, Int] = c.collect {
+      case (k, (v, t)) if ttlSecs <= 0 || clock.now - t <= ttlSecs * 1000L => k -> v
+    }
+    case class Live(store: ReadStateStore, write: Boolean, version: Long, base: Content, content: Content)
+
+    var provider = newProvider(ckpt, conf = conf)
+    val versions = scala.collection.mutable.Map(0L -> Map.empty[String, (Int, Long)])
+    var head = 0L
+    var live = Vector.empty[Live]
+    def openHandles: Long = provider.dbOpens.get() - provider.dbCloses.get()
+    // a version the durable files still hold: a full snapshot at or below
+    // it, or the empty base, with every delta above that base
+    def durable(v: Long): Boolean = {
+      val snaps = snapshotFiles(ckpt).toSet
+      val deltas = deltaFiles(ckpt).toSet
+      (0L +: snaps.filter(_ <= v).toSeq).exists(s => (s + 1 to v.toInt).forall(d => deltas(d.toLong)))
+    }
+    def pickFrom(xs: Vector[Live], p: Int): Option[Live] = if (xs.isEmpty) None else Some(xs(p % xs.size))
+    def drop(l: Live): Unit = live = live.filterNot(_ eq l)
+
+    def check(step: Step): Unit = {
+      live.foreach { l =>
+        assert(readAll(l.store) === visible(l.content), s"$step: store at version ${l.version}")
+      }
+      val open = provider.openStores.asScala.toSeq
+      val owners = provider.localSnapshots.values().asScala.flatMap(_.owner).toSeq
+      val finishedOpen = open.filterNot(s => live.exists(_.store eq s))
+      assert(openHandles === open.size, s"$step: a handle is open outside the provider's stores")
+      assert(live.forall(l => open.exists(_ eq l.store)), s"$step: a live store lost its handle")
+      assert(finishedOpen.size <= 1 && finishedOpen.forall(s => owners.exists(_ eq s)),
+        s"$step: a handle is held by a finished store other than the one open registry owner")
+      open.foreach(s => assert(s.dir.isDirectory, s"$step: open store's dir ${s.dir} is gone"))
+    }
+
+    try {
+      steps.foreach { step =>
+        val writes = live.filter(_.write)
+        val reads = live.filterNot(_.write)
+        step match {
+          case Load(write, older, p) if live.size < 3 =>
+            val candidates = if (older) (0L until head).filter(durable) else Seq(head)
+            if (candidates.nonEmpty) {
+              val v = candidates(p % candidates.size)
+              val s = if (write) provider.getStore(v, None) else provider.getReadStore(v, None)
+              live :+= Live(s, write, v, versions(v), versions(v))
+            }
+          case Write(p, k, v) =>
+            pickFrom(writes, p).foreach { l =>
+              val s = l.store.asInstanceOf[StateStore]
+              val next = v match {
+                case Some(x) => put(s, k, x); l.content + (k -> (x, clock.now))
+                case None => remove(s, k); l.content - k
+              }
+              live = live.map(x => if (x eq l) x.copy(content = next) else x)
+            }
+          case Commit(p) =>
+            val committable = writes.filter(l => versions.get(l.version).contains(l.base) &&
+              (l.version == head || snapshotFiles(ckpt).forall(_ <= l.version)))
+            pickFrom(committable, p).foreach { l =>
+              head = l.version + 1
+              assert(l.store.asInstanceOf[StateStore].commit() === head)
+              versions.filterInPlace((v, _) => v < head)
+              versions(head) = l.content
+              drop(l)
+              assert(readAll(l.store) === visible(l.content), "post-commit reads stay valid")
+            }
+          case Abort(p) => pickFrom(live, p).foreach { l => l.store.abort(); drop(l) }
+          case Release(p) => pickFrom(reads, p).foreach { l => l.store.release(); drop(l) }
+          case Upgrade(p, same) =>
+            pickFrom(reads, p).foreach { l =>
+              val v = if (same || !durable(head)) l.version else head
+              val s = provider.upgradeReadStoreToWriteStore(l.store, v, None)
+              drop(l)
+              live :+= (if (v == l.version) l.copy(store = s, write = true)
+                else Live(s, write = true, v, versions(v), versions(v)))
+            }
+          case Maintain => provider.doMaintenance()
+          case Restart =>
+            provider.close()
+            assert(openHandles === 0, "provider close leaves no handle open")
+            live = Vector.empty
+            provider = newProvider(ckpt, conf = conf)
+          case Tick(secs) => clock.advanceSecs(secs)
+          case _ =>
+        }
+        check(step)
+      }
+    } finally provider.close()
+    assert(openHandles === 0, "provider close leaves no handle open")
+    // durability: a fresh provider recovers the newest version
+    val fresh = newProvider(ckpt, conf = conf)
+    try {
+      val s = fresh.getStore(head, None)
+      try assert(readAll(s) === visible(versions(head))) finally s.abort()
+    } finally fresh.close()
+  }
+
+  test("store lifecycle state machine: model state, one owner per open handle, live dirs") {
+    samples(Gen.listOfN(80, stepGen), 16).foreach(runLifecycle(_, ttlSecs = -1))
+  }
+
+  test("store lifecycle state machine under strict TTL with a fake clock") {
+    samples(Gen.listOfN(80, stepGen), 10).foreach(runLifecycle(_, ttlSecs = 5))
   }
 
   test("range codec is order-preserving for arbitrary longs") {
