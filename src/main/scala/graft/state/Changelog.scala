@@ -145,8 +145,4 @@ object Changelog {
     }
     d.readUTF()
   }
-
-  /** Read just the lineage header of a delta stream, closing it. */
-  def readHeaderOnly(in: InputStream): String =
-    try readHeader(in) finally in.close()
 }

@@ -33,7 +33,6 @@ final case class RocksDbConf(
     backgroundJobs: Int,
     trackTotalNumberOfRows: Boolean,
     changelogEnabled: Boolean,
-    incrementalSnapshot: Boolean,
     queryName: String)
 
 object RocksDbConf extends Logging {
@@ -49,16 +48,13 @@ object RocksDbConf extends Logging {
     * [[SharedRocksMemory]]. */
   val TOTAL_MEMORY_MB: String = s"$PREFIX.rocksdb.totalMemoryMb"
   val TRACK_TOTAL_ROWS: String = s"$PREFIX.rocksdb.trackTotalNumberOfRows"
-  /** Changelog checkpointing (default on): commits upload only the batch's
-    * writes, with a full snapshot every `minDeltasForSnapshot` versions;
-    * `false` restores the reference's full-snapshot-per-commit behavior. */
+  /** Changelog checkpointing (default on): each commit uploads a delta of
+    * the batch's writes, and the maintenance thread adds a snapshot every
+    * `minDeltasForSnapshot` versions; `false` restores the reference's
+    * snapshot-per-commit behavior. Either way snapshots keep their SSTs in
+    * a content-addressed pool, so a snapshot uploads only the SSTs that
+    * changed. See [[SnapshotManager]]. */
   val CHANGELOG: String = s"$PREFIX.changelogCheckpointing"
-  /** Incremental (SST-skip) cadence snapshots (default on): immutable .sst
-    * files upload once to a content-addressed pool and later snapshots ship
-    * only references, bounding the cadence upload to the bytes that
-    * actually changed; `false` restores self-contained full zips. Both
-    * formats restore transparently. See [[SnapshotManager]]. */
-  val INCREMENTAL_SNAPSHOT: String = s"$PREFIX.incrementalSnapshot"
   val UNNAMED_QUERY = "UNNAMED_QUERY"
 
   def apply(storeConf: StateStoreConf, checkpointRootLocation: String): RocksDbConf = {
@@ -81,7 +77,6 @@ object RocksDbConf extends Logging {
       backgroundJobs = confs.get(BACKGROUND_JOBS).map(parseInt(BACKGROUND_JOBS, _)).getOrElse(10),
       trackTotalNumberOfRows = confs.get(TRACK_TOTAL_ROWS).forall(parseBool(TRACK_TOTAL_ROWS, _)),
       changelogEnabled = confs.get(CHANGELOG).forall(parseBool(CHANGELOG, _)),
-      incrementalSnapshot = confs.get(INCREMENTAL_SNAPSHOT).forall(parseBool(INCREMENTAL_SNAPSHOT, _)),
       queryName = queryName)
   }
 

@@ -27,12 +27,16 @@ import org.rocksdb._
   *    holding `UnsafeRow -> UnsafeRow` pairs as raw bytes (reference
   *    `:152-162, :258-264`), multi-versioned per micro-batch: version `v` is
   *    loaded, updated, and committed as `v+1` (reference `:118, :196-217`).
-  *  - Durability = one zip snapshot of the DB directory per committed version
-  *    under the store's checkpoint dir (reference `:448-462`), with the
-  *    previous batch's local directory moved — not re-downloaded — on the
-  *    next load (reference `:299-304, :485-498`), newest-first fallback past
-  *    corrupt snapshots (reference `:384-401`) and retention-bounded cleanup
-  *    on the maintenance thread (reference `:573-592`).
+  *  - Durability = a changelog delta per committed version plus a snapshot
+  *    of the DB directory every `minDeltasForSnapshot` versions, taken on the
+  *    maintenance thread (the reference zipped the whole DB on every commit,
+  *    `:448-462`); [[SnapshotManager]] owns that layout and the rule for
+  *    rebuilding a version from it. The previous batch's local directory is
+  *    reused — not re-downloaded — on the next load (reference `:299-304,
+  *    :485-498`); recovery falls back newest-first past corrupt files
+  *    (reference `:384-401`) under checkpoint format v1 and is exact-or-fail
+  *    under v2; retention-bounded cleanup runs on the maintenance thread
+  *    (reference `:573-592`).
   *  - Per-key processing-time TTL, the reference's one novel feature
   *    (`:71-94`): `-1` infinite, `0` stateless, `N>0` seconds since
   *    creation/last-update/last-access; lazy mode rides RocksDB's TtlDB
@@ -154,7 +158,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     this.tempRoot = graft.Staging.tempDir(
       s"graft-state-${stateStoreId.operatorId}-${stateStoreId.partitionId}-").toFile
     snapshots.ensureBaseDir()
-    newestFullSnapshot = snapshots.listVersions().maxOption.getOrElse(0L)
+    newestFullSnapshot = snapshots.listing().snapshots.map(_._1).maxOption.getOrElse(0L)
   }
 
   override def stateStoreId: StateStoreId = stateStoreId_
@@ -220,17 +224,15 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
               "(checkpoint format v2)"))
           // v2 is exact-or-fail: silently substituting an older version would
           // defeat the lineage contract.
-          takeLocal(version, resolvedId).getOrElse((materializeV2(version, id).getOrElse(
+          takeLocal(version, resolvedId).getOrElse((rebuild((version, resolvedId)).getOrElse(
             throw new IllegalStateException(
               s"Cannot materialize state version $version (commit $id) of $stateStoreId_: " +
                 "snapshot or changelog chain missing or unreadable")), None))
         } else {
-          def load(v: Long) = takeLocal(v, None).orElse(tryMaterialize(v).map(d => (d, None)))
+          def load(v: Long) = takeLocal(v, None).orElse(rebuild((v, None)).map(d => (d, None)))
           load(version).getOrElse {
-            val candidates =
-              (snapshots.listVersions() ++ snapshots.listDeltaVersions() ++
-                localSnapshots.keySet().asScala)
-              .filter(v => v < version && v > 0).distinct.sorted(Ordering.Long.reverse)
+            val candidates = (snapshots.listing().versions ++ localSnapshots.keySet().asScala)
+              .filter(v => v < version && v > 0).toSeq.sorted(Ordering.Long.reverse)
             logWarning(s"State version $version of $stateStoreId_ is missing or unreadable; " +
               s"falling back (candidates: ${candidates.mkString(",")})")
             candidates.iterator.flatMap(load).nextOption().getOrElse {
@@ -284,88 +286,51 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     * from what is visible (local registry first, then durable files). */
   private def resolveIdByVersion(version: Long): Option[String] =
     Option(localSnapshots.get(version)).flatMap(_.ckptId)
-      .orElse((snapshots.idsAt(version, snapshot = true) ++
-        snapshots.idsAt(version, snapshot = false)).maxOption)
+      .orElse(snapshots.listing().idsAt(version).maxOption)
 
-  /** The v2 commit chain below `(v, id)`: walks the delta lineage headers
-    * back until `stop(version, id)` holds and returns the walked commits
-    * `(stop, v]` ascending, as [[replayDeltas]] takes them, with the ID of
-    * the commit the walk stopped at. */
-  @annotation.tailrec
-  private def lineage(v: Long, id: String, stop: (Long, String) => Boolean,
-      above: List[(Long, Option[String])] = Nil): (List[(Long, Option[String])], String) =
-    if (stop(v, id)) (above, id)
-    else lineage(v - 1, Changelog.readHeaderOnly(snapshots.openDelta(v, Some(id))), stop,
-      (v, Some(id)) :: above)
+  /** Recover commit `top` from the durable files: the first chain of
+    * [[SnapshotManager.chains]] (newest base first) that materializes. */
+  private def rebuild(top: SnapshotManager.Commit): Option[File] = {
+    val files = snapshots.listing()
+    try snapshots.chains(top, files.snapshots, files).flatMap { chain =>
+      try Some(materialize(chain))
+      catch {
+        case NonFatal(e) =>
+          logWarning(s"Recovery of $top from base ${chain.base} failed for $stateStoreId_: $e")
+          None
+      }
+    }.nextOption()
+    catch {
+      case NonFatal(e) =>
+        logWarning(s"No recovery chain for $top of $stateStoreId_: $e")
+        None
+    }
+  }
 
-  /** Recover exactly commit `(v, id)` from the durable files: walk the
-    * delta lineage back to a full snapshot of the chain (or the empty base)
-    * and replay forward. */
-  private def materializeV2(v: Long, id: String): Option[File] =
-    Try {
-      val (chain, baseId) =
-        lineage(v, id, (cv, cid) => cv <= 0 || snapshots.snapshotExists(cv, Some(cid)))
-      val base = v - chain.size
-      val dest = freshDir()
-      if (base > 0) snapshots.download(base, dest, Some(baseId))
-      if (chain.nonEmpty) replayDeltas(dest, chain)
+  /** Download `chain`'s base snapshot (none for the empty store), replay
+    * its deltas and check the result opens: the one way every recovery
+    * entry point builds a dir. */
+  private def materialize(chain: SnapshotManager.Chain): File = {
+    val dest = freshDir()
+    try {
+      val (base, baseId) = chain.base
+      if (base > 0) snapshots.download(base, dest, baseId)
+      if (chain.deltas.nonEmpty) replayDeltas(dest, chain.deltas)
+      openDb(dest, verifyOnly = true)
       dest
-    }.recoverWith { case e =>
-      logWarning(s"Recovery of commit ($v, $id) failed for $stateStoreId_: $e")
-      scala.util.Failure(e)
-    }.toOption
-      .filter { d =>
-        val ok = Try { openDb(d, verifyOnly = true) }.isSuccess
-        if (!ok) logWarning(s"Recovered dir for commit ($v, $id) of $stateStoreId_ failed to open; ignoring")
-        ok
-      }
-
-  /** Recover a local dir holding exactly `v` from the durable files: the
-    * newest full snapshot `s <= v` whose changelog chain `(s, v]` is
-    * complete, downloaded and replayed. Every candidate is verified to open
-    * before being accepted. */
-  private def tryMaterialize(v: Long): Option[File] = {
-    val snaps = snapshots.listVersions()
-    val deltas = snapshots.listDeltaVersions().toSet
-    // Base candidates: every full snapshot <= v, newest first, plus the
-    // EMPTY base (version 0) — a young chain legitimately has no full
-    // snapshot at all since the version-1 commit-path snapshot was
-    // retired (the cadence snapshot only lands after minDeltasForSnapshot
-    // commits), and its recovery is a replay of deltas 1..v from empty,
-    // exactly like the v2 lineage walk's v=0 terminal.
-    (snaps.filter(_ <= v).sorted(Ordering.Long.reverse).iterator ++ Iterator.single(0L))
-      .filter(s => ((s + 1) to v).forall(deltas.contains))
-      .flatMap { s =>
-        Try {
-          val dest = freshDir()
-          if (s > 0) snapshots.download(s, dest)
-          if (s < v) replayDeltas(dest, ((s + 1) to v).map(dv => (dv, Option.empty[String])))
-          dest
-        }.recoverWith { case e =>
-          logWarning(s"Recovery of version $v from snapshot $s failed for $stateStoreId_: $e")
-          scala.util.Failure(e)
-        }.toOption
-      }
-      // recovered dirs are verified to open before being accepted
-      .filter { d =>
-        val ok = Try { openDb(d, verifyOnly = true) }.isSuccess
-        if (!ok) logWarning(s"Recovered dir for version $v of $stateStoreId_ failed to open; ignoring")
-        ok
-      }
-      .nextOption()
+    } catch {
+      case NonFatal(e) => deleteRecursively(dest); throw e
+    }
   }
 
   /** Apply the changelog deltas of `chain` (ascending `(version, ckptId)`)
     * to the DB at `dir` (byte-level — no key/value codecs), then flush so
-    * the dir is self-contained. v2 entries carry an ID: their lineage
-    * header is consumed before the record stream. */
+    * the dir is self-contained. */
   private def replayDeltas(dir: File, chain: Seq[(Long, Option[String])]): Unit = {
     val opened = openDb(dir, verifyOnly = false)
     try {
       chain.foreach { case (dv, did) =>
-        val in = snapshots.openDelta(dv, did)
-        if (did.isDefined) Changelog.readHeader(in)
-        Changelog.read(in).foreach { r =>
+        Changelog.read(snapshots.openDelta(dv, did)).foreach { r =>
           val h = opened.handles.getOrElseUpdate(r.cf, {
             opened.db.createColumnFamilyWithTtl(
               new ColumnFamilyDescriptor(r.cf.getBytes("UTF-8"), cfOptions()), compactionTtlFor(r.cf))
@@ -388,8 +353,8 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     * key/value pairs of the newest committed version, materialized through a
     * throwaway read store so the returned iterator outlives it. */
   private[state] def latestIterator(): Iterator[UnsafeRowPair] = {
-    val latest = (snapshots.listVersions() ++ snapshots.listDeltaVersions() ++
-      localSnapshots.keySet().asScala).maxOption.getOrElse(0L)
+    val latest = (snapshots.listing().versions ++ localSnapshots.keySet().asScala)
+      .maxOption.getOrElse(0L)
     if (latest == 0L) return Iterator.empty
     val store = loadStore(latest, readOnly = true)
     try {
@@ -432,48 +397,40 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     // lineage header, so the chain walks back through the exact commit the
     // caller replayed — `None` here would break lineage recovery of any
     // commit built on top of a replay (round-7 ADVICE carryover).
-    var replayedLineage: Option[String] = None
-    val dir =
-      if (ckptIdsEnabled) {
-        val endId = endStateStoreCkptId.orElse(resolveIdByVersion(endVersion)).getOrElse(
-          throw new IllegalStateException(
-            s"No durable commit found for state version $endVersion of $stateStoreId_ " +
-              "(checkpoint format v2)"))
-        replayedLineage = Some(endId)
-        val (chain, curId) = lineage(endVersion, endId, (cv, _) => cv <= snapshotVersion)
-        startStateStoreCkptId.foreach { sid =>
-          if (sid != curId) throw new IllegalStateException(
-            s"Snapshot lineage mismatch at version $snapshotVersion of $stateStoreId_: " +
-              s"the chain below commit ($endVersion, $endId) passes through commit $curId, " +
-              s"not the requested $sid")
-        }
-        if (!snapshots.snapshotExists(snapshotVersion, Some(curId)))
-          throw new IllegalStateException(
-            s"No full snapshot at state version $snapshotVersion (commit $curId) of " +
-              s"$stateStoreId_ — snapshotStartBatchId must name an existing snapshot")
-        val dest = freshDir()
-        snapshots.download(snapshotVersion, dest, Some(curId))
-        if (chain.nonEmpty) replayDeltas(dest, chain)
-        dest
-      } else {
-        if (!snapshots.snapshotExists(snapshotVersion, None))
-          throw new IllegalStateException(
-            s"No full snapshot at state version $snapshotVersion of $stateStoreId_ — " +
-              "snapshotStartBatchId must name an existing snapshot")
-        val deltas = snapshots.listDeltaVersions().toSet
-        val missing = ((snapshotVersion + 1) to endVersion).filterNot(deltas.contains)
-        if (missing.nonEmpty) throw new IllegalStateException(
-          s"Cannot replay versions (${snapshotVersion + 1}, $endVersion] of $stateStoreId_: " +
-            s"changelog files missing for ${missing.mkString(",")} " +
-            "(was changelog checkpointing disabled?)")
-        val dest = freshDir()
-        snapshots.download(snapshotVersion, dest)
-        if (endVersion > snapshotVersion)
-          replayDeltas(dest, ((snapshotVersion + 1) to endVersion).map(v => (v, Option.empty[String])))
-        dest
-      }
-    new RocksDbStateStore(endVersion, dir, readOnly, replayedLineage)
+    val top = (endVersion, endCommitId(endVersion, endStateStoreCkptId))
+    val files = snapshots.listing()
+    val chain = chainDownTo(top, snapshotVersion, files)
+    val start = chain.base
+    startStateStoreCkptId.filter(_ => ckptIdsEnabled).foreach { sid =>
+      if (!start._2.contains(sid)) throw new IllegalStateException(
+        s"Snapshot lineage mismatch at version $snapshotVersion of $stateStoreId_: " +
+          s"the chain below commit $top passes through commit ${start._2.getOrElse("")}, " +
+          s"not the requested $sid")
+    }
+    if (!files.snapshots(start)) throw new IllegalStateException(
+      s"No full snapshot at state version $snapshotVersion (commit ${start._2.getOrElse("-")}) " +
+        s"of $stateStoreId_ — snapshotStartBatchId must name an existing snapshot")
+    new RocksDbStateStore(endVersion, materialize(chain), readOnly, top._2)
   }
+
+  /** Under v2 the commit ID a fine-grained read of `version` starts from:
+    * the caller's, else the one visible for that version. */
+  private def endCommitId(version: Long, given: Option[String]): Option[String] =
+    if (!ckptIdsEnabled) None
+    else Some(given.orElse(resolveIdByVersion(version)).getOrElse(throw new IllegalStateException(
+      s"No durable commit found for state version $version of $stateStoreId_ " +
+        "(checkpoint format v2)")))
+
+  /** The chain from commit `top` down to version `start`, whatever lies
+    * there: the walk a fine-grained read follows. */
+  private def chainDownTo(top: SnapshotManager.Commit, start: Long,
+      files: SnapshotManager.Listing): SnapshotManager.Chain =
+    try snapshots.chains(top, _._1 == start, files).next()
+    catch {
+      case NonFatal(e) => throw new IllegalStateException(
+        s"Cannot walk the changelog chain from $top down to version $start of $stateStoreId_: " +
+          s"${e.getMessage} (was changelog checkpointing disabled?)", e)
+    }
 
   /** Change feed over the default column family, decoded straight from the
     * changelog deltas — one record per (put | remove) as committed, stamped
@@ -501,18 +458,9 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
         "this checkpoint was written with full snapshots only")
     require(startVersion >= 1 && endVersion >= startVersion,
       s"invalid change feed range [$startVersion, $endVersion]")
-    // v2: per-version commit IDs recovered by walking lineage headers back
-    // from the end of the range; v1: version numbers alone name the files.
-    val versionIds: Seq[(Long, Option[String])] =
-      if (!ckptIdsEnabled) (startVersion to endVersion).map(v => (v, Option.empty[String]))
-      else {
-        val endId = endStateStoreCkptId.orElse(resolveIdByVersion(endVersion)).getOrElse(
-          throw new IllegalStateException(
-            s"No durable commit found for state version $endVersion of $stateStoreId_ " +
-              "(checkpoint format v2)"))
-        val (chain, startId) = lineage(endVersion, endId, (cv, _) => cv <= startVersion)
-        (startVersion, Some(startId)) :: chain
-      }
+    val chain = chainDownTo((endVersion, endCommitId(endVersion, endStateStoreCkptId)),
+      startVersion, snapshots.listing())
+    val versionIds = chain.base :: chain.deltas
     val keyCodec = KeyCodec(keyEncoderSpec)
     // Evolution must be looked up under the family actually being decoded:
     // a named transformWithState variable's rows carry the 2-byte schema-ID
@@ -557,7 +505,6 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
           val (v, id) = remaining.next()
           curVersion = v
           curStream = snapshots.openDelta(v, id)
-          if (id.isDefined) Changelog.readHeader(curStream)
           // Internal families (TTL deadlines, meta counters) are commit
           // bookkeeping, not user state changes — EXCEPT the persisted key
           // schema of the requested family, which is validated against the
@@ -1405,9 +1352,9 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     /** Full snapshot on the commit path only when unavoidable: changelog
       * off (the reference's per-commit behavior) or a CF drop. Version 1
       * is NOT special-cased any more (round 16): a changelog chain replays
-      * from the EMPTY base (version 0) in every recovery path — v2 lineage
-      * walks stop at v=0, v1 [[tryMaterialize]] falls back to
-      * replay-from-empty, and StateFsck counts 0 as a legitimate base — so
+      * from the EMPTY base (version 0) in every recovery path — the chain
+      * walk of [[SnapshotManager.chains]], which the provider and StateFsck
+      * share, ends at version 0 — so
       * the version-1 full snapshot bought nothing while charging every
       * streaming query's first batch a per-store Checkpoint+zip+upload
       * (measured: batch-0 state commit 580-670 ms summed vs ~100 ms steady
@@ -1439,8 +1386,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       val ckpt = Checkpoint.create(db)
       try {
         ckpt.createCheckpoint(ckptDir.getAbsolutePath)
-        snapshots.upload(ckptDir, newVersion, commitCkptId,
-          incremental = conf.incrementalSnapshot)
+        snapshots.upload(ckptDir, newVersion, commitCkptId)
         newestFullSnapshot = math.max(newestFullSnapshot, newVersion)
       } finally {
         Try(ckpt.close())

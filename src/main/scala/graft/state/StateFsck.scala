@@ -1,7 +1,5 @@
 package graft.state
 
-import java.util.zip.{ZipEntry, ZipInputStream}
-
 import scala.util.Try
 
 import org.apache.hadoop.conf.Configuration
@@ -29,12 +27,12 @@ import org.apache.spark.util.SerializableConfiguration
   *
   *  1. **recovery coverage** — the last committed batch's state version is
   *     reconstructible: a full snapshot at the version, or a snapshot base
-  *     plus an unbroken changelog chain up to it (v1 by version arithmetic;
-  *     v2 by walking each delta's lineage header exactly like the
-  *     provider's `materializeV2`);
+  *     plus an unbroken changelog chain up to it, found by the chain walk
+  *     the provider's recovery runs ([[SnapshotManager.chains]]: v1 by
+  *     version number, v2 by each delta's lineage header);
   *  2. **snapshot soundness** — every retained snapshot zip streams
-  *     end-to-end (CRC-checked by the zip reader), and every pool SST an
-  *     incremental manifest references exists with the byte length its
+  *     end-to-end (CRC-checked by the zip reader), and every pool SST its
+  *     manifest references exists with the byte length its
   *     content-address name promises;
   *  3. **chain soundness** — every changelog on the recovery chain parses
   *     record-by-record to EOF (truncation/corruption fails the frame
@@ -120,7 +118,7 @@ object StateFsck extends Logging {
     require(commits.nonEmpty, s"no committed batches under $ckptDir/commits — nothing to verify")
     val required = commits.max + 1
 
-    val stores = listStores(fs, new Path(root, "state"))
+    val stores = SnapshotManager.listStores(fs, new Path(root, "state"))
     require(stores.nonEmpty, s"no state stores under $ckptDir/state")
 
     val serConf = new SerializableConfiguration(hadoopConf)
@@ -142,36 +140,9 @@ object StateFsck extends Logging {
     else fs.listStatus(dir).toSeq.map(_.getPath.getName)
       .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
 
-  /** Every directory holding `state.snapshot.*` / `state.delta.*` files:
-    * `state/<op>/<part>` itself (single-store operators) and its named
-    * subdirectories (join stores), excluding the SST pool and metadata. */
-  private[state] def listStores(fs: FileSystem, stateRoot: Path): Seq[(Long, Int, String, String)] = {
-    if (!fs.exists(stateRoot)) return Nil
-    def hasStateFiles(d: Path): Boolean =
-      Try(fs.listStatus(d).exists { st =>
-        val n = st.getPath.getName
-        n.startsWith("state.snapshot.") || n.startsWith("state.delta.")
-      }).getOrElse(false)
-    for {
-      opSt <- fs.listStatus(stateRoot).toSeq
-      if opSt.isDirectory && opSt.getPath.getName.forall(_.isDigit)
-      op = opSt.getPath.getName.toLong
-      partSt <- fs.listStatus(opSt.getPath).toSeq
-      if partSt.isDirectory && partSt.getPath.getName.forall(_.isDigit)
-      part = partSt.getPath.getName.toInt
-      (name, dir) <- {
-        val direct =
-          if (hasStateFiles(partSt.getPath)) Seq(("default", partSt.getPath.toString)) else Nil
-        val named = fs.listStatus(partSt.getPath).toSeq.filter { st =>
-          st.isDirectory && !st.getPath.getName.startsWith("_") &&
-            st.getPath.getName != "sst" && hasStateFiles(st.getPath)
-        }.map(st => (st.getPath.getName, st.getPath.toString))
-        direct ++ named
-      }
-    } yield (op, part, name, dir)
-  }
-
-  /** Verify one store directory (runs on an executor). */
+  /** Verify one store directory (runs on an executor). Each counter is
+    * bumped where its problem is recorded, never re-derived from the
+    * wording of `issues`. */
   private def verifyStore(
       hadoopConf: Configuration,
       baseDir: Path,
@@ -180,105 +151,70 @@ object StateFsck extends Logging {
       name: String,
       required: Long,
       deep: Boolean = false): StoreReport = {
-    val fs = baseDir.getFileSystem(hadoopConf)
     val mgr = new SnapshotManager(baseDir, hadoopConf)
-    val snaps = mgr.listVersions().distinct.sorted
-    val deltas = mgr.listDeltaVersions().distinct.sorted
+    val files = mgr.listing()
     val issues = scala.collection.mutable.ArrayBuffer.empty[String]
+    var zipErrors, missingRefs, badSizes, deltaErrors = 0
 
     // v2 checkpoints suffix every durable name with the commit id
-    val v2 = (mgr.idsAt(required, snapshot = true) ++
-      mgr.idsAt(required, snapshot = false)).nonEmpty &&
-      !mgr.snapshotExists(required, None) && !deltaExistsPlain(fs, baseDir, required)
+    val plain = (required, Option.empty[String])
+    val ids = files.idsAt(required)
+    val top = if (ids.nonEmpty && !files.snapshots(plain) && !files.deltas(plain))
+      (required, Some(ids.max)) else plain
 
-    // ---- 1. recovery coverage + the chain to full-read
-    var covered = false
-    var chainLength = 0
-    var chainDeltas: Seq[(Long, Option[String])] = Nil
-    // refs already extracted by the verify pass, keyed by snapshot file
-    // name — the orphan step reuses them instead of re-streaming the zips.
-    // Snapshot unreadability is tracked as an EXPLICIT flag (not sniffed
-    // back out of issue-message wording): any zip that failed to stream
-    // makes this store's pool references unknown, which suppresses orphan
-    // counting below.
-    val refsSeen = scala.collection.mutable.HashMap.empty[String, SnapshotScan]
-    var snapshotUnreadable = false
-    def scanZip(v: Long, id: Option[String]): SnapshotScan = {
-      val scan = verifySnapshotZip(fs, mgr, baseDir, v, id, issues, deep)
-      if (!scan.readOk) snapshotUnreadable = true
-      scan
+    // ---- 1. recovery coverage: the provider's own chain walk, newest base
+    val chain = Try(mgr.chains(top, files.snapshots, files).next())
+    chain.failed.foreach { e =>
+      issues += (top._2 match {
+        case Some(id) => s"v2 lineage walk from ($required, $id) broke: ${e.getMessage}"
+        case None => s"version $required unrecoverable: snapshots at " +
+          s"[${files.snapshots.map(_._1).toSeq.sorted.mkString(",")}], " +
+          s"deltas at [${files.deltas.map(_._1).toSeq.sorted.mkString(",")}]"
+      })
     }
-    if (v2) {
-      val startId = (mgr.idsAt(required, snapshot = true) ++
-        mgr.idsAt(required, snapshot = false)).max
-      val walk = Try {
-        var chain = List.empty[(Long, Option[String])]
-        var v = required
-        var id = startId
-        while (v > 0 && !mgr.snapshotExists(v, Some(id))) {
-          chain = (v, Some(id): Option[String]) :: chain
-          id = Changelog.readHeaderOnly(mgr.openDelta(v, Some(id)))
-          v -= 1
+
+    // ---- 2. every retained snapshot zip streams clean, and each pool SST
+    // its manifest references exists with the length its name promises.
+    // A zip that cannot stream leaves the store's pool references unknown.
+    def checkPoolRef(remote: String, zip: String): Unit = mgr.poolStatus(remote) match {
+      case None =>
+        missingRefs += 1
+        issues += s"pool ref missing: $remote (snapshot $zip)"
+      case Some(st) =>
+        SnapshotManager.parsePoolName(remote).foreach { case (md5, len) =>
+          val problem =
+            if (len != st.getLen) Some(s"pool ref size mismatch: $remote is ${st.getLen} B, name promises $len B")
+            else if (!deep) None
+            else Try(mgr.poolMd5(remote)) match {
+              case scala.util.Failure(e) => Some(s"pool ref corrupt: $remote unreadable: ${e.getMessage}")
+              case scala.util.Success(got) if got != md5 =>
+                Some(s"pool ref corrupt: $remote content md5 $got, name promises $md5")
+              case _ => None
+            }
+          problem.foreach { p => badSizes += 1; issues += p }
         }
-        (v, id, chain)
-      }
-      walk match {
-        case scala.util.Success((baseV, baseId, chain)) =>
-          covered = true
-          chainLength = chain.size
-          chainDeltas = chain
-          if (baseV > 0) {
-            refsSeen(mgr.snapshotFile(baseV, Some(baseId)).getName) =
-              scanZip(baseV, Some(baseId))
-          }
+    }
+
+    var refsKnown = true
+    val referenced = files.snapshots.toSeq.sortBy(_._1).flatMap { case (v, id) =>
+      val zip = mgr.snapshotFile(v, id).getName
+      Try(mgr.manifest(v, id)()) match {
+        case scala.util.Success(refs) =>
+          refs.foreach { case (_, remote) => checkPoolRef(remote, zip) }
+          refs.map(_._2)
         case scala.util.Failure(e) =>
-          issues += s"v2 lineage walk from ($required, $startId) broke: ${e.getMessage}"
+          zipErrors += 1
+          refsKnown = false
+          issues += s"snapshot $zip unreadable: ${e.getMessage}"
+          Nil
       }
-    } else {
-      val deltaSet = deltas.toSet
-      val bases = (snaps.filter(_ <= required) :+ 0L).distinct.sorted(Ordering.Long.reverse)
-      val base = bases.find(s => s == required || ((s + 1) to required).forall(deltaSet.contains))
-      base match {
-        case Some(s) =>
-          covered = true
-          chainLength = (required - s).toInt
-          chainDeltas = ((s + 1) to required).map(v => (v, None: Option[String]))
-          if (s > 0) {
-            refsSeen(mgr.snapshotFile(s, None).getName) = scanZip(s, None)
-          }
-        case None =>
-          issues += s"version $required unrecoverable: snapshots at " +
-            s"[${snaps.mkString(",")}], deltas at [${deltas.mkString(",")}]"
-      }
-    }
-
-    // ---- 2. every OTHER retained snapshot zip streams clean too. v1:
-    // version-named zips off the chain; v2: every (version, id) sibling —
-    // including non-recovery-path siblings, which would otherwise only
-    // surface as misleading orphan counts when corrupt.
-    if (v2) {
-      snaps.filter(_ != 0).foreach { s =>
-        mgr.idsAt(s, snapshot = true).foreach { id =>
-          val n = mgr.snapshotFile(s, Some(id)).getName
-          if (!refsSeen.contains(n)) {
-            refsSeen(n) = scanZip(s, Some(id))
-          }
-        }
-      }
-    } else {
-      snaps.filter(s => covered && s != 0 && !chainTouches(s, chainDeltas, required))
-        .foreach { s =>
-          refsSeen(mgr.snapshotFile(s, None).getName) = scanZip(s, None)
-        }
-    }
+    }.toSet
 
     // ---- 3. full-read the recovery chain's changelogs
-    var deltaErrors = 0
-    chainDeltas.foreach { case (v, id) =>
+    chain.foreach(_.deltas.foreach { case (v, id) =>
       Try {
         val in = mgr.openDelta(v, id)
         try {
-          if (id.isDefined) Changelog.readHeader(in) // v1 deltas are headerless
           val it = Changelog.read(in)
           while (it.hasNext) it.next()
         } finally Try(in.close())
@@ -286,155 +222,14 @@ object StateFsck extends Logging {
         deltaErrors += 1
         issues += s"changelog $v${id.fold("")("_" + _)} unreadable: ${e.getMessage}"
       }
-    }
+    })
 
     // ---- 4. orphan accounting: pool SSTs no retained snapshot references
-    val poolDir = new Path(baseDir, "sst")
-    val poolFiles = Try(fs.listStatus(poolDir).toSeq
-      .filter(_.getPath.getName.endsWith(".sst"))).getOrElse(Nil)
-    val (orphanN, orphanB) =
-      if (poolFiles.isEmpty) (0, 0L)
-      else {
-        // a zip that cannot stream has UNKNOWN references: record the issue
-        // (it fails `clean` as a zipError) and suppress orphan counts for
-        // the whole store rather than report its pool files as orphans
-        var refsUnknown = false
-        val referenced = Try(fs.listStatus(baseDir).toSeq
-          .map(_.getPath.getName).filter(_.startsWith("state.snapshot.")))
-          .getOrElse(Nil)
-          .flatMap { n =>
-            refsSeen.get(n).map(_.refs).getOrElse {
-              Try(refsOfZip(fs, new Path(baseDir, n))).recoverWith { case e =>
-                refsUnknown = true
-                issues += s"snapshot $n unreadable during orphan accounting: ${e.getMessage}"
-                scala.util.Failure(e)
-              }.getOrElse(Nil)
-            }
-          }
-          .toSet
-        // only SNAPSHOT unreadability makes references unknown — a broken
-        // changelog ("changelog N unreadable") leaves the zip manifests
-        // fully readable and must not zero the leak signal. Both unknown
-        // sources are explicit booleans (scanZip's readOk, this block's
-        // refsUnknown), never re-derived from issue-message wording.
-        if (refsUnknown || snapshotUnreadable) (0, 0L)
-        else {
-          val orphans = poolFiles.filterNot(f => referenced(f.getPath.getName))
-          (orphans.size, orphans.map(_.getLen).sum)
-        }
-      }
-
-    val zipErrors = issues.count(_.startsWith("snapshot "))
-    val missingRefs = issues.count(_.startsWith("pool ref missing"))
-    val badSizes = issues.count(i =>
-      i.startsWith("pool ref size") || i.startsWith("pool ref corrupt"))
-    StoreReport(op, part, name, snaps.size, deltas.size, required,
-      covered, chainLength, zipErrors, missingRefs, badSizes, deltaErrors,
-      orphanN, orphanB, issues.mkString("; "))
-  }
-
-  /** Just the incremental manifest's remote names from one snapshot zip
-    * (empty for full zips); stops at the manifest entry. */
-  private[state] def refsOfZip(fs: FileSystem, file: Path): Seq[String] = {
-    val in = new ZipInputStream(fs.open(file))
-    try {
-      val buf = new Array[Byte](64 * 1024)
-      var entry: ZipEntry = in.getNextEntry
-      while (entry != null) {
-        if (entry.getName == SnapshotManager.SstRefsEntry) {
-          val bos = new java.io.ByteArrayOutputStream()
-          var n = in.read(buf)
-          while (n >= 0) { if (n > 0) bos.write(buf, 0, n); n = in.read(buf) }
-          return new String(bos.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-            .split("\n").toSeq.filter(_.nonEmpty).map(_.split("\t", 2)(1))
-        }
-        in.closeEntry()
-        entry = in.getNextEntry
-      }
-      Nil
-    } finally in.close()
-  }
-
-  private def deltaExistsPlain(fs: FileSystem, baseDir: Path, v: Long): Boolean =
-    Try(fs.exists(new Path(baseDir, s"state.delta.$v"))).getOrElse(false)
-
-  /** Is `s` the base the verified chain already covers? (The base zip was
-    * verified in the coverage step; avoid double work.) */
-  private def chainTouches(s: Long, chain: Seq[(Long, Option[String])], required: Long): Boolean =
-    chain.headOption.map(_._1 - 1).getOrElse(required) == s
-
-  /** A verified snapshot zip's extracted pool references plus an explicit
-    * read-success flag — `readOk = false` means the zip failed to stream,
-    * so `refs` may be partial and the store's pool references are unknown. */
-  private[state] case class SnapshotScan(refs: Seq[String], readOk: Boolean)
-
-  /** Stream a snapshot zip end-to-end (the zip reader CRC-checks every
-    * entry on read) and verify each incremental manifest reference exists
-    * in the pool with the length its `<md5>-<len>.sst` name promises. */
-  private def verifySnapshotZip(
-      fs: FileSystem,
-      mgr: SnapshotManager,
-      baseDir: Path,
-      version: Long,
-      ckptId: Option[String],
-      issues: scala.collection.mutable.ArrayBuffer[String],
-      deep: Boolean = false): SnapshotScan = {
-    val file = mgr.snapshotFile(version, ckptId)
-    val refs = scala.collection.mutable.ArrayBuffer.empty[String]
-    val read = Try {
-      val in = new ZipInputStream(fs.open(file))
-      try {
-        val buf = new Array[Byte](64 * 1024)
-        var entry: ZipEntry = in.getNextEntry
-        while (entry != null) {
-          if (entry.getName == SnapshotManager.SstRefsEntry) {
-            val bos = new java.io.ByteArrayOutputStream()
-            var n = in.read(buf)
-            while (n >= 0) { if (n > 0) bos.write(buf, 0, n); n = in.read(buf) }
-            refs ++= new String(bos.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-              .split("\n").toSeq.filter(_.nonEmpty).map(_.split("\t", 2)(1))
-          } else {
-            var n = in.read(buf)
-            while (n >= 0) n = in.read(buf) // drain: CRC validated at entry end
-          }
-          in.closeEntry()
-          entry = in.getNextEntry
-        }
-      } finally in.close()
-    }
-    read.failed.foreach(e => issues += s"snapshot ${file.getName} unreadable: ${e.getMessage}")
-    refs.foreach { remote =>
-      val p = new Path(new Path(baseDir, "sst"), remote)
-      Try(fs.getFileStatus(p)).toOption match {
-        case None => issues += s"pool ref missing: $remote (snapshot ${file.getName})"
-        case Some(st) =>
-          // content-address name: <md5>-<len>.sst
-          val expected = Try(remote.stripSuffix(".sst").split("-").last.toLong).toOption
-          if (expected.exists(_ != st.getLen)) {
-            issues += s"pool ref size mismatch: $remote is ${st.getLen} B, " +
-              s"name promises ${expected.get} B"
-          } else if (deep) {
-            val wantMd5 = remote.stripSuffix(".sst").split("-").dropRight(1).mkString("-")
-            val md = java.security.MessageDigest.getInstance("MD5")
-            val read = Try {
-              val in = fs.open(p)
-              try {
-                val buf = new Array[Byte](64 * 1024)
-                var n = in.read(buf)
-                while (n >= 0) { if (n > 0) md.update(buf, 0, n); n = in.read(buf) }
-              } finally in.close()
-            }
-            read.failed.foreach(e =>
-              issues += s"pool ref corrupt: $remote unreadable: ${e.getMessage}")
-            if (read.isSuccess) {
-              val got = md.digest().map("%02x".format(_)).mkString
-              if (got != wantMd5) {
-                issues += s"pool ref corrupt: $remote content md5 $got, name promises $wantMd5"
-              }
-            }
-          }
-      }
-    }
-    SnapshotScan(refs.toSeq, read.isSuccess)
+    // (suppressed when a zip's references are unknown: its zipError already
+    // fails `clean`, and its pool files would show up as phantom orphans)
+    val orphans = if (refsKnown) mgr.orphans(referenced) else Nil
+    StoreReport(op, part, name, files.snapshots.map(_._1).size, files.deltas.map(_._1).size,
+      required, chain.isSuccess, chain.fold(_ => 0, _.deltas.size), zipErrors, missingRefs,
+      badSizes, deltaErrors, orphans.size, orphans.map(_.getLen).sum, issues.mkString("; "))
   }
 }

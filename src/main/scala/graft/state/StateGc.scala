@@ -10,8 +10,8 @@ import org.apache.spark.util.SerializableConfiguration
 
 /** Offline SST-pool reclamation for checkpoints written by
   * [[RocksDbStateStoreProvider]] — the fourth state-ops tool, closing the
-  * loop [[StateFsck]] opens: fsck COUNTS orphaned pool SSTs (incremental
-  * snapshots reference immutable `.sst` files in a content-addressed
+  * loop [[StateFsck]] opens: fsck COUNTS orphaned pool SSTs (snapshots
+  * reference immutable `.sst` files in a content-addressed
   * per-store pool; snapshot retention eventually strands the files only
   * dropped snapshots referenced), and only the provider's age-gated
   * in-process GC ever deletes them — which never runs for a stopped or
@@ -84,7 +84,7 @@ object StateGc extends Logging {
     val hadoopConf = spark.sessionState.newHadoopConf()
     val root = new Path(ckptDir)
     val fs = root.getFileSystem(hadoopConf)
-    val stores = StateFsck.listStores(fs, new Path(root, "state"))
+    val stores = SnapshotManager.listStores(fs, new Path(root, "state"))
     require(stores.nonEmpty, s"no state stores under $ckptDir/state")
 
     val serConf = new SerializableConfiguration(hadoopConf)
@@ -114,9 +114,8 @@ object StateGc extends Logging {
       name: String,
       apply: Boolean): GcReport = {
     val fs = baseDir.getFileSystem(hadoopConf)
-    val poolDir = new Path(baseDir, "sst")
-    val poolFiles = Try(fs.listStatus(poolDir).toSeq
-      .filter(_.getPath.getName.endsWith(".sst"))).getOrElse(Nil)
+    val mgr = new SnapshotManager(baseDir, hadoopConf)
+    val poolFiles = mgr.poolFiles()
     if (poolFiles.isEmpty) {
       return GcReport(op, part, name, 0, 0L, 0, 0, 0L, 0, 0L, "")
     }
@@ -124,23 +123,13 @@ object StateGc extends Logging {
 
     // union of every retained snapshot's manifest references; a zip that
     // cannot stream makes the reference set unknown -> skip the store
-    val zips = Try(fs.listStatus(baseDir).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("state.snapshot."))).getOrElse(Nil)
-    var skipped = ""
-    val referenced = zips.flatMap { n =>
-      Try(StateFsck.refsOfZip(fs, new Path(baseDir, n))) match {
-        case scala.util.Success(refs) => refs
-        case scala.util.Failure(e) =>
-          if (skipped.isEmpty) skipped = s"snapshot $n unreadable: ${e.getMessage}"
-          Nil
-      }
-    }.toSet
-    if (skipped.nonEmpty) {
-      return GcReport(op, part, name, poolFiles.size, poolBytes,
-        referenced.size, 0, 0L, 0, 0L, skipped)
+    val referenced = mgr.poolRefs(mgr.listing().snapshots) match {
+      case scala.util.Success(refs) => refs
+      case scala.util.Failure(e) =>
+        return GcReport(op, part, name, poolFiles.size, poolBytes, 0, 0, 0L, 0, 0L, e.getMessage)
     }
 
-    val orphans = poolFiles.filterNot(f => referenced(f.getPath.getName))
+    val orphans = mgr.orphans(referenced, poolFiles)
     var removedN = 0
     var removedB = 0L
     var failedDeletes = 0

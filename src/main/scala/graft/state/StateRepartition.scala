@@ -238,11 +238,10 @@ object StateRepartition extends Logging {
     val newStateRoot = new Path(newRoot, "state").toString
     val hadoopBc = spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
     val importerConf: StateStoreConf = {
-      // changelog OFF so the importer's single commit publishes one full
-      // snapshot; incremental OFF so the fresh layout has no sst pool to GC
+      // changelog OFF so the importer's single commit publishes one
+      // snapshot (its SSTs go to the new layout's pool, like any snapshot)
       val sqlConf = new SQLConf()
       sqlConf.setConfString(RocksDbConf.CHANGELOG, "false")
-      sqlConf.setConfString(RocksDbConf.INCREMENTAL_SNAPSHOT, "false")
       sqlConf.setConfString("spark.sql.streaming.stateStore.commitValidation.enabled", "false")
       if (v2Ckpt) {
         // v2 in = v2 out: the importer's commits mint the fresh IDs the
@@ -347,7 +346,7 @@ object StateRepartition extends Logging {
               if (oldArr(p).length != opStores.length) return None
               val matches = oldArr(p).toSeq.map { id =>
                 opStores.filter(st =>
-                  storeHasCommitFile(fs, oldRoot, op, p, st, version, id))
+                  storeHasCommitFile(hadoopConf, oldRoot, op, p, st, version, id))
               }
               val o = matches.collect { case Seq(one) => one }
               if (o.length == matches.length && o.distinct.length == o.length) Some(o)
@@ -393,15 +392,13 @@ object StateRepartition extends Logging {
     * directly in the partition dir; named stores (joins) in a
     * subdirectory. */
   private def storeHasCommitFile(
-      fs: org.apache.hadoop.fs.FileSystem, oldRoot: Path, op: Long,
+      hadoopConf: Configuration, oldRoot: Path, op: Long,
       partition: Int, store: String, version: Long, id: String): Boolean = {
     val base =
       if (store == "default") new Path(oldRoot, s"state/$op/$partition")
       else new Path(oldRoot, s"state/$op/$partition/$store")
-    scala.util.Try(fs.listStatus(base).exists { st =>
-      val n = st.getPath.getName
-      n == s"state.delta.${version}_$id" || n == s"state.snapshot.${version}_$id"
-    }).getOrElse(false)
+    scala.util.Try(new SnapshotManager(base, hadoopConf).listing().idsAt(version).contains(id))
+      .getOrElse(false)
   }
 
   /** Move one (operator, store): statestore-source read at `lastBatch`,

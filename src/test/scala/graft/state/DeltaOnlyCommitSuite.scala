@@ -130,19 +130,41 @@ class DeltaOnlyCommitSuite extends AnyFunSuite {
     def readBack(): Seq[(Seq[Byte], Seq[Byte])] =
       Changelog.read(sm.openDelta(1)).map(r => (r.key.toSeq, r.value.toSeq)).toList
     val target = fs.pathToFile(sm.deltaFile(1)).toPath
+    /** The published file at `p` has a `.crc` equal to the one Hadoop's own
+      * writer makes for the same bytes. */
+    def assertHadoopCrc(p: Path): Unit = {
+      val crc = fs.pathToFile(fs.getChecksumFile(p)).toPath
+      assert(Files.exists(crc), s"$p must publish with its .crc side file")
+      val viaHadoop = new Path(base, s"via-hadoop-${p.getName}")
+      val out = fs.create(viaHadoop)
+      try out.write(Files.readAllBytes(fs.pathToFile(p).toPath)) finally out.close()
+      assert(Files.readAllBytes(crc).toSeq ===
+        Files.readAllBytes(fs.pathToFile(fs.getChecksumFile(viaHadoop)).toPath).toSeq)
+    }
     try {
       val (f1, recs1) = writeDelta(200)
       sm.uploadDelta(f1, 1)
-      val crc = fs.pathToFile(fs.getChecksumFile(sm.deltaFile(1))).toPath
-      assert(Files.exists(crc), "the delta must publish with its .crc side file")
+      assertHadoopCrc(sm.deltaFile(1))
       assert(readBack() === recs1)
-      // the same bytes through Hadoop's own writer give the same .crc
-      val viaHadoop = new Path(base, "via-hadoop")
-      val out = fs.create(viaHadoop)
-      try out.write(Files.readAllBytes(f1.toPath)) finally out.close()
-      assert(Files.readAllBytes(crc).toSeq ===
-        Files.readAllBytes(fs.pathToFile(fs.getChecksumFile(viaHadoop)).toPath).toSeq)
       assert(!baseDir.list().exists(_.endsWith(".tmp")), "the upload left a temp file")
+
+      // a snapshot zip and its pool SST take the same path
+      val db = new File(baseDir, "local-db")
+      db.mkdir()
+      Files.write(new File(db, "000005.sst").toPath, Array.fill(3000)(rnd.nextInt().toByte))
+      Files.write(new File(db, "CURRENT").toPath, "MANIFEST-000004".getBytes("UTF-8"))
+      sm.upload(db, 1)
+      assertHadoopCrc(sm.snapshotFile(1))
+      val pool = new File(baseDir, "sst").listFiles().filterNot(_.getName.startsWith("."))
+      assert(pool.length === 1)
+      assertHadoopCrc(new Path(new Path(base, "sst"), pool.head.getName))
+      val restored = new File(baseDir, "restored")
+      restored.mkdir()
+      sm.download(1, restored)
+      assert(Files.readAllBytes(new File(restored, "000005.sst").toPath).toSeq ===
+        Files.readAllBytes(new File(db, "000005.sst").toPath).toSeq)
+      assert(!new File(baseDir, "sst").list().exists(_.endsWith(".tmp")),
+        "the pool upload left a temp file")
 
       // re-publishing the same version replaces both files consistently
       val (f2, recs2) = writeDelta(150)

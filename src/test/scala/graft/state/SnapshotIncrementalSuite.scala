@@ -1,7 +1,8 @@
 package graft.state
 
-import java.io.File
+import java.io.{File, FileOutputStream}
 import java.nio.file.Files
+import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -14,7 +15,7 @@ import scala.util.Try
   * snapshots ship references, both formats restore byte-identically, and
   * pool GC drops exactly the files no retained snapshot references.
   * Provider-level coverage rides the existing suites ([[RocksDbStateStoreSuite]]
-  * et al.) since incremental is the default.
+  * et al.), since every snapshot is incremental.
   */
 class SnapshotIncrementalSuite extends AnyFunSuite {
 
@@ -48,7 +49,7 @@ class SnapshotIncrementalSuite extends AnyFunSuite {
     write(v1, "MANIFEST-000003", "manifest-v1")
     write(v1, "CURRENT", "MANIFEST-000003")
     write(v1, "LOG", "info log, must be excluded")
-    mgr.upload(v1, 1, incremental = true)
+    mgr.upload(v1, 1)
     assert(poolFiles(remote).size === 2, "two SSTs pooled at v1")
 
     // v2: one SST unchanged (same content), one compacted away, one new,
@@ -58,7 +59,7 @@ class SnapshotIncrementalSuite extends AnyFunSuite {
     write(v2, "000004.sst", "sst-four" * 100)
     write(v2, "MANIFEST-000005", "manifest-v2")
     write(v2, "CURRENT", "MANIFEST-000005")
-    mgr.upload(v2, 2, incremental = true)
+    mgr.upload(v2, 2)
     assert(poolFiles(remote).size === 3, "v2 added only the new SST to the pool")
 
     val r1 = tmpDir("snap-restore1-")
@@ -77,7 +78,7 @@ class SnapshotIncrementalSuite extends AnyFunSuite {
     write(v1, "000007.sst", "identical-bytes" * 50)
     write(v1, "000008.sst", "identical-bytes" * 50)
     write(v1, "CURRENT", "c")
-    mgr.upload(v1, 1, incremental = true)
+    mgr.upload(v1, 1)
     assert(poolFiles(remote).size === 1, "identical content dedups across names")
     val r = tmpDir("snap-restore-")
     mgr.download(1, r)
@@ -91,12 +92,18 @@ class SnapshotIncrementalSuite extends AnyFunSuite {
     val v1 = tmpDir("snap-local1-")
     write(v1, "000001.sst", "full-zip-sst")
     write(v1, "CURRENT", "c1")
-    mgr.upload(v1, 1, incremental = false)
+    // a self-contained zip, every file inline, as older checkpoints hold
+    val full = new ZipOutputStream(new FileOutputStream(new File(remote, "state.snapshot.1")))
+    try v1.listFiles().foreach { f =>
+      full.putNextEntry(new ZipEntry(f.getName))
+      full.write(Files.readAllBytes(f.toPath))
+      full.closeEntry()
+    } finally full.close()
     assert(poolFiles(remote).isEmpty, "full zip uses no pool")
     val v2 = tmpDir("snap-local2-")
     write(v2, "000001.sst", "full-zip-sst")
     write(v2, "CURRENT", "c2")
-    mgr.upload(v2, 2, incremental = true)
+    mgr.upload(v2, 2)
     val r1 = tmpDir("snap-restore1-")
     mgr.download(1, r1)
     assert(readAll(r1) === readAll(v1))
@@ -114,12 +121,12 @@ class SnapshotIncrementalSuite extends AnyFunSuite {
     val v1 = tmpDir("snap-local1-")
     write(v1, "000001.sst", "only-in-v1" * 20)
     write(v1, "CURRENT", "c1")
-    mgr.upload(v1, 1, incremental = true)
+    mgr.upload(v1, 1)
     (2 to 4).foreach { v =>
       val d = tmpDir(s"snap-local$v-")
       write(d, "000009.sst", "survivor" * 20)
       write(d, "CURRENT", s"c$v")
-      mgr.upload(d, v, incremental = true)
+      mgr.upload(d, v)
     }
     assert(poolFiles(remote).size === 2)
 
@@ -139,7 +146,7 @@ class SnapshotIncrementalSuite extends AnyFunSuite {
     val v5 = tmpDir("snap-local5-")
     write(v5, "000010.sst", "fresh-upload" * 20)
     write(v5, "CURRENT", "c5")
-    mgr.upload(v5, 5, incremental = true)
+    mgr.upload(v5, 5)
     val mgr2 = newMgr(remote) // no knownRemote cache — same decisions from listing
     // drop v5's manifest so its SST becomes unreferenced but is minutes old
     fs.delete(new Path(new Path(remote.toURI.toString), "state.snapshot.5"), false)
@@ -156,7 +163,7 @@ class SnapshotIncrementalSuite extends AnyFunSuite {
     val v1 = tmpDir("snap-local1-")
     write(v1, "000001.sst", "cycled" * 20)
     write(v1, "CURRENT", "c1")
-    mgr.upload(v1, 1, incremental = true)
+    mgr.upload(v1, 1)
     // orphan the pool file (manifest gone), age it, sweep it via the SAME mgr
     fs.delete(new Path(new Path(remote.toURI.toString), "state.snapshot.1"), false)
     val old = System.currentTimeMillis() - 60 * 60 * 1000L
@@ -166,14 +173,14 @@ class SnapshotIncrementalSuite extends AnyFunSuite {
     // cleanup needs at least one remaining durable file to compute a cutoff
     val v2 = tmpDir("snap-local2-")
     write(v2, "CURRENT", "c2")
-    mgr.upload(v2, 2, incremental = true)
+    mgr.upload(v2, 2)
     mgr.cleanup(retain = 1)
     assert(poolFiles(remote).isEmpty, "orphaned SST swept")
     // same mgr re-uploads the same content: knownRemote must not short-circuit
     val v3 = tmpDir("snap-local3-")
     write(v3, "000001.sst", "cycled" * 20)
     write(v3, "CURRENT", "c3")
-    mgr.upload(v3, 3, incremental = true)
+    mgr.upload(v3, 3)
     assert(poolFiles(remote).size === 1, "content re-pooled after GC")
     val r = tmpDir("snap-restore-")
     mgr.download(3, r)
@@ -188,7 +195,7 @@ class SnapshotIncrementalSuite extends AnyFunSuite {
     val v1 = tmpDir("snap-local1-")
     write(v1, "000001.sst", "raced" * 20)
     write(v1, "CURRENT", "c1")
-    mgr.upload(v1, 1, incremental = true)
+    mgr.upload(v1, 1)
     // simulate a concurrent pool GC racing the next commit: the pool file
     // disappears while this mgr's knownRemote cache still claims it exists
     poolFiles(remote).foreach { n =>
@@ -198,7 +205,7 @@ class SnapshotIncrementalSuite extends AnyFunSuite {
     val v2 = tmpDir("snap-local2-")
     write(v2, "000001.sst", "raced" * 20) // same content -> warm dedup path
     write(v2, "CURRENT", "c2")
-    mgr.upload(v2, 2, incremental = true)
+    mgr.upload(v2, 2)
     assert(poolFiles(remote).size === 1,
       "the stale dedup hit fell through to a fresh pool upload")
     val r = tmpDir("snap-restore-")
@@ -211,7 +218,6 @@ class SnapshotIncrementalSuite extends AnyFunSuite {
     import StateStoreTestHelper._
     val ckpt = newCheckpointDir()
     val conf = storeConf(Map(
-      RocksDbConf.INCREMENTAL_SNAPSHOT -> "true",
       RocksDbConf.CHANGELOG -> "false")) // snapshot per commit -> pool exercised hard
     val p = newProvider(ckpt, conf)
     try {

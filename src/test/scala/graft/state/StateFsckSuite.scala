@@ -76,7 +76,7 @@ class StateFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
     val local = graft.Staging.tempDir("graft-fsck-db-").toFile
     Files.write(local.toPath.resolve("000007.sst"), ("sst-bytes-" * 100).getBytes("UTF-8"))
     Files.write(local.toPath.resolve("MANIFEST-000001"), "manifest".getBytes("UTF-8"))
-    mgr.upload(local, 1, incremental = true)
+    mgr.upload(local, 1)
     // changelog for version 2 (v1 format: headerless)
     val deltaLocal = Files.createTempFile(
       graft.Staging.tempDir("graft-fsck-tmp-"), "graft-fsck-delta-", ".tmp").toFile
@@ -110,7 +110,7 @@ class StateFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
       mgr.ensureBaseDir()
       val local = graft.Staging.tempDir("graft-fsck-fanout-db-").toFile
       Files.write(local.toPath.resolve("MANIFEST-000001"), s"m$p".getBytes("UTF-8"))
-      mgr.upload(local, 1, incremental = false)
+      mgr.upload(local, 1)
     }
     val taskCounts = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -220,7 +220,7 @@ class StateFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
     val local = graft.Staging.tempDir("graft-fsck-v2db-").toFile
     Files.write(local.toPath.resolve("000009.sst"), ("v2-sst-" * 64).getBytes("UTF-8"))
     Files.write(local.toPath.resolve("CURRENT"), "MANIFEST-000001".getBytes("UTF-8"))
-    mgr.upload(local, 1, Some("aaa111"), incremental = true)
+    mgr.upload(local, 1, Some("aaa111"))
     val deltaLocal = Files.createTempFile(
       graft.Staging.tempDir("graft-fsck-tmp-"), "graft-fsck-v2delta-", ".tmp").toFile
     val w = new Changelog.Writer(deltaLocal, lineage = Some("aaa111"))
@@ -240,6 +240,109 @@ class StateFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
     val r2 = reportRows(StateFsck.run(spark, ckpt)).head
     assert(!r2.getAs[Boolean]("covered"), r2.toString)
     assert(r2.getAs[String]("issues").contains("lineage walk"))
+  }
+
+  test("fsck's covered+clean agrees with provider recovery under seeded damage (v1 and v2)") {
+    import StateStoreTestHelper._
+    val top = 5L
+    val expected = (1 to top.toInt).map(i => s"k$i" -> i).toMap + ("a" -> top.toInt)
+    def versionsOf(dir: java.nio.file.Path, prefix: String): Set[Long] = {
+      val names = Files.list(dir).iterator()
+      var out = Set.empty[Long]
+      while (names.hasNext) {
+        val n = names.next().getFileName.toString
+        if (n.startsWith(prefix)) out += n.stripPrefix(prefix).takeWhile(_.isDigit).toLong
+      }
+      out
+    }
+    /** Versions 1..5 committed through the real provider with maintenance
+      * after each commit: a cadence snapshot lands at 3 and cleanup drops
+      * the deltas under it, so version 5 recovers from snapshot 3 plus
+      * deltas 4 and 5 and from nothing else. Returns the checkpoint root,
+      * the store dir and version 5's commit ID (v2). */
+    def build(conf: org.apache.spark.sql.execution.streaming.state.StateStoreConf)
+        : (String, java.nio.file.Path, Option[String]) = {
+      val root = graft.Staging.tempDir("graft-fsck-agree-").toString
+      Files.createDirectories(Paths.get(root, "commits"))
+      (0L until top).foreach { b =>
+        Files.write(Paths.get(root, "commits", b.toString), "v1\n{}".getBytes("UTF-8"))
+      }
+      val p = newProvider(s"$root/state", conf)
+      var id: Option[String] = None
+      try (1 to top.toInt).foreach { v =>
+        val s = p.getStore(v - 1, id)
+        put(s, "a", v)
+        put(s, s"k$v", v)
+        s.commit()
+        id = s.getStateStoreCheckpointInfo().stateStoreCkptId
+        p.doMaintenance()
+      } finally p.close()
+      val dir = Paths.get(root, "state", "0", "0")
+      assert(versionsOf(dir, "state.snapshot.") === Set(3L) &&
+        versionsOf(dir, "state.delta.") === Set(4L, 5L), "fixture: snapshot 3 + deltas 4, 5")
+      (root, dir, id)
+    }
+    /** A seeded choice among the files of `dir` whose name `wanted` accepts. */
+    def pick(dir: java.nio.file.Path, rnd: scala.util.Random)(wanted: String => Boolean): java.nio.file.Path = {
+      val all = Files.list(dir).iterator()
+      var found = Vector.empty[java.nio.file.Path]
+      while (all.hasNext) {
+        val f = all.next()
+        if (wanted(f.getFileName.toString)) found :+= f
+      }
+      assert(found.nonEmpty, s"fixture has no such file in $dir")
+      found.sortBy(_.toString)(Ordering.String)(rnd.nextInt(found.size))
+    }
+    type Damage = (java.nio.file.Path, scala.util.Random) => Unit
+    def damages(v2: Boolean): Seq[(String, Damage)] = Seq[(String, Damage)](
+      "none" -> ((_, _) => ()),
+      "delete a chain delta" -> ((dir, rnd) => Files.delete(pick(dir, rnd)(_.startsWith("state.delta.")))),
+      "corrupt the base zip" -> { (dir, rnd) =>
+        val zip = pick(dir, rnd)(_.startsWith("state.snapshot."))
+        val bytes = Files.readAllBytes(zip)
+        val i = rnd.nextInt(bytes.length)
+        bytes(i) = (bytes(i) ^ 0x5a).toByte
+        Files.write(zip, bytes, StandardOpenOption.TRUNCATE_EXISTING)
+      },
+      // the only snapshot references every pool file
+      "delete a referenced pool SST" ->
+        ((dir, rnd) => Files.delete(pick(dir.resolve("sst"), rnd)(!_.startsWith("."))))
+    ) ++ (if (!v2) Nil else Seq[(String, Damage)](
+      "corrupt a lineage header" -> { (dir, rnd) =>
+        val delta = pick(dir, rnd)(_.startsWith("state.delta."))
+        val bytes = Files.readAllBytes(delta)
+        // [magic: 4B][parent id length: 2B][parent id]: change one character
+        val i = 6 + rnd.nextInt(((bytes(4) & 0xff) << 8) | (bytes(5) & 0xff))
+        bytes(i) = (if (bytes(i) == 'f'.toByte) '0' else 'f').toByte
+        Files.write(delta, bytes, StandardOpenOption.TRUNCATE_EXISTING)
+        // the header, not the checksum, is what this damage breaks
+        Files.delete(delta.resolveSibling("." + delta.getFileName + ".crc"))
+      }))
+
+    for {
+      v2 <- Seq(false, true)
+      (what, damage) <- damages(v2)
+      seed <- if (what == "none") Seq(1) else Seq(1, 2)
+    } {
+      val conf = storeConf(Map(
+        org.apache.spark.sql.internal.SQLConf.STATE_STORE_MIN_DELTAS_FOR_SNAPSHOT.key -> "3",
+        "spark.sql.streaming.stateStore.checkpointFormatVersion" -> (if (v2) "2" else "1")),
+        minBatchesToRetain = 2)
+      val (root, dir, id) = build(conf)
+      damage(dir, new scala.util.Random(seed))
+      val fsckOk = clean(reportRows(StateFsck.run(spark, root)).head)
+      // v1 falls back to an older version (other rows), v2 throws
+      val p = newProvider(s"$root/state", conf)
+      val recovered =
+        try scala.util.Try {
+          val s = p.getStore(top, id)
+          try readAll(s) finally s.abort()
+        }.toOption.contains(expected)
+        finally p.close()
+      val label = s"${if (v2) "v2" else "v1"}, $what, seed $seed"
+      assert(fsckOk === recovered, s"$label: fsck clean=$fsckOk, provider recovered=$recovered")
+      assert(recovered === (what == "none"), s"$label: recovered=$recovered")
+    }
   }
 
   test("StateCompact squashes the delta chain: fsck chainLength drops to 0, resume equality holds") {

@@ -37,7 +37,7 @@ class StateGcSuite extends AnyFunSuite with BeforeAndAfterAll {
     val local = graft.Staging.tempDir("graft-gc-db-").toFile
     Files.write(local.toPath.resolve("000007.sst"), ("sst-bytes-" * 100).getBytes("UTF-8"))
     Files.write(local.toPath.resolve("MANIFEST-000001"), "manifest".getBytes("UTF-8"))
-    mgr.upload(local, 1, incremental = true)
+    mgr.upload(local, 1)
     val pool = Paths.get(storeDir.toString, "sst")
     val referenced = Files.list(pool).iterator().next().getFileName.toString
     val orphanName = "ffffffffffffffffffffffffffffffff-11.sst"
