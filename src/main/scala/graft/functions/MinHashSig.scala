@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -42,6 +40,7 @@ case class MinHashSig(child: Expression, as: Seq[Long], bs: Seq[Long], p: Long)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_sig"
+  override def stateful: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) | ArrayType(LongType, _) =>
@@ -56,15 +55,12 @@ case class MinHashSig(child: Expression, as: Seq[Long], bs: Seq[Long], p: Long)
   @transient private lazy val aArr: Array[Long] = as.toArray
   @transient private lazy val bArr: Array[Long] = bs.toArray
 
-  // MessageDigest is stateful; one instance per thread, reused across rows
-  @transient private lazy val md5: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
+  @transient private lazy val h60 = new H60
 
   def compute(input: ArrayData): ArrayData = {
     val k = aArr.length
     val sig = new Array[Long](k)
     java.util.Arrays.fill(sig, p)
-    val digest = md5.get()
     val n = input.numElements()
     var i = 0
     while (i < n) {
@@ -74,11 +70,8 @@ case class MinHashSig(child: Expression, as: Seq[Long], bs: Seq[Long], p: Long)
           // bits ARE the first 7 hex chars — the string-path base hash
           input.getLong(i) >>> 32
         } else {
-          digest.reset()
-          val d = digest.digest(input.getUTF8String(i).getBytes)
-          // first 7 hex chars of the md5 = the top 28 bits of the digest
-          ((d(0) & 0xffL) << 20) | ((d(1) & 0xffL) << 12) |
-            ((d(2) & 0xffL) << 4) | ((d(3) & 0xf0L) >>> 4)
+          // first 7 hex chars of the md5 = the top 28 of its 60 bits
+          h60.of(input.getUTF8String(i)) >>> 32
         }
         var j = 0
         while (j < k) {

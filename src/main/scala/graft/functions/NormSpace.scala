@@ -51,7 +51,7 @@ object NormSpace {
   private final val Space: Byte = 0x20
 
   /** `[ \t\n\x0B\f\r]`: 0x20 and 0x09-0x0D. */
-  @inline private def isSpace(b: Byte): Boolean = b == Space || (b >= 0x09 && b <= 0x0d)
+  @inline private[functions] def isSpace(b: Byte): Boolean = b == Space || (b >= 0x09 && b <= 0x0d)
 
   /** JVM entry point shared by interpreted eval and generated code. */
   def compute(t: UTF8String): UTF8String = {

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -11,72 +9,106 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** 60-bit SimHash of a token array in ONE native pass — the compiled
-  * equivalent of the SQL fold [[graft.operators.Dedup.dedup_simhash]] ran
-  * through round 16:
+/** 60-bit SimHash of a token list in ONE native pass — the compiled
+  * equivalent of the SQL fold [[graft.operators.Dedup.dedup_simhash]]'s
+  * oracle runs:
   * {{{
   *   aggregate(zip_with(aggregate(transform(toks, t -> h60(t)), ...60-int
   *   counters..., zip_with per token), ...), bit assembly)
   * }}}
-  * The interpreted chain allocated a fresh 60-element counter array per
-  * TOKEN (zip_with), evaluated the md5→conv lambda per token in boxed
-  * interpreted mode, and re-walked 60 lambda frames per token. Here each
-  * token is digested once into a reused thread-local MessageDigest
-  * ([[H60.ofDigest]], the engine-wide fingerprint discipline) and the 60
-  * counters are one reused int array — same per-token hash, same majority
-  * rule (`counter > 0` sets the bit), bit-identical fingerprint. The
-  * equivalence suite pins the kernel against the interpreted pipeline on
-  * the fixture corpus and adversarial token lists.
+  * Each token is digested once in place ([[H60]], the engine-wide
+  * fingerprint discipline) and the 60 counters are one int array — same
+  * per-token hash, same majority rule (`counter > 0` sets the bit),
+  * bit-identical fingerprint.
+  *
+  * The input is either the token array or a string, whose tokens are
+  * those of `split(trim(s), '\\s+')`, taken from its UTF-8 bytes without
+  * a regex or a token copy: `trim` strips 0x20 at both ends, and the rest
+  * splits at every run of [[NormSpace]]'s whitespace bytes, so a leading
+  * or trailing run (of other whitespace than 0x20) gives an empty token
+  * and an empty trimmed string gives the one token `""`. Every character
+  * `\s` matches is one ASCII byte and no byte of a multi-byte UTF-8
+  * sequence is below 0x80, so the byte walk splits where the regex does;
+  * the string is taken to be valid UTF-8, as for [[NormSpace]].
   *
   * A null token votes 0 on every bit, as in the fold: there its hash is
   * null, `(h >> b) & 1 = 1` is null, and the `CASE` falls to its `ELSE -1`
   * branch for all 60 counters. The fingerprint stays non-null; only a
-  * null ARRAY yields null, like any unary expression. (`split()` output,
-  * the only input the operators pass, holds no null tokens.)
+  * null input yields null, like any unary expression.
   */
 case class SimHashBits(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash_bits"
+  override def stateful: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case StringType | ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${t.catalogString}")
+      s"$prettyName requires a string or array<string>, got ${t.catalogString}")
   }
 
-  override def nullSafeEval(input: Any): Any =
-    SimHashBits.compute(input.asInstanceOf[ArrayData])
+  @transient private lazy val h60 = new H60
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SimHashBits.compute($c);")
+  override def nullSafeEval(input: Any): Any = input match {
+    case t: UTF8String => SimHashBits.ofText(t, h60)
+    case toks: ArrayData => SimHashBits.ofTokens(toks, h60)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val h = H60.state(ctx)
+    val f = if (child.dataType == StringType) "ofText" else "ofTokens"
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.functions.SimHashBits.$f($c, $h);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): SimHashBits =
     copy(child = newChild)
 }
 
 object SimHashBits {
-  private val digests = ThreadLocal.withInitial[MessageDigest](() =>
-    MessageDigest.getInstance("MD5"))
-
-  /** JVM entry point shared by interpreted eval and generated code. */
-  def compute(toks: ArrayData): Long = {
-    val n = toks.numElements()
+  /** The fingerprint of the tokens of `split(trim(t), '\\s+')`. */
+  def ofText(t: UTF8String, h60: H60): Long = {
+    val (bytes, base) = H60.bytesOf(t)
+    var s = base
+    var e = base + t.numBytes
+    while (s < e && bytes(s) == ' ') s += 1
+    while (e > s && bytes(e - 1) == ' ') e -= 1
     val counters = new Array[Int](60)
-    val md = digests.get()
-    var i = 0
-    while (i < n) {
-      val h =
-        if (toks.isNullAt(i)) 0L
-        else { md.reset(); H60.ofDigest(md.digest(toks.getUTF8String(i).getBytes)) }
-      var b = 0
-      while (b < 60) {
-        if (((h >>> b) & 1L) == 1L) counters(b) += 1 else counters(b) -= 1
-        b += 1
-      }
+    var start = s // of the current token
+    var inRun = false
+    var i = s
+    while (i < e) {
+      if (NormSpace.isSpace(bytes(i))) {
+        if (!inRun) { vote(counters, h60.of(bytes, start, i - start)); inRun = true }
+      } else if (inRun) { start = i; inRun = false }
       i += 1
     }
+    if (inRun) start = e
+    vote(counters, h60.of(bytes, start, e - start))
+    bits(counters)
+  }
+
+  /** The fingerprint of a token array; a null token votes 0 on every bit. */
+  def ofTokens(toks: ArrayData, h60: H60): Long = {
+    val n = toks.numElements()
+    val counters = new Array[Int](60)
+    var i = 0
+    while (i < n) {
+      vote(counters, if (toks.isNullAt(i)) 0L else h60.of(toks.getUTF8String(i)))
+      i += 1
+    }
+    bits(counters)
+  }
+
+  private def vote(counters: Array[Int], h: Long): Unit = {
+    var b = 0
+    while (b < 60) {
+      if (((h >>> b) & 1L) == 1L) counters(b) += 1 else counters(b) -= 1
+      b += 1
+    }
+  }
+
+  private def bits(counters: Array[Int]): Long = {
     var out = 0L
     var b = 0
     while (b < 60) {
@@ -86,7 +118,7 @@ object SimHashBits {
     out
   }
 
-  /** `simhash_bits(toks)` as a Column. */
-  def of(toks: Column): Column =
-    ColumnBridge.column(SimHashBits(ColumnBridge.expression(toks)))
+  /** `simhash_bits(text or toks)` as a Column. */
+  def of(textOrToks: Column): Column =
+    ColumnBridge.column(SimHashBits(ColumnBridge.expression(textOrToks)))
 }

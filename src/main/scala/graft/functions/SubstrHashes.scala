@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -26,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * STRING, and a base-16 parse per window): measured ~73 µs/window —
   * 300× the cost of the digest itself — which made the exact-substring
   * dedup family the slowest batch queries in the suite. Here the loop body
-  * is plain JVM code: one digest into a reused thread-local MessageDigest,
+  * is plain JVM code: one digest of the window's bytes in place ([[H60]]),
   * the 60-bit value read directly from the digest bytes (first 8 bytes
   * big-endian, logical-shift-right 4 = the first 15 hex nibbles — exactly
   * what `conv(substr(hex, 1, 15), 16, 10)` parses), no hex string, no
@@ -43,6 +41,7 @@ case class SubstrHashes(child: Expression, winLen: Int) extends UnaryExpression 
   override def dataType: DataType = SubstrHashes.OutType
   override def nullable: Boolean = child.nullable
   override def prettyName: String = "substr_hashes"
+  override def stateful: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -50,12 +49,16 @@ case class SubstrHashes(child: Expression, winLen: Int) extends UnaryExpression 
       s"$prettyName requires a string input, got ${other.catalogString}")
   }
 
-  override def nullSafeEval(input: Any): Any =
-    SubstrHashes.compute(input.asInstanceOf[UTF8String], winLen)
+  @transient private lazy val h60 = new H60
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override def nullSafeEval(input: Any): Any =
+    SubstrHashes.compute(input.asInstanceOf[UTF8String], winLen, h60)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val h = H60.state(ctx)
     nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.SubstrHashes.compute($t, $winLen);")
+      s"${ev.value} = graft.functions.SubstrHashes.compute($t, $winLen, $h);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): SubstrHashes =
     copy(child = newChild)
@@ -67,14 +70,11 @@ object SubstrHashes {
       .add("h", LongType, nullable = false),
     containsNull = false)
 
-  private val digests = ThreadLocal.withInitial[MessageDigest](() =>
-    MessageDigest.getInstance("MD5"))
-
   private val NoHashes = new Array[Long](0)
 
   /** JVM entry point shared by interpreted eval and generated code. */
-  def compute(t: UTF8String, winLen: Int): ArrayData = {
-    val hs = windowHashes(t, winLen)
+  def compute(t: UTF8String, winLen: Int, h60: H60): ArrayData = {
+    val hs = windowHashes(t, winLen, h60)
     val out = new Array[Any](hs.length)
     var i = 0
     while (i < hs.length) {
@@ -88,28 +88,25 @@ object SubstrHashes {
     * [[SubstrHashBlocks]]): the h60 of window `pos` at index `pos - 1`,
     * empty when the string is shorter than `winLen`.
     *
-    * Windows are hashed straight out of ONE byte image of the string.
-    * Window `pos` covers codepoints [pos-1, pos-1+winLen); its UTF-8 bytes
-    * are the contiguous slice between those codepoints' byte offsets, so
-    * one O(len) offset scan (identity on ASCII) replaces a per-window
+    * Windows are hashed straight out of the string's byte image. Window
+    * `pos` covers codepoints [pos-1, pos-1+winLen); its UTF-8 bytes are
+    * the contiguous slice between those codepoints' byte offsets, so one
+    * O(len) offset scan (identity on ASCII) replaces a per-window
     * `substringSQL` walk (O(len) per window, O(len²) per document), and
-    * `md.update(bytes, start, len)` hashes the slice with zero copies. The
-    * digested bytes are EXACTLY the bytes `substringSQL(...).getBytes`
-    * produces — same md5, bit-identical h60. */
-  private[functions] def windowHashes(t: UTF8String, winLen: Int): Array[Long] = {
+    * the slice is hashed with zero copies. The digested bytes are EXACTLY
+    * the bytes `substringSQL(...).getBytes` produces — same md5,
+    * bit-identical h60. */
+  private[functions] def windowHashes(t: UTF8String, winLen: Int, h60: H60): Array[Long] = {
     val n = t.numChars()
     val count = n - winLen + 1
     if (count <= 0) return NoHashes
-    val md = digests.get()
     val out = new Array[Long](count)
-    val bytes = t.getBytes
-    if (bytes.length == n) {
+    val (bytes, base) = H60.bytesOf(t)
+    if (t.numBytes == n) {
       // ASCII fast path: codepoint index == byte index
       var i = 0
       while (i < count) {
-        md.reset()
-        md.update(bytes, i, winLen)
-        out(i) = H60.ofDigest(md.digest())
+        out(i) = h60.of(bytes, base + i, winLen)
         i += 1
       }
     } else {
@@ -117,19 +114,17 @@ object SubstrHashes {
       // (identical traversal to UTF8String.substring's, done once)
       val offsets = new Array[Int](n + 1)
       var i = 0
-      var b = 0
+      var b = base
       while (i < n) {
         offsets(i) = b
         b += UTF8String.numBytesForFirstByte(bytes(b))
         i += 1
       }
-      offsets(n) = bytes.length
+      offsets(n) = base + t.numBytes
       i = 0
       while (i < count) {
         val start = offsets(i)
-        md.reset()
-        md.update(bytes, start, offsets(i + winLen) - start)
-        out(i) = H60.ofDigest(md.digest())
+        out(i) = h60.of(bytes, start, offsets(i + winLen) - start)
         i += 1
       }
     }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
@@ -41,6 +40,7 @@ case class WordShingleHashes(child: Expression, k: Int) extends UnaryExpression 
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "word_shingle_hashes"
+  override def stateful: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -50,24 +50,21 @@ case class WordShingleHashes(child: Expression, k: Int) extends UnaryExpression 
 
   @transient private lazy val ws: Pattern = Pattern.compile("\\s+")
 
-  // MessageDigest is stateful; one instance per thread, reused across rows
-  @transient private lazy val md5: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
+  @transient private lazy val h60 = new H60
 
-  /** First 15 hex chars of the md5 of `s`, parsed base-16 ([[H60]]). */
-  private def h60(digest: MessageDigest, s: String): Long = {
-    digest.reset()
-    H60.ofDigest(digest.digest(s.getBytes("UTF-8")))
+  /** First 15 hex chars of the md5 of `s`'s UTF-8 bytes ([[H60]]). */
+  private def h60Of(s: String): Long = {
+    val b = s.getBytes("UTF-8")
+    h60.of(b, 0, b.length)
   }
 
   def compute(input: UTF8String): ArrayData = {
     val trimmed = input.trim() // ASCII-space trim, same as SQL trim()
     val t = trimmed.toString
-    val digest = md5.get()
     // Spark's split(str, regex) runs with limit -1 (keep trailing empties)
     val toks = ws.split(t, -1)
     if (toks.length < k)
-      return new GenericArrayData(Array[Any](h60(digest, t)))
+      return new GenericArrayData(Array[Any](h60.of(trimmed)))
     val seen = new java.util.LinkedHashSet[java.lang.Long]()
     val sb = new java.lang.StringBuilder()
     var i = 0
@@ -79,7 +76,7 @@ case class WordShingleHashes(child: Expression, k: Int) extends UnaryExpression 
         sb.append(toks(i + j))
         j += 1
       }
-      seen.add(h60(digest, sb.toString))
+      seen.add(h60Of(sb.toString))
       i += 1
     }
     val out = new Array[Any](seen.size)

@@ -1,10 +1,12 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.NormSpace
+import graft.functions.{NormSpace, SubstrHashBlocks}
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.reflect.runtime.universe.TypeTag
 
 /** Deduplication operators over `documents` / `embeddings`:
   *
@@ -130,7 +132,7 @@ object Dedup extends Logging {
     * char, packed per hash bucket, instead of L+16; md5-derived, so both
     * engines agree bit-for-bit and a collision — ~N²/2^60 — would be the
     * same collision in the oracle), the duplicate test is a count table
-    * over each bucket's hashes ([[duplicatedSpans]]), and span merging is a
+    * over each bucket's hashes ([[exactSubstr]]), and span merging is a
     * per-doc kernel bounded by one document's own length (the
     * [[graft.operators.Relational.q23_sessionize]]
     * recurrence: stride-1 positions are sorted, so a span breaks exactly
@@ -140,63 +142,59 @@ object Dedup extends Logging {
     * of length ≥ L + s − 1 is still caught) at 1/s the shuffle. */
   private val SubstrLen = 50
 
-  /** Shared pipeline for the exact-substr pair: normalized docs
-    * (doc_id, t, len) and the merged duplicated spans
-    * (doc_id, span_id, sp_start, sp_end), 1-based inclusive. */
-  private def exactSubstrSpans(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val docs = Tables.documents(s, dir)
-      .select(col("doc_id"), NormSpace.of(col("text")).as("t"))
-      .withColumn("len", length(col("t")))
-    (docs, duplicatedSpans(docs))
-  }
-
-  /** Merged duplicated spans (doc_id, span_id, sp_start, sp_end) of the
-    * normalized texts `docs(doc_id, t, len)`: two shuffles, each feeding
-    * one kernel of [[graft.functions.SubstrHashBlocks]].
+  /** The exact-substring pipeline both queries share, over `docs(doc_id,
+    * text)` with non-null `doc_id`: one pass of each document through two
+    * shuffles, ending in a per-document kernel (`finish`, given the window
+    * length) that emits the query's row.
     *
-    * Duplicate finding ships packed blocks, not window rows: the
-    * `substr_hash_blocks` expression hashes each document's windows once
-    * and groups them into at most B blocks `(bucket, h[], pos[])` with
-    * `bucket = h mod B`, where B is the session's shuffle-partition count.
-    * The blocks are exploded and partitioned by `bucket` itself
-    * (`repartitionById`, so bucket b is partition b), which puts every
+    * Each text is normalized once (`norm_space`), and the
+    * `substr_hash_blocks` expression hashes its windows once and groups
+    * them into at most B blocks `(bucket, h[], pos[])` with `bucket = h
+    * mod B`, where B is the session's shuffle-partition count, plus one
+    * marker `(n_chars, t)` that stands for the input row (`t` only when
+    * `withText`). The rows are exploded and partitioned by `bucket` itself
+    * (`repartitionById`, so bucket b is partition b; a marker has no
+    * bucket and goes to partition `doc_id mod B`), which puts every
     * occurrence of a hash in one partition: there a partition-local count
     * is the corpus-wide count, taken in one open-addressing count table
     * ([[graft.functions.SubstrHashBlocks.duplicated]]). Only a block's
     * duplicated positions leave it, as one ascending `int[]` per
     * `(doc, block)`: the windows `count(*) OVER (PARTITION BY h) >= 2`
-    * selects, without a Spark row per window. The finder holds its
-    * partition in memory (12 to 24 bytes per window beside the blocks'
-    * 12) and does not spill, so it is bounded by windows ÷ shuffle
-    * partitions (SCALE.md).
+    * selects, without a Spark row per window. Markers pass through. The
+    * finder holds its partition's blocks in memory (12 to 24 bytes per
+    * window beside the blocks' 12) and does not spill, so it is bounded
+    * by windows ÷ shuffle partitions (SCALE.md).
     *
-    * Span merging shuffles those rows on `doc_id`, sorts each partition by
-    * `doc_id`, and runs [[graft.functions.SubstrHashBlocks.spans]] over
-    * each document's sorted positions: a new span starts when the gap to
-    * the previous window exceeds the window length. It holds one
-    * document's positions at a time. */
-  private[graft] def duplicatedSpans(docs: DataFrame): DataFrame = {
-    import graft.functions.SubstrHashBlocks
+    * The second shuffle is by `doc_id`; each partition is sorted by
+    * `doc_id`, and `finish` sees each document's positions and markers
+    * together, merges the positions into maximal spans (a new span starts
+    * when the gap to the previous window exceeds the window length) and
+    * emits one row per marker, so a document without spans, a short one
+    * and a NULL text keep their rows with no aggregate or join. A doc_id
+    * on several input rows gets one row per input row, each with the spans
+    * merged from all of them. It holds one document's rows at a time. */
+  private[graft] def exactSubstr[O <: Product : TypeTag](docs: DataFrame, withText: Boolean)(
+      finish: Int => Iterator[SubstrHashBlocks.Hits] => Iterator[O]): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
     val buckets = s.conf.get("spark.sql.shuffle.partitions").toInt
-    docs.filter(col("len") >= SubstrLen)
-      .select(col("doc_id"),
-        explode(SubstrHashBlocks.of(col("t"), SubstrLen, buckets)).as("b"))
-      .select(col("doc_id"), col("b.bucket").as("bucket"), col("b.h").as("h"),
-        col("b.pos").as("pos"))
-      .repartitionById(buckets, col("bucket"))
+    docs.select(col("doc_id"),
+        explode(SubstrHashBlocks.of(NormSpace.of(col("text")), SubstrLen, buckets, withText)).as("b"))
+      .select(col("doc_id"), col("b.*"))
+      .repartitionById(buckets,
+        coalesce(col("bucket"), pmod(col("doc_id"), lit(buckets.toLong)).cast("int")))
       .drop("bucket")
       .as[SubstrHashBlocks.Block]
       .mapPartitions(SubstrHashBlocks.duplicated)
       .repartition(buckets, col("doc_id"))
       .sortWithinPartitions(col("doc_id"))
-      .mapPartitions(SubstrHashBlocks.spans(SubstrLen))
+      .mapPartitions(finish(SubstrLen))
       .toDF()
   }
 
   /** Shared oracle CTE chain ending at `spans(doc_id, span_id, sp_start,
-    * sp_end)` — the DuckDB mirror of [[exactSubstrSpans]]. */
+    * sp_end)`: the DuckDB mirror of [[exactSubstr]] up to the spans its
+    * per-document kernel merges. */
   private val exactSubstrSpansCtes: String =
     s"""d AS MATERIALIZED (
        |  SELECT doc_id, regexp_replace(trim(text), '\\s+', ' ', 'g') AS t
@@ -224,19 +222,8 @@ object Dedup extends Logging {
        |         max(pos) + ${SubstrLen - 1} AS sp_end
        |  FROM sp GROUP BY 1, 2)""".stripMargin
 
-  def dedup_exact_substr(s: SparkSession, dir: String): DataFrame = {
-    val (docs, spans) = exactSubstrSpans(s, dir)
-    val perDoc = spans.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_dup_spans"),
-        sum(col("sp_end") - col("sp_start") + 1).as("dup_chars"),
-        min(col("sp_start")).cast("long").as("first_span_start"))
-    docs.select(col("doc_id"), col("len").cast("long").as("n_chars"))
-      .join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_chars"),
-        coalesce(col("n_dup_spans"), lit(0L)).as("n_dup_spans"),
-        coalesce(col("dup_chars"), lit(0L)).cast("long").as("dup_chars"),
-        coalesce(col("first_span_start"), lit(0L)).as("first_span_start"))
-  }
+  def dedup_exact_substr(s: SparkSession, dir: String): DataFrame =
+    exactSubstr(Tables.documents(s, dir), withText = false)(SubstrHashBlocks.stats)
 
   val dedup_exact_substr_sql: String =
     s"""WITH $exactSubstrSpansCtes,
@@ -256,40 +243,13 @@ object Dedup extends Logging {
     * on the training corpus (where [[dedup_segments]] drops fixed word
     * segments, this removes exact char-level duplicated regions of any
     * alignment). The kept text is the concatenation of the COMPLEMENT
-    * intervals: per doc, each span row emits the gap before it (bounded by
-    * the previous span's end via `lag`) and the last span also emits the
-    * tail gap; a document with no spans keeps its whole text through the
-    * left join. Scale: everything after the shared span pipeline is
-    * per-doc-bounded — the gap window, the substring cuts, and the ordered
-    * reassembly (`collect_list` bounded by one doc's span count ≤ len/L). */
-  def dedup_substr_clean(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (docs, spans) = exactSubstrSpans(s, dir)
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("sp_start"))
-    // two candidate keep-intervals per span row: the gap before this span,
-    // and (for the doc's last span only) the tail gap after it
-    val gaps = docs.join(spans, Seq("doc_id"), "left")
-      .withColumn("g1s", coalesce(lag(col("sp_end"), 1).over(w), lit(0)) + 1)
-      .withColumn("g1e", coalesce(col("sp_start") - 1, col("len")))
-      .withColumn("g2s",
-        when(col("sp_start").isNotNull && lead(col("sp_start"), 1).over(w).isNull,
-          col("sp_end") + 1))
-      .withColumn("g2e", col("len"))
-      .select(col("doc_id"), col("t"),
-        explode(expr("array(struct(g1s AS gs, g1e AS ge), struct(g2s AS gs, g2e AS ge))"))
-          .as("g"))
-      .select(col("doc_id"), col("g.gs").as("gs"),
-        expr("substring(t, g.gs, g.ge - g.gs + 1)").as("piece"))
-      .filter(col("gs").isNotNull && length(col("piece")) > 0)
-    val rebuilt = gaps.groupBy(col("doc_id"))
-      .agg(expr(
-        "array_join(transform(array_sort(collect_list(struct(gs, piece))), x -> x.piece), '')")
-        .as("kept"))
-    docs.join(rebuilt, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("kept"), lit("")).as("text_clean"),
-        length(coalesce(col("kept"), lit(""))).cast("long").as("n_chars_clean"))
-  }
+    * intervals, cut by codepoint position by the per-document kernel from
+    * the normalized text its marker carries; a document with no spans
+    * keeps its whole text, a NULL text keeps an empty one. Scale:
+    * everything after the finder is per-doc-bounded (one document's
+    * positions and text). */
+  def dedup_substr_clean(s: SparkSession, dir: String): DataFrame =
+    exactSubstr(Tables.documents(s, dir), withText = true)(SubstrHashBlocks.clean)
 
   val dedup_substr_clean_sql: String =
     s"""WITH $exactSubstrSpansCtes,
@@ -1140,17 +1100,13 @@ object Dedup extends Logging {
   /** 60-bit SimHash over the (multiset of) tokens + a 16-bit band prefix for
     * bucketing. Pure integer pipeline, mirrored exactly by the oracle. */
   def dedup_simhash(s: SparkSession, dir: String): DataFrame = {
-    // Compiled single fold over the token hashes maintaining all 60 bit
-    // counters ([[graft.functions.SimHashBits]], round 17): the previous
-    // SQL aggregate/zip_with chain evaluated INTERPRETED — a fresh
-    // 60-element counter array per token plus boxed md5→conv lambdas
-    // (guide §4: no interpreted expressions in the hot path); the per-bit
-    // formulation before it re-hashed every token once per bit (~30x,
-    // measured round 12). Same per-token h60, same majority rule —
-    // bit-identical fingerprints, pinned by SimHashBitsSuite against the
-    // interpreted pipeline.
+    // One compiled pass ([[graft.functions.SimHashBits]]): it splits the
+    // text by the rule of `split(trim(text), '\\s+')` and folds each token's
+    // h60 into 60 bit counters in place, with no regex, token strings or
+    // interpreted lambdas; SimHashBitsSuite pins it bit for bit against the
+    // split-then-fold SQL pipeline the oracle mirrors.
     Tables.documents(s, dir)
-      .withColumn("simhash", graft.functions.SimHashBits.of(expr(toksS)))
+      .withColumn("simhash", graft.functions.SimHashBits.of(col("text")))
       .select(col("doc_id"), col("simhash"),
         expr("simhash >> 44").as("band16"))
   }

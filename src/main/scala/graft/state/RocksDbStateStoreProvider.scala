@@ -71,7 +71,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
   @volatile private var storeConf: StateStoreConf = _
   @volatile private var hadoopConf: Configuration = _
   @volatile private var conf: RocksDbConf = _
-  @volatile private var snapshots: SnapshotManager = _
+  @volatile private[state] var snapshots: SnapshotManager = _
   @volatile private[state] var tempRoot: File = _
   @volatile private var ckptIdsEnabled: Boolean = false
   @volatile private var schemaProvider: Option[StateSchemaProvider] = None
@@ -229,7 +229,10 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
               s"Cannot materialize state version $version (commit $id) of $stateStoreId_: " +
                 "snapshot or changelog chain missing or unreadable")), None))
         } else {
-          def load(v: Long) = takeLocal(v, None).orElse(rebuild((v, None)).map(d => (d, None)))
+          // bases that failed once in this load are not tried again
+          val badBases = mutable.Set.empty[SnapshotManager.Commit]
+          def load(v: Long) =
+            takeLocal(v, None).orElse(rebuild((v, None), badBases).map(d => (d, None)))
           load(version).getOrElse {
             val candidates = (snapshots.listing().versions ++ localSnapshots.keySet().asScala)
               .filter(v => v < version && v > 0).toSeq.sorted(Ordering.Long.reverse)
@@ -289,17 +292,23 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       .orElse(snapshots.listing().idsAt(version).maxOption)
 
   /** Recover commit `top` from the durable files: the first chain of
-    * [[SnapshotManager.chains]] (newest base first) that materializes. */
-  private def rebuild(top: SnapshotManager.Commit): Option[File] = {
+    * [[SnapshotManager.chains]] (newest base first) that materializes,
+    * skipping chains that end at a base in `badBases`. A chain that fails
+    * other than on one of its deltas adds its base there, so a caller that
+    * tries several versions (v1's fallback) downloads a bad base once. */
+  private def rebuild(top: SnapshotManager.Commit,
+      badBases: mutable.Set[SnapshotManager.Commit] = mutable.Set.empty): Option[File] = {
     val files = snapshots.listing()
-    try snapshots.chains(top, files.snapshots, files).flatMap { chain =>
-      try Some(materialize(chain))
-      catch {
-        case NonFatal(e) =>
-          logWarning(s"Recovery of $top from base ${chain.base} failed for $stateStoreId_: $e")
-          None
-      }
-    }.nextOption()
+    try snapshots.chains(top, files.snapshots, files).filterNot(c => badBases(c.base))
+      .flatMap { chain =>
+        try Some(materialize(chain))
+        catch {
+          case NonFatal(e) =>
+            if (!e.isInstanceOf[BadDelta]) badBases += chain.base
+            logWarning(s"Recovery of $top from base ${chain.base} failed for $stateStoreId_: $e")
+            None
+        }
+      }.nextOption()
     catch {
       case NonFatal(e) =>
         logWarning(s"No recovery chain for $top of $stateStoreId_: $e")
@@ -323,6 +332,11 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     }
   }
 
+  /** A recovery failure while replaying delta `version`: the chain's base
+    * may still serve a lower version. */
+  private case class BadDelta(version: Long, cause: Throwable)
+      extends Exception(s"changelog $version could not be replayed: $cause", cause)
+
   /** Apply the changelog deltas of `chain` (ascending `(version, ckptId)`)
     * to the DB at `dir` (byte-level — no key/value codecs), then flush so
     * the dir is self-contained. */
@@ -330,14 +344,14 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     val opened = openDb(dir, verifyOnly = false)
     try {
       chain.foreach { case (dv, did) =>
-        Changelog.read(snapshots.openDelta(dv, did)).foreach { r =>
+        try Changelog.read(snapshots.openDelta(dv, did)).foreach { r =>
           val h = opened.handles.getOrElseUpdate(r.cf, {
             opened.db.createColumnFamilyWithTtl(
               new ColumnFamilyDescriptor(r.cf.getBytes("UTF-8"), cfOptions()), compactionTtlFor(r.cf))
           })
           if (r.op == Changelog.OpPut) opened.db.put(h, r.key, r.value)
           else opened.db.delete(h, r.key)
-        }
+        } catch { case NonFatal(e) => throw BadDelta(dv, e) }
       }
       val fo = new FlushOptions().setWaitForFlush(true)
       try opened.db.flush(fo, opened.handles.values.toSeq.asJava) finally fo.close()

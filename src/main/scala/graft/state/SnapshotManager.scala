@@ -63,9 +63,11 @@ final class SnapshotManager(baseDir: Path, hadoopConf: Configuration) extends Lo
 
   /** Lifetime observability counters for this store instance: bytes
     * actually shipped (zips, deltas, new pool SSTs) vs SST bytes the
-    * content-address dedup skipped, surfaced as provider custom metrics. */
+    * content-address dedup skipped, surfaced as provider custom metrics,
+    * and the snapshot downloads started. */
   val bytesUploaded = new java.util.concurrent.atomic.AtomicLong()
   val bytesDeduped = new java.util.concurrent.atomic.AtomicLong()
+  val downloads = new java.util.concurrent.atomic.AtomicLong()
 
   def ensureBaseDir(): Unit = mkdirs(baseDir)
 
@@ -182,6 +184,7 @@ final class SnapshotManager(baseDir: Path, hadoopConf: Configuration) extends Lo
     * empty): inline entries directly, pool-referenced SSTs under their
     * original local names. */
   def download(version: Long, destDir: File, ckptId: Option[String] = None): Unit = {
+    downloads.incrementAndGet()
     // the base name only: no path traversal out of destDir
     def local(name: String) = new File(destDir, new File(name).getName)
     val refs = manifest(version, ckptId) { (name, in) =>

@@ -1,13 +1,13 @@
 package graft
 
-import graft.functions.NormSpace
 import graft.operators.{Dedup, Pipeline, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
-import org.apache.spark.sql.functions.{col, length}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -50,20 +50,33 @@ class PlanShapeSuite extends AnyFunSuite with BeforeAndAfterAll
     }.map(System.identityHashCode).distinct.size
   }
 
+  /** The final adaptive plan of `df`, after `collect()`, with each node
+    * once (a reused stage is one node reached twice). */
+  private def finalPlanNodes(df: DataFrame): Seq[SparkPlan] = {
+    df.collect()
+    assert(df.queryExecution.executedPlan.toString.contains("isFinalPlan=true"))
+    collectWithSubqueries(df.queryExecution.executedPlan) { case p => p }
+      .groupBy(System.identityHashCode).values.map(_.head).toSeq
+  }
+
+  private def count[T: scala.reflect.ClassTag](nodes: Seq[SparkPlan]): Int =
+    nodes.count(implicitly[scala.reflect.ClassTag[T]].runtimeClass.isInstance)
+
   test("dedup_exact_substr: no window operator; its spans take exactly two shuffles") {
-    val q = Dedup.dedup_exact_substr(spark, sfDir)
-    q.collect()
-    assert(collectWithSubqueries(q.queryExecution.executedPlan) { case w: WindowExec => w }
-      .isEmpty, "span merging is the per-document kernel, not lag/sum windows")
-    val docs = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), NormSpace.of(col("text")).as("t"))
-      .withColumn("len", length(col("t")))
-    val spans = Dedup.duplicatedSpans(docs)
-    spans.collect()
-    val shuffles = collectWithSubqueries(spans.queryExecution.executedPlan) {
-      case e: ShuffleExchangeExec => e
-    }.map(System.identityHashCode).distinct.size
-    assert(shuffles === 2, "one shuffle by hash bucket, one by doc_id")
+    val nodes = finalPlanNodes(Dedup.dedup_exact_substr(spark, sfDir))
+    assert(count[FileSourceScanExec](nodes) === 1, "one pass over the corpus")
+    assert(count[ShuffleExchangeExec](nodes) === 2, "one shuffle by hash bucket, one by doc_id")
+    assert(count[BroadcastExchangeExec](nodes) === 0, "no broadcast")
+    assert(count[BaseAggregateExec](nodes) === 0, "the kernel emits each row; no aggregate")
+    assert(count[BaseJoinExec](nodes) === 0, "markers carry every row; no join")
+    assert(count[WindowExec](nodes) === 0, "span merging is the kernel, not lag/sum windows")
+  }
+
+  test("dedup_substr_clean: one scan, no join and no window operator") {
+    val nodes = finalPlanNodes(Dedup.dedup_substr_clean(spark, sfDir))
+    assert(count[FileSourceScanExec](nodes) === 1, "one pass over the corpus")
+    assert(count[BaseJoinExec](nodes) === 0, "markers carry each text to the kernel")
+    assert(count[WindowExec](nodes) === 0, "the kernel cuts the spans; no lag/lead")
   }
 
   test("text_tfidf_top explodes the corpus once (reused exchange)") {

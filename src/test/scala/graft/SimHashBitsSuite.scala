@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** [[graft.functions.SimHashBits]] vs the interpreted SQL fold it replaces
   * (the round-16 dedup_simhash spelling) — bit-identical fingerprints on
-  * the fixture corpus and on adversarial token lists. */
+  * the fixture corpus and on adversarial token lists, and for text input
+  * equal to `split(trim(text), '\\s+')` then the fold. */
 class SimHashBitsSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -41,13 +42,15 @@ class SimHashBitsSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   test("kernel equals the interpreted fold on the fixture corpus") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select(expr("split(trim(text), '\\\\s+')").as("toks"))
+      .select(col("text"), expr("split(trim(text), '\\\\s+')").as("toks"))
     val diff = docs
       .select(graft.functions.SimHashBits.of(col("toks")).as("a"),
         expr(sqlFold).as("b"))
       .filter(col("a") =!= col("b"))
       .count()
     assert(diff === 0L, "kernel diverged from the interpreted SimHash fold")
+    // and on the text itself, split by the kernel
+    assertTextEqualsSplitFold(docs)
   }
 
   test("kernel matches on adversarial token lists") {
@@ -90,5 +93,33 @@ class SimHashBitsSuite extends AnyFunSuite with BeforeAndAfterAll {
     val nullArray = Seq[Seq[String]](null).toDF("toks")
       .select(graft.functions.SimHashBits.of(col("toks")), expr(sqlFold)).head()
     assert(nullArray.isNullAt(0) && nullArray.isNullAt(1), "a null array yields null")
+  }
+
+  /** `simhash_bits(text)` against split-then-fold over a `text` column,
+    * in generated code and interpreted. */
+  private def assertTextEqualsSplitFold(texts: org.apache.spark.sql.DataFrame): Unit = {
+    val toks = texts.select(col("text"), expr("split(trim(text), '\\\\s+')").as("toks"))
+    val rows = toks.select(col("text"), graft.functions.SimHashBits.of(col("text")).as("a"),
+      expr(sqlFold).as("b")).collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      assert(r.get(1) === r.get(2), s"text ${Option(r.getString(0)).map(_.take(40))}")
+      if (r.getString(0) != null) {
+        val interpreted = graft.functions.SimHashBits(
+          org.apache.spark.sql.catalyst.expressions.Literal(r.getString(0))).eval(null)
+        assert(interpreted === r.get(2), "interpreted eval")
+      }
+    }
+  }
+
+  test("text input equals split-then-fold on whitespace, empty and multi-byte edges") {
+    val s = spark; import s.implicits._
+    assertTextEqualsSplitFold(Seq(
+      "a\tb", "a\u000Bb", "a\r\nb", "a \t\n b",  // tab, \x0B, CRLF, mixed run
+      "\tlead", "trail\t", "\tboth\t", "\t", " \t ",  // edge runs give empty tokens
+      "   ", "", " x ",                                // all-space and empty give [""]
+      "no\u00A0break", "\u00A0", "你好 世界\u3000全角",    // U+00A0, U+3000 are not \s
+      "😀 café😀", "\fform\ffeed\f", null
+    ).toDF("text"))
   }
 }

@@ -333,15 +333,18 @@ class StateFsckSuite extends AnyFunSuite with BeforeAndAfterAll {
       val fsckOk = clean(reportRows(StateFsck.run(spark, root)).head)
       // v1 falls back to an older version (other rows), v2 throws
       val p = newProvider(s"$root/state", conf)
-      val recovered =
-        try scala.util.Try {
+      val (recovered, downloads) =
+        try (scala.util.Try {
           val s = p.getStore(top, id)
           try readAll(s) finally s.abort()
-        }.toOption.contains(expected)
+        }.toOption.contains(expected), p.snapshots.downloads.get())
         finally p.close()
       val label = s"${if (v2) "v2" else "v1"}, $what, seed $seed"
       assert(fsckOk === recovered, s"$label: fsck clean=$fsckOk, provider recovered=$recovered")
       assert(recovered === (what == "none"), s"$label: recovered=$recovered")
+      // v1's fallback tries versions 5, 4 and 3, all over base 3: a base
+      // that failed once is not downloaded again
+      if (!v2) assert(downloads === 1L, s"$label: snapshot downloads")
     }
   }
 
