@@ -4,14 +4,13 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** 60-bit SimHash of a token list in ONE native pass — the compiled
+/** 60-bit SimHash of a text's tokens in ONE native pass — the compiled
   * equivalent of the SQL fold [[graft.operators.Dedup.dedup_simhash]]'s
-  * oracle runs:
+  * oracle runs over `toks = split(trim(text), '\\s+')`:
   * {{{
   *   aggregate(zip_with(aggregate(transform(toks, t -> h60(t)), ...60-int
   *   counters..., zip_with per token), ...), bit assembly)
@@ -21,20 +20,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * per-token hash, same majority rule (`counter > 0` sets the bit),
   * bit-identical fingerprint.
   *
-  * The input is either the token array or a string, whose tokens are
-  * those of `split(trim(s), '\\s+')`, taken from its UTF-8 bytes without
-  * a regex or a token copy: `trim` strips 0x20 at both ends, and the rest
-  * splits at every run of [[NormSpace]]'s whitespace bytes, so a leading
-  * or trailing run (of other whitespace than 0x20) gives an empty token
-  * and an empty trimmed string gives the one token `""`. Every character
+  * The tokens are taken from the text's UTF-8 bytes without a regex or a
+  * token copy: `trim` strips 0x20 at both ends, and the rest splits at
+  * every run of [[NormSpace]]'s whitespace bytes, so a leading or trailing
+  * run (of other whitespace than 0x20) gives an empty token and an empty
+  * trimmed string gives the one token `""`. Every character
   * `\s` matches is one ASCII byte and no byte of a multi-byte UTF-8
   * sequence is below 0x80, so the byte walk splits where the regex does;
-  * the string is taken to be valid UTF-8, as for [[NormSpace]].
-  *
-  * A null token votes 0 on every bit, as in the fold: there its hash is
-  * null, `(h >> b) & 1 = 1` is null, and the `CASE` falls to its `ELSE -1`
-  * branch for all 60 counters. The fingerprint stays non-null; only a
-  * null input yields null, like any unary expression.
+  * the string is taken to be valid UTF-8, as for [[NormSpace]]. A null
+  * text yields null, like any unary expression.
   */
 case class SimHashBits(child: Expression) extends UnaryExpression {
 
@@ -43,22 +37,19 @@ case class SimHashBits(child: Expression) extends UnaryExpression {
   override def stateful: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType | ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case StringType => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string or array<string>, got ${t.catalogString}")
+      s"$prettyName requires a string input, got ${t.catalogString}")
   }
 
   @transient private lazy val h60 = new H60
 
-  override def nullSafeEval(input: Any): Any = input match {
-    case t: UTF8String => SimHashBits.ofText(t, h60)
-    case toks: ArrayData => SimHashBits.ofTokens(toks, h60)
-  }
+  override def nullSafeEval(input: Any): Any =
+    SimHashBits.compute(input.asInstanceOf[UTF8String], h60)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val h = H60.state(ctx)
-    val f = if (child.dataType == StringType) "ofText" else "ofTokens"
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.functions.SimHashBits.$f($c, $h);")
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.functions.SimHashBits.compute($c, $h);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): SimHashBits =
@@ -67,7 +58,7 @@ case class SimHashBits(child: Expression) extends UnaryExpression {
 
 object SimHashBits {
   /** The fingerprint of the tokens of `split(trim(t), '\\s+')`. */
-  def ofText(t: UTF8String, h60: H60): Long = {
+  def compute(t: UTF8String, h60: H60): Long = {
     val (bytes, base) = H60.bytesOf(t)
     var s = base
     var e = base + t.numBytes
@@ -85,19 +76,13 @@ object SimHashBits {
     }
     if (inRun) start = e
     vote(counters, h60.of(bytes, start, e - start))
-    bits(counters)
-  }
-
-  /** The fingerprint of a token array; a null token votes 0 on every bit. */
-  def ofTokens(toks: ArrayData, h60: H60): Long = {
-    val n = toks.numElements()
-    val counters = new Array[Int](60)
-    var i = 0
-    while (i < n) {
-      vote(counters, if (toks.isNullAt(i)) 0L else h60.of(toks.getUTF8String(i)))
-      i += 1
+    var out = 0L
+    var b = 0
+    while (b < 60) {
+      if (counters(b) > 0) out |= 1L << b
+      b += 1
     }
-    bits(counters)
+    out
   }
 
   private def vote(counters: Array[Int], h: Long): Unit = {
@@ -108,17 +93,7 @@ object SimHashBits {
     }
   }
 
-  private def bits(counters: Array[Int]): Long = {
-    var out = 0L
-    var b = 0
-    while (b < 60) {
-      if (counters(b) > 0) out |= 1L << b
-      b += 1
-    }
-    out
-  }
-
-  /** `simhash_bits(text or toks)` as a Column. */
-  def of(textOrToks: Column): Column =
-    ColumnBridge.column(SimHashBits(ColumnBridge.expression(textOrToks)))
+  /** `simhash_bits(text)` as a Column. */
+  def of(text: Column): Column =
+    ColumnBridge.column(SimHashBits(ColumnBridge.expression(text)))
 }

@@ -37,27 +37,20 @@ class PlanShapeSuite extends AnyFunSuite with BeforeAndAfterAll
 
   override def afterAll(): Unit = spark.stop()
 
-  private def executedScans(df: DataFrame): Int = {
+  /** The final adaptive plan of `df`, each node once. */
+  private def finalPlanNodes(df: DataFrame): Seq[SparkPlan] = {
     // collect() (not a noop write — that plans a SEPARATE write query and
     // leaves this one un-executed) so executedPlan is the adaptive FINAL
     // plan; AQE only installs stage reuse at runtime
     df.collect()
     assert(df.queryExecution.executedPlan.toString.contains("isFinalPlan=true"))
     // a reused stage is the SAME node reached through two references —
-    // dedupe by identity so reuse counts as the one physical scan it is
-    collectWithSubqueries(df.queryExecution.executedPlan) {
-      case s: FileSourceScanExec => s
-    }.map(System.identityHashCode).distinct.size
-  }
-
-  /** The final adaptive plan of `df`, after `collect()`, with each node
-    * once (a reused stage is one node reached twice). */
-  private def finalPlanNodes(df: DataFrame): Seq[SparkPlan] = {
-    df.collect()
-    assert(df.queryExecution.executedPlan.toString.contains("isFinalPlan=true"))
+    // dedupe by identity so reuse counts as the one physical node it is
     collectWithSubqueries(df.queryExecution.executedPlan) { case p => p }
       .groupBy(System.identityHashCode).values.map(_.head).toSeq
   }
+
+  private def executedScans(df: DataFrame): Int = count[FileSourceScanExec](finalPlanNodes(df))
 
   private def count[T: scala.reflect.ClassTag](nodes: Seq[SparkPlan]): Int =
     nodes.count(implicitly[scala.reflect.ClassTag[T]].runtimeClass.isInstance)
