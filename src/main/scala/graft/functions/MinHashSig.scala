@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** MinHash signature of a shingle set, as a native Catalyst expression: for
   * each of the `as.length` hash functions j, the minimum over all shingles s

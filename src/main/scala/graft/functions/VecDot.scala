@@ -33,7 +33,7 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
     e.dataType.asInstanceOf[ArrayType].elementType
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(l: NumericType, _), ArrayType(r: NumericType, _)) => TypeCheckResult.TypeCheckSuccess
+    case (ArrayType(_: NumericType, _), ArrayType(_: NumericType, _)) => TypeCheckResult.TypeCheckSuccess
     case _ => TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires two arrays of numeric elements, " +
         s"got ${left.dataType.catalogString} and ${right.dataType.catalogString}")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import scala.util.{Failure, Success, Try}
+import scala.util.{Success, Try}
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.internal.Logging

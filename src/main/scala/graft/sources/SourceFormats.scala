@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -399,7 +397,7 @@ object SourceFormats {
   private val stagedMalformed = new graft.Memo[String]
 
   def src_malformed(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{StringType, StructType}
+    import org.apache.spark.sql.types.StringType
     val schema = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("text")).schema
       .add("_corrupt_record", StringType)

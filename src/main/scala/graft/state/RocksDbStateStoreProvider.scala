@@ -1,7 +1,6 @@
 package graft.state
 
-import java.io.{File, FileInputStream, FileOutputStream}
-import java.util.Properties
+import java.io.File
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
@@ -45,6 +44,11 @@ import org.rocksdb._
   *    forgot deadlines on every new batch and on failover — SURVEY §7.4),
   *    strict deadlines here live in a parallel RocksDB column family and ride
   *    the same snapshots, so exact expiry survives both.
+  *  - Each batch's update is one put/delete log: every change to user
+  *    state goes through the store's one `write`, which keeps `numKeys`,
+  *    the changelog record and the strict deadline in step, and every
+  *    column family is opened by one `cfHandle` with the TTL of
+  *    [[compactionTtlFor]].
   *
   * Spark 4 SPI surface beyond the reference: real prefix scans (the
   * reference's `getRange` ignored its bounds, `:190-193`), byte-ordered range
@@ -200,9 +204,9 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
   /** Resolve a local directory containing committed state for `version` and
     * open a store over it. Hot path first: the registered local dir of
     * exactly that commit ([[takeLocal]]), usually with the previous batch's
-    * open RocksDB handle to adopt (measured round 16: 13.5 ms open + 1.2 ms
-    * close per store per micro-batch, the largest provider-owned fixed cost
-    * left; VERDICT r16 item 1). Otherwise recovery from the durable files;
+    * open RocksDB handle to adopt (an open and close cost 13.5 ms + 1.2 ms
+    * per store per micro-batch, the largest provider-owned fixed cost).
+    * Otherwise recovery from the durable files;
     * on corruption fall back loudly to the newest older snapshot, then to
     * empty state — the reference's resilience contract (`:384-401`, tested
     * `RocksDbStateStoreProviderSuite.scala:106-133`). */
@@ -345,10 +349,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     try {
       chain.foreach { case (dv, did) =>
         try Changelog.read(snapshots.openDelta(dv, did)).foreach { r =>
-          val h = opened.handles.getOrElseUpdate(r.cf, {
-            opened.db.createColumnFamilyWithTtl(
-              new ColumnFamilyDescriptor(r.cf.getBytes("UTF-8"), cfOptions()), compactionTtlFor(r.cf))
-          })
+          val h = opened.cfHandle(r.cf)
           if (r.op == Changelog.OpPut) opened.db.put(h, r.key, r.value)
           else opened.db.delete(h, r.key)
         } catch { case NonFatal(e) => throw BadDelta(dv, e) }
@@ -410,7 +411,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     // a WRITABLE replayed store commits endVersion+1 with this as its
     // lineage header, so the chain walks back through the exact commit the
     // caller replayed — `None` here would break lineage recovery of any
-    // commit built on top of a replay (round-7 ADVICE carryover).
+    // commit built on top of a replay.
     val top = (endVersion, endCommitId(endVersion, endStateStoreCkptId))
     val files = snapshots.listing()
     val chain = chainDownTo(top, snapshotVersion, files)
@@ -591,14 +592,16 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
   // ------------------------------------------------------------------
 
   /** TtlDB compaction-time expiry for a column family. Zero (= never) for
-    * internal families, no-TTL configs, AND strict mode: TtlDB expires by
+    * internal families ([[isInternalCf]]: commit bookkeeping and Spark's
+    * transformWithState indexes must not vanish under the user's TTL),
+    * no-TTL configs, AND strict mode: TtlDB expires by
     * last-PUT time, but strict semantics reset on ACCESS — letting
     * compaction drop a record that reads kept alive (deadline refreshed,
     * data record untouched) would silently lose live state. In strict mode
     * the deadline CF is the only expiry authority; physically expired
     * entries are deleted on access instead. */
-  private def compactionTtlFor(cfName: String): Int =
-    if (cfName.startsWith(InternalCfPrefix) || conf.ttlSecs <= 0 || conf.strictExpire) 0
+  private[state] def compactionTtlFor(cfName: String): Int =
+    if (isInternalCf(cfName) || conf.ttlSecs <= 0 || conf.strictExpire) 0
     else conf.ttlSecs
 
   private def cfOptions(): ColumnFamilyOptions = {
@@ -629,11 +632,21 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     o
   }
 
-  private[state] case class OpenDb(db: TtlDB, handles: mutable.LinkedHashMap[String, ColumnFamilyHandle])
+  private def cfDescriptor(name: String): ColumnFamilyDescriptor =
+    new ColumnFamilyDescriptor(name.getBytes("UTF-8"), cfOptions())
+
+  private[state] case class OpenDb(db: TtlDB, handles: mutable.LinkedHashMap[String, ColumnFamilyHandle]) {
+    /** The family `name`, created if absent. Like [[openDb]] it takes its
+      * TTL from [[compactionTtlFor]], so a family expires the same way
+      * whether it was created, replayed or reopened. */
+    def cfHandle(name: String): ColumnFamilyHandle =
+      handles.getOrElseUpdate(name,
+        db.createColumnFamilyWithTtl(cfDescriptor(name), compactionTtlFor(name)))
+  }
 
   /** Open (or create) the DB at `dir` with every column family present on
     * disk. TtlDB gives the lazy compaction-time expiry floor (reference
-    * `:121`); deadline families never auto-expire. */
+    * `:121`); internal families never auto-expire. */
   private def openDb(dir: File, verifyOnly: Boolean): OpenDb = {
     val dbOptions = new DBOptions()
       .setCreateIfMissing(true)
@@ -655,7 +668,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
         .asScala.map(new String(_, "UTF-8")).toSeq
     }.getOrElse(Nil)
     val names = if (listed.isEmpty) Seq(DefaultCf) else listed
-    val descriptors = names.map(n => new ColumnFamilyDescriptor(n.getBytes("UTF-8"), cfOptions())).asJava
+    val descriptors = names.map(cfDescriptor).asJava
     val ttls = names.map(n => Integer.valueOf(compactionTtlFor(n))).asJava
     val handleList = new java.util.ArrayList[ColumnFamilyHandle]()
     val db = TtlDB.open(dbOptions, dir.getAbsolutePath, descriptors, handleList, ttls, false)
@@ -673,14 +686,16 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
   // The store
   // ------------------------------------------------------------------
 
-  /** Metadata for one user-visible column family. */
+  /** One registered column family: its codecs, its live key count, and the
+    * key-schema and registration JSON that commit persists in the meta CF. */
   private case class CfInfo(
       name: String,
       keyCodec: KeyCodec,
       valueCodec: ValueCodec,
-      numValueFields: Int,
       multiValued: Boolean,
       isInternal: Boolean,
+      keySchemaJson: String,
+      regJson: String,
       var numKeys: Long)
 
   /** One open store = one micro-batch's view: loaded at `version`, commits
@@ -710,10 +725,12 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
 
     private val opened = adoptedDb.getOrElse { dbOpens.incrementAndGet(); openDb(dir, verifyOnly = false) }
     openStores.add(this)
-    private def db: TtlDB = {
+    private def openChecked: OpenDb = {
       verify(!dbClosed, "State store RocksDB instance is already closed")
-      opened.db
+      opened
     }
+    private def db: TtlDB = openChecked.db
+    private def cfHandle(name: String): ColumnFamilyHandle = openChecked.cfHandle(name)
 
     /** Per-batch changelog; created on first need (write stores only). */
     private var changelogWriter: Option[Changelog.Writer] = None
@@ -725,10 +742,6 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       }
       changelogWriter.get
     }
-    private def recordPut(cf: String, k: Array[Byte], v: Array[Byte]): Unit =
-      if (conf.changelogEnabled) changelog.put(cf, k, v)
-    private def recordRemove(cf: String, k: Array[Byte]): Unit =
-      if (conf.changelogEnabled) changelog.remove(cf, k)
 
     /** Set when the changelog cannot express a change (column family drop):
       * this commit must publish a full snapshot. */
@@ -829,31 +842,26 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     // publication hazard. TrieMap gives lock-free reads with safe
     // publication of the CfInfo it returns.
     private val cfs = scala.collection.concurrent.TrieMap.empty[String, CfInfo]
-    private val cfKeySchemaJson = scala.collection.concurrent.TrieMap.empty[String, String]
-    private val cfRegJson = scala.collection.concurrent.TrieMap.empty[String, String]
     /** (persisted, registered) key-schema JSON per conflicting CF; thrown at
       * first use — see the deferred-check note in [[registerCf]]. */
     private val keySchemaConflicts =
       scala.collection.concurrent.TrieMap.empty[String, (String, String)]
 
-    /** numKeys per column family, persisted in an internal CF so counts ride
-      * both full snapshots and changelog deltas. */
-    private def metaHandle: ColumnFamilyHandle =
-      opened.handles.getOrElseUpdate(MetaCf,
-        opened.db.createColumnFamilyWithTtl(
-          new ColumnFamilyDescriptor(MetaCf.getBytes("UTF-8"), cfOptions()), 0))
-
     /** Per-CF numKeys plus the key schema each CF was written under, plus
       * the full registration record (key/value schemas + encoder spec +
       * multi-value flag, under a `cfreg:` prefix) — all persisted in the
-      * meta CF. The registration records make the store SELF-DESCRIBING: a
+      * meta CF, so they ride both full snapshots and changelog deltas. The
+      * registration records make the store SELF-DESCRIBING: a
       * cold reader (the `statestore` data source over a transformWithState
       * variable, or the offline repartition tool) can iterate a column
       * family the current session never registered, because Spark's reader
       * never calls `createColFamilyIfAbsent` — it expects the provider to
       * recall its own layout (Spark's built-in RocksDB provider persists
-      * the same information in its checkpoint metadata). */
-    private val persistedCounts = Map.newBuilder[String, Long]
+      * the same information in its checkpoint metadata). The maps are
+      * mutable: a CF drop deletes its entries mid-version, and commit's
+      * write-on-change checks must then see "nothing persisted" for a
+      * re-created family of the same name. */
+    private val persistedNumKeys = mutable.HashMap.empty[String, Long]
     private val persistedKeySchemas = mutable.HashMap.empty[String, String]
     private val persistedCfRegs = mutable.HashMap.empty[String, String]
     if (opened.handles.contains(MetaCf)) {
@@ -868,16 +876,11 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
           else if (k.startsWith(CfRegMetaPrefix))
             persistedCfRegs += k.stripPrefix(CfRegMetaPrefix) ->
               new String(it.value(), "UTF-8")
-          else persistedCounts += k -> beLong(it.value())
+          else persistedNumKeys += k -> beLong(it.value())
           it.next()
         }
       } finally it.close()
     }
-    // Mutable: a CF drop deletes its meta entry mid-version, and the commit's
-    // write-only-on-change check below must then see "no persisted count" for
-    // a re-created family of the same name, not the stale pre-drop value.
-    private val persistedCountsMap: mutable.HashMap[String, Long] =
-      mutable.HashMap.from(persistedCounts.result())
     registerCf(DefaultCf, keySchema, valueSchema, keyEncoderSpec, useMultipleValuesPerKey,
       isInternal = false, deferSchemaConflict = true)
 
@@ -929,22 +932,19 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
           keySchemaConflicts.put(name, (storedJson, keyJson))
         }
       }
-      cfKeySchemaJson.put(name, keyJson)
-      // put, not getOrElseUpdate: under VALUE-schema evolution a restarted
-      // query re-registers the family with the evolved value schema, and the
-      // persisted record must follow — a cold reader (the `statestore`
-      // source) rebuilds its codec from this record, and a stale
-      // pre-evolution schema there made it decode evolved families into
-      // rows one field short (the reader then read the added field past the
-      // row's end). Commit writes the record only when it differs from the
-      // persisted one, so the non-evolving steady state stays write-once.
-      cfRegJson.put(name, cfRegJsons.getOrElseUpdate(
+      // The registration record follows every registration: under
+      // VALUE-schema evolution a restarted query re-registers the family
+      // with the evolved value schema, and a cold reader (the `statestore`
+      // source) that rebuilt its codec from a stale record would decode
+      // rows one field short. Commit writes the record only when it differs
+      // from the persisted one, so the non-evolving steady state stays
+      // write-once.
+      val regJson = cfRegJsons.getOrElseUpdate(
         (cfKeySchema, cfValueSchema, spec, multiValued, isInternal),
-        RocksDbStateStoreProvider.cfRegToJson(cfKeySchema, cfValueSchema, spec, multiValued, isInternal)))
+        RocksDbStateStoreProvider.cfRegToJson(cfKeySchema, cfValueSchema, spec, multiValued, isInternal))
       val info = CfInfo(name, KeyCodec(spec),
         new ValueCodec(cfValueSchema.length, multiValued, evolution),
-        cfValueSchema.length, multiValued, isInternal,
-        persistedCountsMap.getOrElse(name, 0L))
+        multiValued, isInternal, keyJson, regJson, persistedNumKeys.getOrElse(name, 0L))
       cfs.put(name, info)
       info
     }
@@ -957,20 +957,13 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       * creation is not a changelog record, so a partition whose store
       * created a family at init but never wrote a row to it (e.g. a tws
       * variable or timer index on a partition that received no keys) loses
-      * the empty family across replay-from-empty recovery (possible since
-      * the version-1 chain-base snapshot was retired, round 16). Its
+      * the empty family across replay-from-empty recovery. Its
       * registration record still rides the meta CF's changelog entries, and
       * an empty family's content is exactly empty — recreate it. */
     private def autoRegisterPersistedCf(name: String): Option[CfInfo] =
       persistedCfRegs.get(name).map { json =>
         val (ks, vs, spec, mv, internal) = RocksDbStateStoreProvider.cfRegFromJson(json)
-        synchronized {
-          if (!opened.handles.contains(name)) {
-            val ttl = if (internal) 0 else compactionTtlFor(name)
-            opened.handles.put(name, db.createColumnFamilyWithTtl(
-              new ColumnFamilyDescriptor(name.getBytes("UTF-8"), cfOptions()), ttl))
-          }
-        }
+        synchronized(cfHandle(name))
         registerCf(name, ks, vs, spec, mv, internal)
       }
 
@@ -982,12 +975,11 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
         useMultipleValuesPerKey: Boolean,
         isInternal: Boolean): Unit = synchronized {
       verify(useColumnFamilies, "Column families are disabled for this store")
-      if (!opened.handles.contains(name)) {
-        val ttl = if (isInternal) 0 else compactionTtlFor(name)
-        val h = db.createColumnFamilyWithTtl(
-          new ColumnFamilyDescriptor(name.getBytes("UTF-8"), cfOptions()), ttl)
-        opened.handles.put(name, h)
-      }
+      // Spark's rule, which also keeps a user family out of the internal
+      // families' TTL (compactionTtlFor)
+      if (!isInternal && isInternalCf(name))
+        throw StateStoreErrors.cannotCreateColumnFamilyWithReservedChars(name)
+      cfHandle(name)
       if (!cfs.contains(name)) {
         registerCf(name, cfKeySchema, cfValueSchema, spec, useMultipleValuesPerKey, isInternal)
       }
@@ -1005,17 +997,14 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       if (existed) {
         // a CF drop is not expressible in the changelog record stream
         forceFullSnapshot = true
-        // forget the persisted count, or a re-created CF of the same name
-        // would resurrect it as a phantom numKeys base
-        db.delete(metaHandle, name.getBytes("UTF-8"))
-        // likewise the key schema: a re-created CF may legitimately differ
-        db.delete(metaHandle, (KeySchemaMetaPrefix + name).getBytes("UTF-8"))
-        db.delete(metaHandle, (CfRegMetaPrefix + name).getBytes("UTF-8"))
-        persistedCountsMap.remove(name)
+        // forget the persisted count, key schema and registration, or a
+        // re-created CF of the same name would resurrect a phantom numKeys
+        // base or reject a layout that may legitimately differ
+        Seq(name, KeySchemaMetaPrefix + name, CfRegMetaPrefix + name)
+          .foreach(k => db.delete(cfHandle(MetaCf), k.getBytes("UTF-8")))
+        persistedNumKeys.remove(name)
         persistedKeySchemas.remove(name)
         persistedCfRegs.remove(name)
-        cfKeySchemaJson.remove(name)
-        cfRegJson.remove(name)
       }
       existed
     }
@@ -1038,14 +1027,6 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
 
     private def deadlineCfName(cf: String): String = InternalCfPrefix + "ttl." + cf
 
-    private def deadlineHandleIfExists(cf: String): Option[ColumnFamilyHandle] =
-      opened.handles.get(deadlineCfName(cf))
-
-    private def deadlineHandle(cf: String): ColumnFamilyHandle =
-      opened.handles.getOrElseUpdate(deadlineCfName(cf),
-        db.createColumnFamilyWithTtl(
-          new ColumnFamilyDescriptor(deadlineCfName(cf).getBytes("UTF-8"), cfOptions()), 0))
-
     private def beLong(v: Long): Array[Byte] = {
       val out = new Array[Byte](8)
       var i = 0
@@ -1062,15 +1043,12 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       * Missing deadline (pre-strict data) counts as live — adoption happens
       * on the next access. */
     private def isLive(cf: String, keyBytes: Array[Byte]): Boolean = {
-      val d = db.get(deadlineHandle(cf), keyBytes)
+      val d = db.get(cfHandle(deadlineCfName(cf)), keyBytes)
       d == null || (clock() - beLong(d)) <= ttlMs
     }
 
-    private def touch(cf: String, keyBytes: Array[Byte]): Unit = {
-      val now = beLong(clock())
-      db.put(deadlineHandle(cf), keyBytes, now)
-      recordPut(deadlineCfName(cf), keyBytes, now)
-    }
+    private def touch(cf: String, keyBytes: Array[Byte]): Unit =
+      putOrDelete(deadlineCfName(cf), keyBytes, beLong(clock()))
 
     // -------------------- reads --------------------
 
@@ -1082,15 +1060,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
         if (strictTtl && !isLive(colFamilyName, kBytes)) {
           // strict mode is the only expiry authority (no TtlDB compaction
           // expiry) — reclaim the dead record on access
-          if (!readOnly && state == State.Updating) synchronized {
-            if (conf.trackTotalNumberOfRows && db.get(handle(colFamilyName), kBytes) != null) {
-              info.numKeys -= 1
-            }
-            db.delete(handle(colFamilyName), kBytes)
-            recordRemove(colFamilyName, kBytes)
-            db.delete(deadlineHandle(colFamilyName), kBytes)
-            recordRemove(deadlineCfName(colFamilyName), kBytes)
-          }
+          synchronized { if (!readOnly && state == State.Updating) write(info, kBytes, null) }
           null
         } else {
           val vBytes = db.get(handle(colFamilyName), kBytes)
@@ -1126,14 +1096,14 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       // each run under a native ref (see the lifetime contract on
       // [[nativeRefs]]): the iterator is consumed long after this method
       // returns, possibly racing a provider close from another thread.
-      val (it, dhOpt) = withNativeRef {
+      val it = withNativeRef {
         val i = db.newIterator(handle(cf))
         openIterators.add(i)
         lowerBound match {
           case Some(b) => i.seek(b)
           case None => i.seekToFirst()
         }
-        (i, if (strictTtl && !stateless) Some(deadlineHandle(cf)) else None)
+        i
       }
       val raw: Iterator[(Array[Byte], Array[Byte])] = new Iterator[(Array[Byte], Array[Byte])] {
         override def hasNext: Boolean = withNativeRef {
@@ -1150,15 +1120,8 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
         if (stateless) Iterator.empty
         // Iterator visibility honors strict expiry but does not reset
         // deadlines (matching reference `:272-276`).
-        else if (strictTtl) {
-          val dh = dhOpt.get
-          raw.filter { case (kBytes, _) =>
-            withNativeRef {
-              val d = db.get(dh, kBytes)
-              d == null || (clock() - beLong(d)) <= ttlMs
-            }
-          }
-        } else raw
+        else if (strictTtl) raw.filter { case (kBytes, _) => withNativeRef(isLive(cf, kBytes)) }
+        else raw
       val pair = new UnsafeRowPair()
       val rows = visible.map { case (kBytes, vBytes) =>
         pair.withRows(info.keyCodec.decode(kBytes), info.valueCodec.decodeSingle(vBytes))
@@ -1190,95 +1153,81 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       verify(!readOnly, "Cannot modify a read-only state store")
     }
 
-    override def put(key: UnsafeRow, value: UnsafeRow, colFamilyName: String): Unit = synchronized {
-      verifyWritable()
-      require(value != null, "Cannot put a null value")
-      // stateless mode: nothing is ever readable, so persisting (and
-      // snapshotting) the writes would only grow dead checkpoint state
-      if (stateless) return
-      val info = cfInfo(colFamilyName)
-      val kBytes = info.keyCodec.encode(key)
-      if (conf.trackTotalNumberOfRows && db.get(handle(colFamilyName), kBytes) == null) {
-        info.numKeys += 1
+    /** Put `v` under `k` in family `cf`, or delete `k` when `v` is null,
+      * and record the change in this batch's changelog. */
+    private def putOrDelete(cf: String, k: Array[Byte], v: Array[Byte]): Unit = {
+      val h = cfHandle(cf)
+      if (v == null) db.delete(h, k) else db.put(h, k, v)
+      if (conf.changelogEnabled) {
+        if (v == null) changelog.remove(cf, k) else changelog.put(cf, k, v)
       }
-      val vBytes = info.valueCodec.encodeSingle(value)
-      db.put(handle(colFamilyName), kBytes, vBytes)
-      recordPut(colFamilyName, kBytes, vBytes)
-      if (strictTtl) touch(colFamilyName, kBytes)
+    }
+
+    /** The one write of user state, behind every public write and `get`'s
+      * reclaim of an expired key: `v` becomes the value of `k` in `info`'s
+      * family, or `k` is deleted when `v` is null. `prev` is the key's
+      * current value when the caller has already read it (a merge), which
+      * saves the read that keeps `numKeys` exact. Stateless mode persists
+      * nothing: no write is ever readable, so logging and snapshotting it
+      * would only grow dead checkpoint state. Under strict TTL a put stamps
+      * the key's deadline and a delete drops it, byte-keyed so the drop
+      * takes effect (the reference's UnsafeRow-keyed invalidation was a
+      * no-op, SURVEY §4 defect 1). */
+    private def write(info: CfInfo, k: Array[Byte], v: Array[Byte], prev: Array[Byte] = Unread): Unit = {
+      verifyWritable()
+      if (stateless) return
+      if (conf.trackTotalNumberOfRows) {
+        val existed = (if (prev eq Unread) db.get(handle(info.name), k) else prev) != null
+        if (v == null && existed) info.numKeys -= 1
+        else if (v != null && !existed) info.numKeys += 1
+      }
+      putOrDelete(info.name, k, v)
+      if (strictTtl) {
+        if (v == null) putOrDelete(deadlineCfName(info.name), k, null) else touch(info.name, k)
+      }
+    }
+
+    private def multiValuedCf(name: String, op: String): CfInfo = {
+      val info = cfInfo(name)
+      verify(info.multiValued, s"$op on single-valued column family $name")
+      info
+    }
+
+    override def put(key: UnsafeRow, value: UnsafeRow, colFamilyName: String): Unit = synchronized {
+      require(value != null, "Cannot put a null value")
+      val info = cfInfo(colFamilyName)
+      write(info, info.keyCodec.encode(key), info.valueCodec.encodeSingle(value))
     }
 
     override def putList(key: UnsafeRow, values: Array[UnsafeRow], colFamilyName: String): Unit = synchronized {
-      verifyWritable()
-      if (stateless) return
-      val info = cfInfo(colFamilyName)
-      verify(info.multiValued, s"putList on single-valued column family $colFamilyName")
+      val info = multiValuedCf(colFamilyName, "putList")
       require(values != null && values.nonEmpty, "Cannot put an empty value list")
-      val kBytes = info.keyCodec.encode(key)
-      if (conf.trackTotalNumberOfRows && db.get(handle(colFamilyName), kBytes) == null) {
-        info.numKeys += 1
-      }
-      val vBytes = info.valueCodec.encodeFrames(values)
-      db.put(handle(colFamilyName), kBytes, vBytes)
-      recordPut(colFamilyName, kBytes, vBytes)
-      if (strictTtl) touch(colFamilyName, kBytes)
+      write(info, info.keyCodec.encode(key), info.valueCodec.encodeFrames(values))
     }
 
     override def merge(key: UnsafeRow, value: UnsafeRow, colFamilyName: String): Unit = synchronized {
-      verifyWritable()
-      if (stateless) return
-      val info = cfInfo(colFamilyName)
-      verify(info.multiValued, s"merge on single-valued column family $colFamilyName")
+      val info = multiValuedCf(colFamilyName, "merge")
       require(value != null, "Cannot merge a null value")
       val kBytes = info.keyCodec.encode(key)
       val existing = db.get(handle(colFamilyName), kBytes)
-      if (conf.trackTotalNumberOfRows && existing == null) info.numKeys += 1
-      val merged = info.valueCodec.appendFrame(existing, value)
-      db.put(handle(colFamilyName), kBytes, merged)
-      recordPut(colFamilyName, kBytes, merged)
-      if (strictTtl) touch(colFamilyName, kBytes)
+      write(info, kBytes, info.valueCodec.appendFrame(existing, value), existing)
     }
 
     override def mergeList(key: UnsafeRow, values: Array[UnsafeRow], colFamilyName: String): Unit = synchronized {
-      verifyWritable()
-      if (stateless || values.isEmpty) return
-      val info = cfInfo(colFamilyName)
-      verify(info.multiValued, s"mergeList on single-valued column family $colFamilyName")
-      // one read + one concatenated write + one changelog record — N
-      // separate merge() calls would rewrite the growing blob N times
-      val kBytes = info.keyCodec.encode(key)
-      val existing = db.get(handle(colFamilyName), kBytes)
-      if (conf.trackTotalNumberOfRows && existing == null) info.numKeys += 1
-      val frames = info.valueCodec.encodeFrames(values)
-      val merged =
-        if (existing == null) frames
-        else {
-          val out = new Array[Byte](existing.length + frames.length)
-          System.arraycopy(existing, 0, out, 0, existing.length)
-          System.arraycopy(frames, 0, out, existing.length, frames.length)
-          out
-        }
-      db.put(handle(colFamilyName), kBytes, merged)
-      recordPut(colFamilyName, kBytes, merged)
-      if (strictTtl) touch(colFamilyName, kBytes)
+      val info = multiValuedCf(colFamilyName, "mergeList")
+      if (values.nonEmpty) {
+        // one read + one concatenated write + one changelog record — N
+        // separate merge() calls would rewrite the growing blob N times
+        val kBytes = info.keyCodec.encode(key)
+        val existing = db.get(handle(colFamilyName), kBytes)
+        val frames = info.valueCodec.encodeFrames(values)
+        write(info, kBytes, if (existing == null) frames else existing ++ frames, existing)
+      }
     }
 
     override def remove(key: UnsafeRow, colFamilyName: String): Unit = synchronized {
-      verifyWritable()
-      if (stateless) return
       val info = cfInfo(colFamilyName)
-      val kBytes = info.keyCodec.encode(key)
-      if (conf.trackTotalNumberOfRows && db.get(handle(colFamilyName), kBytes) != null) {
-        info.numKeys -= 1
-      }
-      db.delete(handle(colFamilyName), kBytes)
-      recordRemove(colFamilyName, kBytes)
-      // Deadline removed with the key — byte-keyed, so actually effective
-      // (the reference's UnsafeRow-vs-bytes cache invalidation was a no-op,
-      // SURVEY §4 defect 1).
-      if (strictTtl) {
-        db.delete(deadlineHandle(colFamilyName), kBytes)
-        recordRemove(deadlineCfName(colFamilyName), kBytes)
-      }
+      write(info, info.keyCodec.encode(key), null)
     }
 
     // -------------------- lifecycle --------------------
@@ -1287,48 +1236,26 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       verify(state == State.Updating, "Cannot commit already committed or aborted state store")
       verify(!readOnly, "Cannot commit a read-only state store")
       try {
-        // persist per-CF key counts in the meta CF so they ride both the
-        // full snapshot and the changelog delta. Written only when the count
-        // CHANGED since load (or the CF has no persisted entry yet): the
-        // previous commit's equal value is already durable in snapshot and
-        // chain, and unconditionally rewriting it would add a meta record
-        // to the delta of every otherwise-empty batch.
+        // Each CF's count, key schema and registration record go to the
+        // meta CF only when they differ from what is persisted: the equal
+        // value is already durable in snapshot and chain, and rewriting it
+        // would add meta records to the delta of every otherwise-empty
+        // batch. The key schema never differs once written (a changed key
+        // layout is rejected at registerCf); the registration record
+        // follows value-schema evolution.
+        def putMeta(key: String, v: Array[Byte]): Unit = putOrDelete(MetaCf, key.getBytes("UTF-8"), v)
         cfs.values.foreach { i =>
-          if (!persistedCountsMap.get(i.name).contains(i.numKeys)) {
-            val k = i.name.getBytes("UTF-8")
-            val v = beLong(i.numKeys)
-            db.put(metaHandle, k, v)
-            recordPut(MetaCf, k, v)
-            // keep the in-memory view of the persisted counts current (a
-            // commit runs once per store instance today, but the invariant
-            // was implicit — ADVICE r16; any post-commit consumer of the
-            // map must see what is now durable)
-            persistedCountsMap.put(i.name, i.numKeys)
+          if (!persistedNumKeys.get(i.name).contains(i.numKeys)) {
+            putMeta(i.name, beLong(i.numKeys))
+            persistedNumKeys.put(i.name, i.numKeys)
           }
-          // persist each CF's key schema once (write-once: a later change
-          // is rejected at registerCf, so an existing entry never differs)
           if (!persistedKeySchemas.contains(i.name)) {
-            cfKeySchemaJson.get(i.name).foreach { json =>
-              val sk = (KeySchemaMetaPrefix + i.name).getBytes("UTF-8")
-              val sv = json.getBytes("UTF-8")
-              db.put(metaHandle, sk, sv)
-              recordPut(MetaCf, sk, sv)
-            }
+            putMeta(KeySchemaMetaPrefix + i.name, i.keySchemaJson.getBytes("UTF-8"))
+            persistedKeySchemas.put(i.name, i.keySchemaJson)
           }
-          // and its full registration record, so a cold reader can rebuild
-          // the codec without the engine re-registering the family — see
-          // the note on persistedCfRegs. Unlike the key schema this is NOT
-          // write-once: value-schema evolution re-registers the family with
-          // the evolved schema, and the record must track it or cold reads
-          // decode one field short. Written only on change.
-          cfRegJson.get(i.name).foreach { json =>
-            if (!persistedCfRegs.get(i.name).contains(json)) {
-              val rk = (CfRegMetaPrefix + i.name).getBytes("UTF-8")
-              val rv = json.getBytes("UTF-8")
-              db.put(metaHandle, rk, rv)
-              recordPut(MetaCf, rk, rv)
-              persistedCfRegs.put(i.name, json)
-            }
+          if (!persistedCfRegs.get(i.name).contains(i.regJson)) {
+            putMeta(CfRegMetaPrefix + i.name, i.regJson.getBytes("UTF-8"))
+            persistedCfRegs.put(i.name, i.regJson)
           }
         }
         // Commit publishes only the delta; it does not flush memtables.
@@ -1364,18 +1291,15 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     }
 
     /** Full snapshot on the commit path only when unavoidable: changelog
-      * off (the reference's per-commit behavior) or a CF drop. Version 1
-      * is NOT special-cased any more (round 16): a changelog chain replays
-      * from the EMPTY base (version 0) in every recovery path — the chain
-      * walk of [[SnapshotManager.chains]], which the provider and StateFsck
-      * share, ends at version 0 — so
-      * the version-1 full snapshot bought nothing while charging every
-      * streaming query's first batch a per-store Checkpoint+zip+upload
-      * (measured: batch-0 state commit 580-670 ms summed vs ~100 ms steady
-      * at 8 partitions; every fresh-checkpoint query paid it). The periodic
-      * cadence snapshot runs on the maintenance thread instead
-      * ([[snapshotIfDue]]) so steady-state commit latency never pays the
-      * O(state) upload. */
+      * off (the reference's per-commit behavior) or a CF drop. A changelog
+      * chain replays from the EMPTY base (version 0) in every recovery path
+      * — the chain walk of [[SnapshotManager.chains]], which the provider
+      * and StateFsck share, ends at version 0 — so the first version needs
+      * no snapshot either (one would charge a query's first batch a
+      * per-store Checkpoint+zip+upload: 580-670 ms summed vs ~100 ms steady
+      * at 8 partitions). The periodic cadence snapshot runs on the
+      * maintenance thread ([[snapshotIfDue]]) so commit latency never pays
+      * the O(state) upload. */
     private def fullSnapshotDue: Boolean =
       !conf.changelogEnabled || forceFullSnapshot
 
@@ -1507,6 +1431,14 @@ object RocksDbStateStoreProvider {
   private[state] val InternalCfPrefix = "$graft."
   /** Internal CF holding per-CF numKeys (key = cf name, value = 8B BE). */
   private[state] val MetaCf: String = InternalCfPrefix + "meta"
+
+  /** Spark's rule for internal column families: the name starts with `$`
+    * (graft's own `$graft.` families and transformWithState's `$ttl_`,
+    * `$min_`, `$count_`, `$rowCounter_`, `$procTimers…`, `$eventTimers…`). */
+  private[state] def isInternalCf(name: String): Boolean = name.startsWith("$")
+
+  /** The `prev` of a write whose caller did not read the key. */
+  private val Unread = new Array[Byte](0)
 
   /** Meta-CF key prefix under which each column family's key schema JSON is
     * persisted (`ks:<cfName>` → schema), for the restart compatibility check. */

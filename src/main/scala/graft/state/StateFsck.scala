@@ -150,7 +150,7 @@ object StateFsck extends Logging {
       part: Int,
       name: String,
       required: Long,
-      deep: Boolean = false): StoreReport = {
+      deep: Boolean): StoreReport = {
     val mgr = new SnapshotManager(baseDir, hadoopConf)
     val files = mgr.listing()
     val issues = scala.collection.mutable.ArrayBuffer.empty[String]

@@ -1,6 +1,5 @@
 package graft.state
 
-import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.scalatest.funsuite.AnyFunSuite
 
 import StateStoreTestHelper._

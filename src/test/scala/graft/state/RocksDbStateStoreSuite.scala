@@ -360,6 +360,81 @@ class RocksDbStateStoreSuite extends AnyFunSuite {
     } finally provider.close()
   }
 
+  test("a user column family named with a leading $ is rejected, as in Spark's provider") {
+    val provider = newProvider(newCheckpointDir(), useColumnFamilies = true)
+    try {
+      val store = provider.getStore(0, None)
+      intercept[StateStoreCannotCreateColumnFamilyWithReservedChars] {
+        store.createColFamilyIfAbsent("$user", keySchema, valueSchema,
+          NoPrefixKeyStateEncoderSpec(keySchema), useMultipleValuesPerKey = false, isInternal = false)
+      }
+      // the same name is fine for an internal family
+      store.createColFamilyIfAbsent("$user", keySchema, valueSchema,
+        NoPrefixKeyStateEncoderSpec(keySchema), useMultipleValuesPerKey = false, isInternal = true)
+      store.put(keyRow("a"), valueRow(1), "$user")
+      assert(store.get(keyRow("a"), "$user").getInt(0) === 1)
+      store.abort()
+    } finally provider.close()
+  }
+
+  test("under lazy TTL internal families never expire by compaction: create, replay, reopen") {
+    // TtlDB stamps each row with the wall clock at write time and drops it
+    // at compaction once older than the family's TTL; one second is the
+    // smallest TTL, so rows written more than two seconds ago are expired
+    // for any family opened with it.
+    val conf = storeConf(Map(
+      RocksDbConf.STATE_EXPIRY_SECS -> "1", RocksDbConf.STRICT_EXPIRE -> "false"))
+    val internal = "$rowCounter_x"
+    def compactedRows(o: RocksDbStateStoreProvider#OpenDb, cf: String): Int = {
+      o.db.compactRange(o.handles(cf))
+      val it = o.db.newIterator(o.handles(cf))
+      try {
+        it.seekToFirst()
+        var n = 0
+        while (it.isValid) { n += 1; it.next() }
+        n
+      } finally it.close()
+    }
+    def closeDb(o: RocksDbStateStoreProvider#OpenDb): Unit = {
+      o.handles.values.foreach(_.close())
+      o.db.close()
+    }
+    val ckpt = newCheckpointDir()
+
+    // created by this session
+    val p1 = newProvider(ckpt, conf = conf, useColumnFamilies = true)
+    try {
+      assert(p1.compactionTtlFor(internal) === 0)
+      assert(p1.compactionTtlFor("user") === 1)
+      assert(p1.compactionTtlFor(StateStore.DEFAULT_COL_FAMILY_NAME) === 1)
+      val s = p1.getStore(0, None).asInstanceOf[p1.RocksDbStateStore]
+      Seq(internal -> true, "user" -> false).foreach { case (cf, isInternal) =>
+        s.createColFamilyIfAbsent(cf, keySchema, valueSchema,
+          NoPrefixKeyStateEncoderSpec(keySchema), useMultipleValuesPerKey = false, isInternal)
+        s.put(keyRow("a"), valueRow(1), cf)
+      }
+      s.commit()
+      val o = s.detachDb().get
+      try {
+        Thread.sleep(2200)
+        assert(compactedRows(o, internal) === 1)
+        assert(compactedRows(o, "user") === 0)
+      } finally closeDb(o)
+    } finally p1.close()
+
+    // replayed from the delta by a fresh provider, then reopened
+    val p2 = newProvider(ckpt, conf = conf, useColumnFamilies = true)
+    try {
+      val s = p2.getStore(1, None).asInstanceOf[p2.RocksDbStateStore]
+      val o = s.detachDb().get
+      try {
+        Thread.sleep(2200)
+        assert(compactedRows(o, internal) === 1)
+        assert(compactedRows(o, "user") === 0)
+      } finally closeDb(o)
+    } finally p2.close()
+  }
+
   test("getStore rejects negative versions and commit is idempotent-guarded") {
     val ckpt = newCheckpointDir()
     val provider = newProvider(ckpt)

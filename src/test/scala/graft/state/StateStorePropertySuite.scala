@@ -2,7 +2,7 @@ package graft.state
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.execution.streaming.state.{ReadStateStore, StateStore}
+import org.apache.spark.sql.execution.streaming.state.{ReadStateStore, StateStore, StateStoreConf}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -50,6 +50,7 @@ class StateStorePropertySuite extends AnyFunSuite {
         case CommitBatch =>
           version = store.commit()
           assert(readAll(store) === model.toMap) // post-commit reads stay valid
+          assert(store.metrics.numKeys === model.size)
           store = provider.getStore(version, None)
       }
       // point lookups and full scan agree with the model
@@ -58,10 +59,21 @@ class StateStorePropertySuite extends AnyFunSuite {
       }
       assert(readAll(store) === model.toMap)
       version = store.commit()
+      assert(store.metrics.numKeys === model.size)
     } finally provider.close()
 
     // durability: a fresh provider recovers the final state from durable files
     assert(getData(ckpt, version, conf = conf) === model.toMap)
+    assert(recoveredNumKeys(ckpt, version, conf) === model.size)
+  }
+
+  /** The key count a fresh provider recovers for `version`. */
+  private def recoveredNumKeys(ckpt: String, version: Long, conf: StateStoreConf): Long = {
+    val provider = newProvider(ckpt, conf = conf)
+    try {
+      val store = provider.getStore(version, None)
+      try store.metrics.numKeys finally store.abort()
+    } finally provider.close()
   }
 
   test("store == model Map under arbitrary op sequences (changelog mode)") {
@@ -123,6 +135,7 @@ class StateStorePropertySuite extends AnyFunSuite {
         case MCommitBatch =>
           version = store.commit()
           assert(readLists(store) === model.toMap) // post-commit reads stay valid
+          assert(store.metrics.numKeys === model.size)
           store = provider.getStore(version, None)
       }
       assert(readLists(store) === model.toMap)
@@ -132,14 +145,17 @@ class StateStorePropertySuite extends AnyFunSuite {
         assert(model(keyStr(p.key)).head === valueInt(p.value))
       } finally it.close()
       version = store.commit()
+      assert(store.metrics.numKeys === model.size)
     } finally provider.close()
 
     // durability: a fresh provider recovers every list from durable files
     val p2 = newProvider(ckpt, conf = conf, useMultipleValuesPerKey = true)
     try {
       val s2 = p2.getStore(version, None)
-      try assert(readLists(s2) === model.toMap)
-      finally s2.abort()
+      try {
+        assert(readLists(s2) === model.toMap)
+        assert(s2.metrics.numKeys === model.size)
+      } finally s2.abort()
     } finally p2.close()
   }
 

@@ -1,6 +1,5 @@
 package graft.state
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -33,17 +32,6 @@ class StreamingConformanceSuite extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def ckpt(): String = graft.Staging.tempDir("graft-stream-ckpt-").toString
-
-  private def runToMemorySink(df: DataFrame, name: String, mode: OutputMode): DataFrame = {
-    val q = df.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(mode)
-      .option("checkpointLocation", ckpt())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
-  }
 
   test("checkpoint format v2 (state store checkpoint IDs): run, restart, resume") {
     import spark.implicits._
@@ -471,7 +459,7 @@ class StreamingConformanceSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   test("transformWithState (arbitrary state v2): ValueState + ListState") {
     import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState, ListState}
-    import org.apache.spark.sql.{Encoder, Encoders}
+    import org.apache.spark.sql.Encoders
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
